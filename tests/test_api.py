@@ -228,3 +228,32 @@ def test_empty_engine_operations(engine):
         engine.get_node("nope")
     with pytest.raises(KeyError):
         engine.graph_search("nope")
+
+
+def test_engine_seeded_from_source_frames_accepts_writes(spark, sf_dir):
+    """The adapters' frames seed the facade as they are: ``nodes_df``
+    also carries ``lang``/``source``/``n_chars``, which the facade
+    projects away on entry so its upserts still line up."""
+    from vector_graph_native_database__spark.sources import (
+        edges_df,
+        embeddings_df,
+        nodes_df,
+    )
+
+    eng = VectorGraphEngine(
+        spark,
+        nodes=nodes_df(spark, sf_dir),
+        embeddings=embeddings_df(spark, sf_dir),
+        edges=edges_df(spark, sf_dir),
+    )
+    assert eng.nodes.columns == ["id", "text", "metadata"]
+    before = eng.stats()
+    nid = eng.create_node("seeded engine write", {"lang": "en"}, node_id="s-1")
+    got = eng.get_node(nid)
+    assert got["text"] == "seeded engine write"
+    assert got["metadata"] == {"lang": "en"}
+    assert got["has_embedding"] is True
+    eng.create_edge(nid, "0", "cites", 2.0, edge_id="s-e")
+    after = eng.stats()
+    assert after["total_nodes"] == before["total_nodes"] + 1
+    assert after["total_edges"] == before["total_edges"] + 1

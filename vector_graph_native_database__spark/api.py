@@ -10,10 +10,18 @@ SQLite and every operation is a distributed plan.
 
 State model: the engine holds the current ``nodes`` / ``embeddings``
 / ``edges`` DataFrames and mutations REASSIGN them (immutable
-snapshots, the DataFrame idiom). Single-row convenience methods wrap
-the batch operators in ``operators/crud.py``; batch ingestion should
-call those operators directly, and a durable deployment writes each
-new state (or a Delta MERGE) instead of holding it in memory.
+snapshots, the DataFrame idiom). Seed frames are projected to the
+facade schemas on entry, so wider frames such as ``sources.nodes_df``
+(which also carries ``lang``/``source``/``n_chars``) are accepted.
+Single-row convenience methods wrap the batch operators in
+``operators/crud.py``; batch ingestion should call those operators
+directly, and a durable deployment writes each new state (or a Delta
+MERGE) instead of holding it in memory.
+
+Every request frame a route builds from its arguments — the mutation
+batch, the delete key, the query vector — is a JVM local relation
+(``session.local_frame``): it is scanned on the driver, so a route
+runs no Python-worker tasks for its own inputs.
 """
 
 from __future__ import annotations
@@ -30,6 +38,7 @@ from .operators.bm25 import bm25_topk
 from .operators.graph import graph_search as _graph_search
 from .operators.hybrid import hybrid_search as _hybrid_search
 from .operators.vector_search import vector_topk
+from .session import local_frame
 
 NODES_SCHEMA = "id string, text string, metadata map<string,string>"
 EMB_SCHEMA = "node_id string, vector array<double>, dim int"
@@ -49,23 +58,22 @@ class VectorGraphEngine:
         edges: DataFrame | None = None,
     ):
         self.spark = spark
-        self.nodes = (
-            nodes
-            if nodes is not None
-            else spark.createDataFrame([], NODES_SCHEMA)
-        )
-        self.embeddings = (
-            embeddings
-            if embeddings is not None
-            else spark.createDataFrame([], EMB_SCHEMA)
-        )
-        self.edges = (
-            edges
-            if edges is not None
-            else spark.createDataFrame([], EDGES_SCHEMA)
-        )
+        self.nodes = self._conform(nodes, NODES_SCHEMA)
+        self.embeddings = self._conform(embeddings, EMB_SCHEMA)
+        self.edges = self._conform(edges, EDGES_SCHEMA)
 
     # -- helpers -----------------------------------------------------------
+
+    def _conform(self, df: DataFrame | None, ddl: str) -> DataFrame:
+        """``df`` projected (and cast) to the facade schema ``ddl``, or
+        an empty table. Extra columns would break the upserts'
+        union with the single-row batches."""
+        empty = local_frame(self.spark, [], ddl)
+        if df is None:
+            return empty
+        return df.select(
+            *(F.col(f.name).cast(f.dataType) for f in empty.schema)
+        )
 
     @staticmethod
     def _commit(df: DataFrame) -> DataFrame:
@@ -82,21 +90,23 @@ class VectorGraphEngine:
     def _encode(self, text: str) -> list[float]:
         """Hash-embed one text (the reference's auto-embedding)."""
         row = embed_hash_df(
-            self.spark.createDataFrame([("q", text)], "id string, text string")
+            local_frame(self.spark, [("q", text)], "id string, text string")
         ).collect()[0]
         return list(row["vector"])
 
     def _query_frame(self, text: str) -> DataFrame:
-        return self.spark.createDataFrame(
-            [(self._encode(text),)], "qvec array<double>"
+        return local_frame(
+            self.spark, [(self._encode(text),)], "qvec array<double>"
         )
 
     def _node_exists(self, node_id: str) -> bool:
         return bool(self.nodes.filter(F.col("id") == node_id).take(1))
 
     def _put_embedding(self, node_id: str, vector: list[float]) -> None:
-        batch = self.spark.createDataFrame(
-            [(node_id, [float(v) for v in vector], len(vector))], EMB_SCHEMA
+        batch = local_frame(
+            self.spark,
+            [(node_id, [float(v) for v in vector], len(vector))],
+            EMB_SCHEMA,
         )
         self.embeddings = self._commit(
             crud.upsert(self.embeddings, batch, "node_id")
@@ -120,8 +130,8 @@ class VectorGraphEngine:
         reference's collision-prone timestamp ids).
         """
         nid = node_id if node_id is not None else f"node-{uuid.uuid4()}"
-        batch = self.spark.createDataFrame(
-            [(nid, text, dict(metadata or {}))], NODES_SCHEMA
+        batch = local_frame(
+            self.spark, [(nid, text, dict(metadata or {}))], NODES_SCHEMA
         )
         self.nodes = self._commit(crud.upsert(self.nodes, batch, "id"))
         if embedding is not None:
@@ -173,7 +183,8 @@ class VectorGraphEngine:
         """
         if not self._node_exists(node_id):
             raise KeyError(node_id)
-        changes = self.spark.createDataFrame(
+        changes = local_frame(
+            self.spark,
             [(node_id, text, dict(metadata) if metadata is not None else None)],
             NODES_SCHEMA,
         )
@@ -195,7 +206,7 @@ class VectorGraphEngine:
         """DELETE /nodes/{id} — cascade (embedding + incident edges)."""
         if not self._node_exists(node_id):
             raise KeyError(node_id)
-        d = self.spark.createDataFrame([(node_id,)], "id string")
+        d = local_frame(self.spark, [(node_id,)], "id string")
         n2, emb2, e2 = crud.node_delete_cascade(
             self.nodes, self.embeddings, self.edges, d
         )
@@ -218,8 +229,10 @@ class VectorGraphEngine:
             if not self._node_exists(endpoint):
                 raise KeyError(endpoint)
         eid = edge_id if edge_id is not None else f"edge-{uuid.uuid4()}"
-        batch = self.spark.createDataFrame(
-            [(eid, src, dst, edge_type, float(weight))], EDGES_SCHEMA
+        batch = local_frame(
+            self.spark,
+            [(eid, src, dst, edge_type, float(weight))],
+            EDGES_SCHEMA,
         )
         self.edges = self._commit(
             crud.edge_insert_validated(self.edges, self.nodes, batch)
@@ -245,7 +258,8 @@ class VectorGraphEngine:
         """PUT /edges/{id} — partial update of type/weight."""
         if not self.edges.filter(F.col("id") == edge_id).take(1):
             raise KeyError(edge_id)
-        changes = self.spark.createDataFrame(
+        changes = local_frame(
+            self.spark,
             [(edge_id, edge_type,
               float(weight) if weight is not None else None)],
             "id string, type string, weight double",
@@ -260,7 +274,7 @@ class VectorGraphEngine:
         self.edges = self._commit(
             crud.edge_delete(
                 self.edges,
-                self.spark.createDataFrame([(edge_id,)], "id string"),
+                local_frame(self.spark, [(edge_id,)], "id string"),
             )
         )
 

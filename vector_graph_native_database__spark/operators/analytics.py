@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def degrees(edges: DataFrame) -> DataFrame:
     """Per node: out_degree, in_degree, degree → one full-outer merge.
@@ -353,9 +355,9 @@ def sssp_k(
         e = e.filter(F.col("type") == edge_type)
     e = e.select("src", "dst", F.coalesce("weight", F.lit(0.0)).alias("weight"))
 
-    best = spark.createDataFrame(
-        [(start_id, 0.0)], "id string, min_weight double"
-    ).localCheckpoint(eager=True)
+    best = local_frame(
+        spark, [(start_id, 0.0)], "id string, min_weight double"
+    )
     frontier = best
 
     for _ in range(max_hops):

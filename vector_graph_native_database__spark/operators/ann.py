@@ -332,9 +332,10 @@ def ivf_centroids(
         # ONE cidx-keyed shuffle — the posexplode → per-(cidx, pos)
         # mean → re-collect chain cost two exchanges and a dim×
         # row blow-up per round (optimization round 10, guide §2.3).
-        # Same doubles per component (each mean sums the same values;
-        # the 6dp rounding absorbs summation-order differences, the
-        # property the DuckDB oracle replay already relies on).
+        # Equal within 6dp rounding per component (each mean sums the
+        # same values in another order; the rounding absorbs that
+        # unless a mean lies within float error of a .5e-6 boundary —
+        # the tolerance the DuckDB oracle replay already relies on).
         centroids = (
             assign.join(e, "id")
             .groupBy("cidx")
@@ -715,9 +716,9 @@ def pq_train(
             .agg(F.min_by("cidx", F.struct("dist", "cidx")).alias("cidx"))
         )
         # per-component aggregate means over one (sm, cidx)-keyed
-        # shuffle — same reshape as ivf_centroids (guide §2.3); the
-        # 6dp rounding absorbs summation-order differences exactly as
-        # the oracle replay already assumes.
+        # shuffle — same reshape as ivf_centroids (guide §2.3); equal
+        # within 6dp rounding, the tolerance the oracle replay already
+        # assumes.
         sub = dim // m
         centroids = (
             assign.join(e, ["id", "sm"])

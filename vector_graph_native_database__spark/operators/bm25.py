@@ -21,19 +21,34 @@ Unlike the reference's rebuild-the-whole-index-per-write, these
 aggregates are recomputed lazily per query batch — at 100 TB they can
 be persisted and incrementally maintained, but semantics stay
 identical.
+
+Where each input comes from: the query's terms are a JVM local
+relation built on the driver (``session.local_frame``). The scalar
+row comes from the stats the caller passes: the disk-staged index
+(:func:`bm25_index_stage`) computes it once at build time and serves
+it as a local relation, so a query over it runs no corpus-wide
+aggregate; the unstaged paths (:func:`corpus_stats`,
+:func:`staged_index`, plain triples) keep the lazy in-plan
+:func:`_globals_df`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import json
+import os
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.textfn import tokenize
+from ..session import local_frame
 
 K1 = 1.5
 B = 0.75
 EPSILON = 0.25
+# staged-artifact params: bump when the staged layout changes
+_STAGE_PARAMS = "tok-v3"
 
 
 def corpus_stats(
@@ -133,8 +148,10 @@ def staged_posting_frame(spark, nodes: DataFrame, cache_key: str) -> DataFrame:
     same files instead of re-tokenizing the corpus per query. The
     doc-length and document-frequency aggregates are staged alongside
     (computed FROM the written posting, so the artifacts are
-    consistent by construction); :func:`bm25_index_stage` returns all
-    three.
+    consistent by construction), and so is the index-constant scalar
+    row :func:`_globals_df` computes (``globals.json``, observed as
+    metrics of the doclen/df writes, so it costs no extra job);
+    :func:`bm25_index_stage` serves all of them.
 
     Postings are row-local per document (tok strings and tf longs
     roundtrip parquet exactly), so a per-id subset serves from the
@@ -145,12 +162,10 @@ def staged_posting_frame(spark, nodes: DataFrame, cache_key: str) -> DataFrame:
     honest post-filter collection statistics (this is how the
     deduped hard-negative miner shares the build).
     """
-    import os
-
     from .staging import staged_index_dir, write_staged
 
     final = staged_index_dir(
-        "bm25_index", cache_key, "tok-v2", salt_file="documents.parquet"
+        "bm25_index", cache_key, _STAGE_PARAMS, salt_file="documents.parquet"
     )
 
     def _write(tmp: str) -> None:
@@ -164,8 +179,29 @@ def staged_posting_frame(spark, nodes: DataFrame, cache_key: str) -> DataFrame:
         ).write.parquet(os.path.join(tmp, "posting"))
         p = spark.read.parquet(os.path.join(tmp, "posting"))
         _, doclen, df_ = stats_from_posting(p)
-        doclen.write.parquet(os.path.join(tmp, "doclen"))
-        df_.write.parquet(os.path.join(tmp, "df"))
+        # the scalar row rides the two writes as observed metrics —
+        # no extra job; N must be known before the idf average
+        docs, vocab = Observation(), Observation()
+        doclen.observe(
+            docs, F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
+        ).write.parquet(os.path.join(tmp, "doclen"))
+        n = docs.get["n"]
+        raw_idf = F.log(F.lit(n) - F.col("df") + 0.5) - F.log(
+            F.col("df") + 0.5
+        )
+        df_.observe(
+            vocab,
+            F.count(F.lit(1)).alias("terms"),
+            F.avg(raw_idf).alias("avg_idf"),
+        ).write.parquet(os.path.join(tmp, "df"))
+        # an empty vocabulary has no scalar row, as with _globals_df
+        rows = (
+            [(n, docs.get["avgdl"], vocab.get["avg_idf"])]
+            if vocab.get["terms"]
+            else []
+        )
+        with open(os.path.join(tmp, "globals.json"), "w") as fh:
+            json.dump(rows, fh)
 
     write_staged(final, _write)
     return spark.read.parquet(os.path.join(final, "posting"))
@@ -173,30 +209,40 @@ def staged_posting_frame(spark, nodes: DataFrame, cache_key: str) -> DataFrame:
 
 def bm25_index_stage(
     spark, nodes: DataFrame, cache_key: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """→ (tf, doclen, df_) served entirely from the staged posting
-    artifact (:func:`staged_posting_frame`): the full-corpus serving
-    path where a query pays ONLY the |q|-row idf derivation plus the
-    scoring joins — zero tokenize, zero corpus-wide aggregation. The
-    doclen/df aggregates read their own staged parquet (doc-count and
-    vocabulary sized — small), not recomputes over the posting. A
-    100 TB deployment maintains these as real tables next to the
-    corpus (streaming/ingest.py proves the incrementally-maintained
-    stats equal the recompute); scoring is value-identical either way
-    because longs and tok strings roundtrip parquet bit-exactly.
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """→ (tf, doclen, df_, globals_df) served entirely from the staged
+    posting artifact (:func:`staged_posting_frame`): the full-corpus
+    serving path where a query pays ONLY the |q|-row idf derivation
+    plus the scoring joins — zero tokenize, zero corpus-wide
+    aggregation. The doclen/df aggregates read their own staged
+    parquet (doc-count and vocabulary sized — small), not recomputes
+    over the posting. The scalar row (N, avgdl, avg raw idf) was
+    computed once at build time and is read from ``globals.json``
+    into a local relation (``globals_df``, the optional fourth frame
+    of a stats tuple): no per-query ``avg(dl)``/``count`` over doclen
+    or idf average over df, and every query over one index sees the
+    same doubles (a recompute can move ``__avg_idf`` by an ulp with
+    the partition summation order). A 100 TB deployment maintains these as real
+    tables next to the corpus (streaming/ingest.py proves the
+    incrementally-maintained stats equal the recompute); scoring is
+    value-identical either way because longs and tok strings
+    roundtrip parquet bit-exactly.
     """
-    import os
-
     from .staging import staged_index_dir
 
     posting = staged_posting_frame(spark, nodes, cache_key)
     final = staged_index_dir(
-        "bm25_index", cache_key, "tok-v2", salt_file="documents.parquet"
+        "bm25_index", cache_key, _STAGE_PARAMS, salt_file="documents.parquet"
     )
     tf = posting.filter(F.col("tok").isNotNull())
     doclen = spark.read.parquet(os.path.join(final, "doclen"))
     df_ = spark.read.parquet(os.path.join(final, "df"))
-    return tf, doclen, df_
+    with open(os.path.join(final, "globals.json")) as fh:
+        rows = [tuple(r) for r in json.load(fh)]
+    globals_df = local_frame(
+        spark, rows, "__n_docs long, __avgdl double, __avg_idf double"
+    )
+    return tf, doclen, df_, globals_df
 
 
 def _globals_df(doclen: DataFrame, df_: DataFrame) -> DataFrame:
@@ -204,7 +250,10 @@ def _globals_df(doclen: DataFrame, df_: DataFrame) -> DataFrame:
 
     ``__avg_idf`` is the mean RAW Okapi idf over the whole vocabulary
     (the flooring base rank_bm25 uses); computing it here keeps the
-    whole plan lazy — no eager ``count()`` job on the driver.
+    whole plan lazy — no eager ``count()`` job on the driver. This is
+    the scalar source of the unstaged paths; :func:`bm25_index_stage`
+    computes the same row once at build time instead (see
+    :func:`_index_parts`).
     """
     nd = doclen.agg(
         F.count("*").alias("__n_docs"), F.avg("dl").alias("__avgdl")
@@ -219,19 +268,29 @@ def _globals_df(doclen: DataFrame, df_: DataFrame) -> DataFrame:
     )
 
 
+def _index_parts(
+    nodes: DataFrame, stats: tuple[DataFrame, ...] | None
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """→ (tf, doclen, df_, globals_df): the scalar row the stats carry
+    (:func:`bm25_index_stage`), else the lazy :func:`_globals_df`."""
+    tf, doclen, df_, *staged = (
+        stats if stats is not None else corpus_stats(nodes)
+    )
+    return tf, doclen, df_, staged[0] if staged else _globals_df(doclen, df_)
+
+
 def query_terms_df(nodes: DataFrame, query_text: str) -> DataFrame:
     """Tokenized query with multiplicity → (tok, qcnt), as a plan node.
 
     Counted driver-side (a query is a handful of tokens) so the plan
-    gets a local relation, not a shuffle stage.
+    gets a JVM local relation (``session.local_frame``), not a shuffle
+    stage or a Python-worker scan.
     """
     from collections import Counter
 
     spark = nodes.sparkSession
     counts = Counter(query_text.lower().split())
-    return spark.createDataFrame(
-        list(counts.items()), "tok string, qcnt long"
-    )
+    return local_frame(spark, counts.items(), "tok string, qcnt long")
 
 
 def _query_idf(
@@ -263,15 +322,13 @@ def _query_idf(
 def _contrib(
     nodes: DataFrame,
     query_text: str,
-    stats: tuple[DataFrame, DataFrame, DataFrame] | None = None,
+    stats: tuple[DataFrame, ...] | None = None,
 ) -> DataFrame:
     """Per-doc summed BM25 contributions → (id, score); docs with no
     matching term are absent (callers decide between outer-join-zero
     and positive-filter semantics)."""
-    tf, doclen, df_ = stats if stats is not None else corpus_stats(nodes)
-    qidf = _query_idf(
-        query_terms_df(nodes, query_text), df_, _globals_df(doclen, df_)
-    )
+    tf, doclen, df_, globals_df = _index_parts(nodes, stats)
+    qidf = _query_idf(query_terms_df(nodes, query_text), df_, globals_df)
     # The query's terms are known driver-side, so prune the posting
     # frame with a literal In(tok, …) BEFORE the scoring join — rows
     # outside the query's vocabulary can't contribute (the qidf join
@@ -303,7 +360,7 @@ def _contrib(
 def bm25_scores(
     nodes: DataFrame,
     query_text: str,
-    stats: tuple[DataFrame, DataFrame, DataFrame] | None = None,
+    stats: tuple[DataFrame, ...] | None = None,
 ) -> DataFrame:
     """Okapi BM25 score of every document → (id, score).
 
@@ -323,7 +380,7 @@ def bm25_topk(
     query_text: str,
     top_k: int = 10,
     round_scores: int | None = None,
-    stats: tuple[DataFrame, DataFrame, DataFrame] | None = None,
+    stats: tuple[DataFrame, ...] | None = None,
 ) -> DataFrame:
     """Top-k by BM25, zero/negative scores dropped (``app.py:486``).
 
@@ -397,7 +454,7 @@ def multi_query_terms_df(
 
     Counted driver-side (each query is a handful of tokens; the
     batch is user-request-sized, not data-sized) so the plan gets
-    one small local relation for the whole batch.
+    one small JVM local relation for the whole batch.
     """
     from collections import Counter
 
@@ -405,8 +462,8 @@ def multi_query_terms_df(
     for qid, text in queries.items():
         for tok, cnt in Counter(text.lower().split()).items():
             rows.append((qid, tok, cnt))
-    return nodes.sparkSession.createDataFrame(
-        rows, "qid string, tok string, qcnt long"
+    return local_frame(
+        nodes.sparkSession, rows, "qid string, tok string, qcnt long"
     )
 
 
@@ -415,7 +472,7 @@ def bm25_topk_multi(
     queries: dict[str, str],
     top_k: int = 10,
     round_scores: int | None = None,
-    stats: tuple[DataFrame, DataFrame, DataFrame] | None = None,
+    stats: tuple[DataFrame, ...] | None = None,
 ) -> DataFrame:
     """Top-k BM25 for a BATCH of queries in ONE corpus pass →
     (qid, id, score): the deployment shape for query logs / eval
@@ -432,11 +489,11 @@ def bm25_topk_multi(
     """
     from pyspark.sql.window import Window
 
-    tf, doclen, df_ = stats if stats is not None else corpus_stats(nodes)
+    tf, doclen, df_, globals_df = _index_parts(nodes, stats)
     q = multi_query_terms_df(nodes, queries)
     qidf = (
         df_.join(F.broadcast(q), "tok")
-        .crossJoin(F.broadcast(_globals_df(doclen, df_)))
+        .crossJoin(F.broadcast(globals_df))
         .withColumn(
             "raw_idf",
             F.log(F.col("__n_docs") - F.col("df") + 0.5)

@@ -30,12 +30,21 @@ against the reached set, ``localCheckpoint`` to cut lineage. This is
 textbook level-synchronous Pregel expressed as joins; at cluster
 scale each level is one co-partitioned shuffle, and the reached set
 stays distributed (never collected to the driver).
+
+The start frame (the level-0 reached set) is a JVM local relation
+built on the driver (``session.local_frame``): it has no lineage to
+cut, so it is not checkpointed, and it runs no Python-worker tasks.
+The per-level checkpoints stay — they hand the planner the frontier's
+real size, which keeps the next level's join a broadcast; one lazy
+plan over all levels turns those joins into shuffles and is slower.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import local_frame
 
 
 def graph_bfs(
@@ -56,9 +65,11 @@ def graph_bfs(
         e = e.filter(F.col("type") == edge_type)
     e = e.select("src", "dst", F.coalesce("weight", F.lit(0.0)).alias("weight"))
 
-    reached = spark.createDataFrame(
-        [(start_id, 0, 0.0)], "id string, distance int, path_weight double"
-    ).localCheckpoint(eager=True)
+    reached = local_frame(
+        spark,
+        [(start_id, 0, 0.0)],
+        "id string, distance int, path_weight double",
+    )
     frontier = reached
 
     for level in range(1, depth + 1):
@@ -174,10 +185,11 @@ def graph_bfs_multi(
         "src", "dst", F.coalesce("weight", F.lit(0.0)).alias("weight")
     )
 
-    reached = spark.createDataFrame(
+    reached = local_frame(
+        spark,
         [(s, s, 0, 0.0) for s in start_ids],
         "qid string, id string, distance int, path_weight double",
-    ).localCheckpoint(eager=True)
+    )
     frontier = reached
 
     for level in range(1, depth + 1):

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from ..functions import l2_norm
 from ..operators.vector_search import metadata_predicate
+from ..session import local_frame
 from ..sources import load_table
 from .common import ORACLE_PRELUDE, model, scratch_dir
 
@@ -30,7 +31,8 @@ def q_stats_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference /stats (``app.py:929-940``)."""
     nodes, emb, edges = model(spark, sf_dir)
     embedded = nodes.join(emb, nodes["id"] == emb["node_id"], "left_semi").count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(nodes.count(), embedded, edges.count())],
         "total_nodes long, nodes_with_embeddings long, total_edges long",
     )

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import crud
+from ..session import local_frame
 from ..sources import embeddings_df
 from .common import ORACLE_PRELUDE, model
 
@@ -19,7 +20,8 @@ def q_node_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Upsert: replace node '0', insert 'n-a'/'n-b' (create=upsert,
     app.py:131-134)."""
     nodes, _, _ = model(spark, sf_dir)
-    batch = spark.createDataFrame(
+    batch = local_frame(
+        spark,
         [
             ("0", "replaced text zero", "en", "src0"),
             ("n-a", "brand new node a", "de", "src1"),
@@ -35,7 +37,8 @@ def q_node_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_node_update_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partial update: NULL keeps the old value (app.py:139-161)."""
     nodes, _, _ = model(spark, sf_dir)
-    changes = spark.createDataFrame(
+    changes = local_frame(
+        spark,
         [("1", "updated text one", None), ("2", None, "zz")],
         "id string, text string, lang string",
     )
@@ -71,7 +74,8 @@ def q_edge_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append with FK validation: rows with a missing endpoint are
     rejected (app.py:843-846)."""
     nodes, _, edges = model(spark, sf_dir)
-    batch = spark.createDataFrame(
+    batch = local_frame(
+        spark,
         [
             ("x-1", "3", "5", "related", 1.5),
             ("x-2", "3", "999999", "related", 1.0),  # missing dst
@@ -85,7 +89,8 @@ def q_edge_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_edge_update_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Update weight keep type / update type keep weight (app.py:288-308)."""
     _, _, edges = model(spark, sf_dir)
-    changes = spark.createDataFrame(
+    changes = local_frame(
+        spark,
         [("e-0-1", None, 9.9), ("e-1-2", "revised", None)],
         "id string, type string, weight double",
     )
@@ -96,7 +101,7 @@ def q_node_delete_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delete node '1'; witness = remaining rows among ids 0/1/2 and
     their incident edges, tagged by kind (proves all three cascades)."""
     nodes, emb, edges = model(spark, sf_dir)
-    dels = spark.createDataFrame([("1",)], "id string")
+    dels = local_frame(spark, [("1",)], "id string")
     n2, e2, ed2 = crud.node_delete_cascade(nodes, emb, edges, dels)
     probe = ["0", "1", "2"]
     return (
@@ -118,7 +123,7 @@ def q_node_delete_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_edge_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, _, edges = model(spark, sf_dir)
-    dels = spark.createDataFrame([("e-0-1",), ("e-2-3",)], "id string")
+    dels = local_frame(spark, [("e-0-1",), ("e-2-3",)], "id string")
     return crud.edge_delete(edges, dels)
 
 

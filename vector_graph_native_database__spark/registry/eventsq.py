@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources import load_table
 from .common import ORACLE_PRELUDE, replay_state_parts, scratch_dir
 from ..streaming.windows import session_agg, sliding_agg, tumbling_agg
@@ -391,12 +392,17 @@ def q_ann_ivf_streamed_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Overlap batch i+1's parquet append with batch i's replay
     # (guide §2.6 — the tier-report thread-pool idiom): the replay's
     # awaitTermination used to serialize three write→replay rounds.
-    # The final state is unchanged whichever replay's file listing
-    # picks a file up: seqs are monotone across batches and the
-    # maintenance reduce is max_by(seq) within batch + latest-wins
-    # upsert across batches, so early/late-landing rows commute; the
-    # checkpoint guarantees each file is processed exactly once, and
-    # the oracle pins the output.
+    # Invariant: the WRITES stay serialized (one worker; write i+1 is
+    # submitted only after write i returned), so batch i is fully
+    # visible before any batch i+1 file lands. Whichever replay's
+    # listing picks a file up, a node's lower-seq row is therefore
+    # never applied in a later micro-batch than its higher-seq row:
+    # max_by(seq) settles rows that share a micro-batch, and the
+    # cross-batch upsert is last-APPLIED-wins (the persisted state
+    # drops seq) — not a highest-seq-wins merge. More workers or
+    # reordered submits would let a stale vector overwrite a newer
+    # one. The checkpoint processes each file exactly once, and the
+    # oracle pins the output.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=1) as pool:
@@ -2111,9 +2117,7 @@ def q_events_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("x").alias("s1"),
         F.sum(F.col("x") * F.col("x")).alias("s2"),
     )
-    lags = spark.createDataFrame(
-        [(k,) for k in AUTOCORR_LAGS], "k long"
-    )
+    lags = local_frame(spark, [(k,) for k in AUTOCORR_LAGS], "k long")
     a = s.select(F.col("t"), F.col("x").alias("xa"))
     b = s.select(F.col("t").alias("tb"), F.col("x").alias("xb"))
     pairs = (

@@ -6,13 +6,17 @@ skew-join splitting, shuffle coalescing), Arrow for the few
 ``mapInPandas`` extension points, and a shuffle-partition count that
 callers override per deployment (32 for the local harness; thousands
 on a 100 TB cluster).
+
+It also holds :func:`local_frame`, the one way the engine turns
+request-sized Python values into a DataFrame.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -44,3 +48,34 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], ddl: str
+) -> DataFrame:
+    """Request-sized Python rows → a DataFrame over a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(list, ddl)`` parallelizes the rows into a
+    Python RDD: every scan of the frame runs Python-worker tasks and
+    the planner sees no size statistics for it. Handing the rows over
+    as a ``pyarrow.Table`` instead makes Spark keep them in the plan as
+    a local relation — scanned on the driver, broadcast-sized by
+    construction, no lineage to cut. Values convert through the
+    schema's Arrow types, so ``None`` cells and zero rows behave as
+    with ``createDataFrame``. Meant for query terms, start vertices,
+    mutation batches and literals — never for data-sized inputs.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = [
+        pa.array([row[i] for row in rows], type=field.type)
+        for i, field in enumerate(arrow)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, schema=arrow), schema
+    )
