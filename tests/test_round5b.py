@@ -424,45 +424,6 @@ def test_assortativity_star_is_minus_one_cycle_is_null(spark):
     assert r2["assortativity"] is None  # zero degree variance
 
 
-def test_markov_maintenance_counts_boundary_transitions(spark, tmp_path):
-    import datetime as dt
-    import os
-
-    from vector_graph_native_database__spark.streaming.ingest import (
-        incremental_markov_maintenance,
-        read_state,
-    )
-
-    t0 = dt.datetime(2026, 1, 1)
-    schema = "event_id long, ts timestamp, user_id long, event_type string"
-    src = str(tmp_path / "src")
-    counts_d = str(tmp_path / "counts")
-    carry_d = str(tmp_path / "carry")
-    ckpt = str(tmp_path / "ckpt")
-    # batch 1: user 1 does a, b ; user 2 does a
-    b1 = [(1, t0, 1, "a"), (2, t0 + dt.timedelta(minutes=1), 1, "b"),
-          (3, t0, 2, "a")]
-    # batch 2: user 1 does c (boundary b->c); user 2 does b (boundary a->b)
-    t1 = t0 + dt.timedelta(hours=1)
-    b2 = [(4, t1, 1, "c"), (5, t1, 2, "b")]
-    for batch in (b1, b2):
-        spark.createDataFrame(batch, schema).write.mode("append").parquet(src)
-        incremental_markov_maintenance(
-            spark, src, schema, counts_d, carry_d, ckpt
-        )
-    got = {
-        (r["src"], r["dst"]): r["n"]
-        for r in read_state(spark, counts_d).collect()
-    }
-    # in-batch a->b (user 1) plus boundary a->b (user 2) = 2
-    assert got == {("a", "b"): 2, ("b", "c"): 1}
-    carry = {
-        r["user_id"]: r["last_type"]
-        for r in read_state(spark, carry_d).collect()
-    }
-    assert carry == {1: "c", 2: "b"}
-
-
 def test_cuped_perfect_covariate_zeroes_delta(spark):
     import datetime as dt
     import unittest.mock as mock
@@ -771,27 +732,6 @@ def test_partition_skew_report_hand_computed(spark):
     assert got["day"]["max_rows"] == 6 and got["day"]["skew"] == 1.5
     assert got["day"]["max_share"] == 0.75
     assert got["event_type"]["skew"] == 1.75
-
-
-def test_group_count_maintenance_sums_across_batches(spark, tmp_path):
-    from vector_graph_native_database__spark.streaming.ingest import (
-        incremental_group_count_maintenance,
-        read_state,
-    )
-
-    schema = "id string, lang string"
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    b1 = [("1", "en"), ("2", "en"), ("3", "fr")]
-    b2 = [("4", "en"), ("5", "de")]
-    for batch in (b1, b2):
-        spark.createDataFrame(batch, schema).write.mode("append").parquet(src)
-        incremental_group_count_maintenance(
-            spark, src, schema, state, ckpt, "lang"
-        )
-    got = {r["grp"]: r["n"] for r in read_state(spark, state).collect()}
-    assert got == {"en": 3, "fr": 1, "de": 1}
 
 
 def test_sql_frontend_seg_revenue_shares_sum_to_one(spark):

@@ -153,37 +153,6 @@ def test_incremental_components_equals_recompute(spark):
     assert ("3", "0") in inc and ("7", "4") in inc and ("6", "6") in inc
 
 
-def test_vector_cdc_maintenance_applies_deletes(spark, tmp_path):
-    from vector_graph_native_database__spark.streaming.ingest import (
-        incremental_vector_cdc_maintenance,
-        read_state,
-    )
-
-    src, state, ckpt = (str(tmp_path / d) for d in ("src", "state", "ckpt"))
-    schema = "node_id string, vector array<float>, op string, seq long"
-    b1 = spark.createDataFrame(
-        [("a", [1.0, 0.0], "I", 0), ("b", [0.0, 1.0], "I", 0)], schema
-    )
-    # delete a, rewrite b, insert c -- b's seq-2 rewrite must beat its delete
-    b2 = spark.createDataFrame(
-        [
-            ("a", [9.9, 9.9], "D", 1),
-            ("b", [0.0, 0.0], "D", 1),
-            ("b", [0.5, 0.5], "I", 2),
-            ("c", [2.0, 2.0], "I", 1),
-        ],
-        schema,
-    )
-    for b in (b1, b2):
-        b.write.mode("append").parquet(src)
-        incremental_vector_cdc_maintenance(spark, src, schema, state, ckpt)
-    got = {
-        r["node_id"]: [round(x, 3) for x in r["vector"]]
-        for r in read_state(spark, state).collect()
-    }
-    assert got == {"b": [0.5, 0.5], "c": [2.0, 2.0]}
-
-
 def test_minhash_band_sweep_monotone(spark):
     from vector_graph_native_database__spark.registry.qualityq import (
         q_dedup_minhash_band_sweep,

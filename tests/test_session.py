@@ -6,6 +6,8 @@ every scan of the frame runs Python-worker tasks. ``local_frame``
 keeps the rows in the plan as a JVM ``LocalRelation``. These tests
 keep every engine call site on it, and pin that it gives the same rows
 and schema as ``createDataFrame`` for every schema the engine uses.
+The same AST scan keeps the streaming skeleton (``readStream``,
+``writeStream``, ``foreachBatch``) inside its three kernels.
 """
 
 from __future__ import annotations
@@ -23,30 +25,61 @@ PKG = (
 )
 
 
-def test_no_create_dataframe_outside_local_frame():
+def _attr_uses_outside(attr: str, owners: set[str]) -> list[str]:
+    """``file:line`` of every ``.attr`` in the engine package outside
+    the functions named in ``owners`` (as ``"pkg/file.py:func"``)."""
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
         tree = ast.parse(path.read_text(), str(path))
         allowed: set[int] = set()
-        if path.name == "session.py":
-            for node in ast.walk(tree):
-                if (
-                    isinstance(node, ast.FunctionDef)
-                    and node.name == "local_frame"
-                ):
-                    allowed |= {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.FunctionDef)
+                and f"{rel}:{node.name}" in owners
+            ):
+                allowed |= {id(n) for n in ast.walk(node)}
         offenders += [
             f"{path.relative_to(PKG.parent)}:{node.lineno}"
             for node in ast.walk(tree)
-            if isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "createDataFrame"
+            if isinstance(node, ast.Attribute)
+            and node.attr == attr
             and id(node) not in allowed
         ]
+    return offenders
+
+
+def test_no_create_dataframe_outside_local_frame():
+    offenders = _attr_uses_outside(
+        "createDataFrame", {"session.py:local_frame"}
+    )
     assert offenders == [], (
         "build request frames with session.local_frame, not "
         f"createDataFrame: {offenders}"
     )
+
+
+STREAM_OWNERS = {
+    "foreachBatch": {"streaming/ingest.py:_maintain"},
+    "writeStream": {
+        "streaming/ingest.py:_maintain",
+        "registry/common.py:replay_to_parquet",
+    },
+    "readStream": {
+        "streaming/ingest.py:_maintain",
+        "streaming/ingest.py:stream_events",
+    },
+}
+
+
+@pytest.mark.parametrize("attr", sorted(STREAM_OWNERS))
+def test_streaming_skeleton_lives_in_its_kernels(attr):
+    """Stream maintenance goes through ``ingest._maintain``, sink
+    replays through ``common.replay_to_parquet``, and the events
+    stream through ``ingest.stream_events``; no entry hand-rolls its
+    own readStream → sink → availableNow skeleton."""
+    offenders = _attr_uses_outside(attr, STREAM_OWNERS[attr])
+    assert offenders == [], f"{attr} outside its kernels: {offenders}"
 
 
 CASES = {

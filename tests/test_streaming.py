@@ -510,3 +510,261 @@ def test_time_travel_versions_and_orphan_rejection(spark, tmp_path):
         assert False, "orphan read should raise"
     except ValueError:
         pass
+
+
+# --- every incremental_*_maintenance through the shared kernel ----------
+#
+# One case per maintainer: tiny batches replayed through the real
+# foreachBatch path, the exact final state asserted, then a zero-row
+# parquet file appended to the source must commit no new version (the
+# kernel's empty-batch guard). Each case is
+# (maintainer name, schema, batches, state dir names, kwargs, check);
+# ``check(spark, *state_dirs)`` asserts the final state.
+
+
+def _sorted_rows(df, *cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _check_index(spark, state):
+    from vector_graph_native_database__spark.functions.textfn import (
+        embed_hash_df,
+    )
+
+    final = spark.createDataFrame(
+        [("a", "second version"), ("b", "doc b"), ("c", "doc c")],
+        "id string, text string",
+    )
+    want = _sorted_rows(embed_hash_df(final), "id", "vector", "dim")
+    assert _sorted_rows(
+        read_state(spark, state), "node_id", "vector", "dim"
+    ) == want
+
+
+def _check_vector(spark, state):
+    got = {
+        r["node_id"]: list(r["vector"])
+        for r in read_state(spark, state).collect()
+    }
+    # a's seq-2 row beats its seq-1 row inside the same batch
+    assert got == {"a": [0.5, 0.5], "b": [0.0, 1.0], "c": [2.0, 2.0]}
+
+
+def _check_vector_cdc(spark, state):
+    got = {
+        r["node_id"]: [round(x, 3) for x in r["vector"]]
+        for r in read_state(spark, state).collect()
+    }
+    assert got == {"b": [0.5, 0.5], "c": [2.0, 2.0]}
+
+
+def _check_bm25(spark, state):
+    from vector_graph_native_database__spark.operators.bm25 import (
+        posting_frame,
+    )
+
+    final = spark.createDataFrame(
+        [("a", "quick quick fox jumps"), ("b", "lazy dog sleeps"),
+         ("c", "the dog barks")],
+        "id string, text string",
+    )
+    want = _sorted_rows(posting_frame(final), "id", "tok", "tf")
+    assert _sorted_rows(read_state(spark, state), "id", "tok", "tf") == want
+
+
+_SKETCH_DOCS = [[("1", "a b a"), ("2", "c")], [("3", "a d")]]
+_SKETCH_EVENTS = [
+    [(1, "x", 10), (2, "x", 11), (3, "y", 10)],
+    [(4, "x", 12), (5, "y", 13), (6, "y", 10), (7, "x", 10)],
+]
+
+
+def _all_rows(spark, batches, schema):
+    return spark.createDataFrame([r for b in batches for r in b], schema)
+
+
+def _check_cms(spark, state):
+    from vector_graph_native_database__spark.operators.sketch import (
+        cms_partial_counters,
+    )
+
+    full = _all_rows(spark, _SKETCH_DOCS, "id string, text string")
+    got = _sorted_rows(read_state(spark, state), "d", "b", "cnt")
+    want = _sorted_rows(
+        cms_partial_counters(full, "text", depth=2, width=4), "d", "b", "cnt"
+    )
+    assert got == want
+    # every depth row counts all six tokens exactly once
+    assert {d: sum(c for dd, _, c in got if dd == d) for d in (0, 1)} == {
+        0: 6,
+        1: 6,
+    }
+
+
+def _check_hll(spark, state):
+    from vector_graph_native_database__spark.operators.sketch import (
+        hll_registers,
+    )
+
+    full = _all_rows(
+        spark, _SKETCH_EVENTS, "event_id long, event_type string, user_id long"
+    )
+    want = hll_registers(full, "event_type", "user_id", m=8)
+    assert _sorted_rows(
+        read_state(spark, state), "grp", "reg", "mrho"
+    ) == _sorted_rows(want, "grp", "reg", "mrho")
+
+
+def _check_kmv(spark, state):
+    from vector_graph_native_database__spark.operators.sketch import (
+        kmv_state,
+    )
+
+    full = _all_rows(
+        spark, _SKETCH_EVENTS, "event_id long, event_type string, user_id long"
+    )
+    got = _sorted_rows(read_state(spark, state), "event_type", "u")
+    assert got == _sorted_rows(
+        kmv_state(full, "event_type", "user_id", k=2), "event_type", "u"
+    )
+    # x and y each saw three distinct users; the merge keeps k=2
+    assert [g for g, _ in got] == ["x", "x", "y", "y"]
+
+
+def _check_markov(spark, counts_d, carry_d):
+    got = {
+        (r["src"], r["dst"]): r["n"]
+        for r in read_state(spark, counts_d).collect()
+    }
+    # in-batch a->b (user 1) plus boundary a->b (user 2) = 2
+    assert got == {("a", "b"): 2, ("b", "c"): 1}
+    carry = {
+        r["user_id"]: r["last_type"]
+        for r in read_state(spark, carry_d).collect()
+    }
+    assert carry == {1: "c", 2: "b"}
+
+
+def _check_group_count(spark, state):
+    got = {r["grp"]: r["n"] for r in read_state(spark, state).collect()}
+    assert got == {"en": 3, "fr": 1, "de": 1}
+
+
+def _markov_batches():
+    import datetime as dt
+
+    t0 = dt.datetime(2026, 1, 1)
+    # batch 1: user 1 does a, b ; user 2 does a
+    b1 = [(1, t0, 1, "a"), (2, t0 + dt.timedelta(minutes=1), 1, "b"),
+          (3, t0, 2, "a")]
+    # batch 2: user 1 does c (boundary b->c); user 2 does b (boundary a->b)
+    t1 = t0 + dt.timedelta(hours=1)
+    b2 = [(4, t1, 1, "c"), (5, t1, 2, "b")]
+    return [b1, b2]
+
+
+MAINTAINER_CASES = {
+    "index": (
+        "incremental_index_maintenance",
+        "id string, text string, seq long",
+        [[("a", "first version", 1), ("b", "doc b", 1)],
+         [("a", "second version", 2), ("c", "doc c", 2)]],
+        ("state",),
+        {},
+        _check_index,
+    ),
+    "vector": (
+        "incremental_vector_maintenance",
+        "node_id string, vector array<float>, seq long",
+        [[("a", [1.0, 0.0], 0), ("b", [0.0, 1.0], 0)],
+         [("a", [0.5, 0.5], 2), ("a", [7.0, 7.0], 1), ("c", [2.0, 2.0], 1)]],
+        ("state",),
+        {},
+        _check_vector,
+    ),
+    "vector_cdc": (
+        "incremental_vector_cdc_maintenance",
+        "node_id string, vector array<float>, op string, seq long",
+        [[("a", [1.0, 0.0], "I", 0), ("b", [0.0, 1.0], "I", 0)],
+         # delete a, rewrite b, insert c -- b's seq-2 rewrite must beat
+         # its delete
+         [("a", [9.9, 9.9], "D", 1), ("b", [0.0, 0.0], "D", 1),
+          ("b", [0.5, 0.5], "I", 2), ("c", [2.0, 2.0], "I", 1)]],
+        ("state",),
+        {},
+        _check_vector_cdc,
+    ),
+    "bm25": (
+        "incremental_bm25_maintenance",
+        "id string, text string, seq long",
+        [[("a", "the quick brown fox", 1), ("b", "lazy dog sleeps", 1)],
+         [("a", "quick quick fox jumps", 2), ("c", "the dog barks", 2)]],
+        ("state",),
+        {},
+        _check_bm25,
+    ),
+    "cms": (
+        "incremental_cms_maintenance",
+        "id string, text string",
+        _SKETCH_DOCS,
+        ("state",),
+        {"depth": 2, "width": 4},
+        _check_cms,
+    ),
+    "hll": (
+        "incremental_hll_maintenance",
+        "event_id long, event_type string, user_id long",
+        _SKETCH_EVENTS,
+        ("state",),
+        {"group_col": "event_type", "value_col": "user_id", "m": 8},
+        _check_hll,
+    ),
+    "kmv": (
+        "incremental_kmv_maintenance",
+        "event_id long, event_type string, user_id long",
+        _SKETCH_EVENTS,
+        ("state",),
+        {"group_col": "event_type", "value_col": "user_id", "k": 2},
+        _check_kmv,
+    ),
+    "markov": (
+        "incremental_markov_maintenance",
+        "event_id long, ts timestamp, user_id long, event_type string",
+        _markov_batches(),
+        ("counts", "carry"),
+        {},
+        _check_markov,
+    ),
+    "group_count": (
+        "incremental_group_count_maintenance",
+        "id string, lang string",
+        [[("1", "en"), ("2", "en"), ("3", "fr")], [("4", "en"), ("5", "de")]],
+        ("state",),
+        {"group_col": "lang"},
+        _check_group_count,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(MAINTAINER_CASES))
+def test_maintainer_final_state_and_empty_batch_guard(spark, tmp_path, case):
+    from vector_graph_native_database__spark.streaming import ingest
+
+    fn_name, schema, batches, state_names, kw, check = MAINTAINER_CASES[case]
+    maintain = getattr(ingest, fn_name)
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    states = [str(tmp_path / n) for n in state_names]
+
+    def replay(rows):
+        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
+        return maintain(spark, src, schema, *states, ckpt, **kw)
+
+    for rows in batches:
+        replay(rows)
+    check(spark, *states)
+
+    before = [ingest.list_state_versions(d) for d in states]
+    q = replay([])
+    assert q.lastProgress["numInputRows"] == 0
+    assert [ingest.list_state_versions(d) for d in states] == before
+    check(spark, *states)

@@ -175,6 +175,90 @@ def replay_state_parts(spark: SparkSession, n: int | None = None):
     return _scope()
 
 
+def replay_batches(
+    spark: SparkSession,
+    name: str,
+    batches: list[DataFrame],
+    schema: str,
+    maintain,
+    **kw,
+) -> DataFrame:
+    """Replay ``batches`` through an ``incremental_*_maintenance``
+    function and return the maintained state: each batch is appended
+    as parquet to a fresh scratch source dir, then
+    ``maintain(spark, src, schema, state, ckpt, **kw)`` runs one
+    checkpointed availableNow pass over it.
+
+    Batch i+1's append runs on a one-worker pool while batch i's
+    replay runs, so the two overlap. Write-ordering invariant: the
+    WRITES stay serialized (one worker; write i+1 is submitted only
+    after write i returned), so batch i is fully visible before any
+    batch i+1 file lands. A replay's listing may still pick up part of
+    batch i+1, so one micro-batch can hold a key's batch-i and
+    batch-(i+1) rows, but a key's batch-(i+1) row is never applied in
+    an EARLIER micro-batch than its batch-i row. That is correct for:
+
+    - latest-wins families: ``max_by(..., seq)`` settles rows that
+      share a micro-batch, and across micro-batches the upsert is
+      last-applied-wins (the persisted state drops ``seq``), which the
+      ordering above makes highest-seq-wins as long as ``seq`` rises
+      with the batch index;
+    - sketch monoids (sum/max/min-k merges): order-independent.
+
+    It is NOT correct for Markov maintenance
+    (``markov_incremental_equiv`` keeps its own sequential loop): its
+    per-user carry assumes each micro-batch is a whole event-time
+    range, and a batch whose part files split across two micro-batches
+    breaks a user's lead()/carry chain out of time order. More workers
+    or reordered submits would break the latest-wins families too.
+    The checkpoint processes each file exactly once.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ..streaming.ingest import read_state
+
+    base = scratch_dir(name)
+    src, state, ckpt = (
+        os.path.join(base, d) for d in ("src", "state", "ckpt")
+    )
+
+    def append(batch: DataFrame) -> None:
+        batch.write.mode("append").parquet(src)
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        pending = pool.submit(append, batches[0])
+        for nxt in [*batches[1:], None]:
+            pending.result()
+            if nxt is not None:
+                pending = pool.submit(append, nxt)
+            maintain(spark, src, schema, state, ckpt, **kw)
+    return read_state(spark, state)
+
+
+def replay_to_parquet(
+    spark: SparkSession, name: str, stream_df: DataFrame
+) -> DataFrame:
+    """Run ``stream_df`` to completion into a checkpointed append-mode
+    parquet sink (``trigger(availableNow=True)``, awaited, inside
+    :func:`replay_state_parts`) and return the sink as a batch frame.
+    The sink is a fresh scratch dir per call; a deployment points it
+    at a real table and keeps the checkpoint for incremental
+    restarts."""
+    base = scratch_dir(name)
+    sink = os.path.join(base, "sink")
+    with replay_state_parts(spark):
+        q = (
+            stream_df.writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", sink)
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return spark.read.parquet(sink)
+
+
 def model(spark: SparkSession, sf_dir: str):
     """(nodes, embeddings, edges) engine-model DataFrames."""
     return (

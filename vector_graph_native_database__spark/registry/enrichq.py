@@ -376,26 +376,22 @@ def q_cms_incremental_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-pass batch CMS (the ``heavy_hitters_cms`` oracle — it
     knows nothing about batches, so one dropped batch, double merge,
     or stale snapshot fails the value check)."""
-    import os
-
-    from ..streaming.ingest import incremental_cms_maintenance, read_state
+    from ..streaming.ingest import incremental_cms_maintenance
     from ..operators.sketch import cms_estimate_heavy_hitters
-    from .common import scratch_dir
+    from .common import replay_batches
 
-    base = scratch_dir("cms_incremental")
-    src = os.path.join(base, "src")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     nodes, _, _ = model(spark, sf_dir)
     docs = nodes.select("id", "text")
     part = F.pmod(F.crc32(F.col("id")), F.lit(3))
-    schema = "id string, text string"
-    for i in range(3):
-        docs.filter(part == i).write.mode("append").parquet(src)
-        incremental_cms_maintenance(
-            spark, src, schema, state, ckpt, depth=CMS_DEPTH, width=CMS_WIDTH
-        )
-    counters = read_state(spark, state)
+    counters = replay_batches(
+        spark,
+        "cms_incremental",
+        [docs.filter(part == i) for i in range(3)],
+        "id string, text string",
+        incremental_cms_maintenance,
+        depth=CMS_DEPTH,
+        width=CMS_WIDTH,
+    )
     return cms_estimate_heavy_hitters(
         docs,
         counters,

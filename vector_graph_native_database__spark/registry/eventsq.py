@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..session import local_frame
 from ..sources import load_table
-from .common import ORACLE_PRELUDE, replay_state_parts, scratch_dir
+from .common import ORACLE_PRELUDE, replay_batches, replay_to_parquet
 from ..streaming.windows import session_agg, sliding_agg, tumbling_agg
 
 
@@ -113,31 +113,15 @@ def q_events_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch tumbling aggregation over the replayed sink. Results are
     value-identical to ``events_tumbling`` (same oracle SQL), so the
     driver gate verifies the streaming read/sink path, not just the
-    batch one. The sink is a fresh temp dir per call; a deployment
-    points it at a real table and keeps the checkpoint for
-    incremental restarts (see streaming/ingest.py).
+    batch one.
     """
-    import os
+    from ..streaming.ingest import stream_events
 
-    from ..streaming.ingest import EVENTS_SCHEMA
-
-    base = scratch_dir("events_stream_replay")
-    sink = os.path.join(base, "sink")
-    ckpt = os.path.join(base, "ckpt")
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+    replayed = replay_to_parquet(
+        spark,
+        "events_stream_replay",
+        stream_events(spark, sf_dir, with_watermark=None),
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    replayed = spark.read.parquet(sink)
     return tumbling_agg(replayed).withColumn(
         "sum_value", F.round("sum_value", 6)
     )
@@ -153,33 +137,12 @@ def q_events_stream_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     data, so the DuckDB oracle reproduces it exactly — the driver
     gate thereby value-checks Spark's late-data/watermark behavior.
     """
-    import os
+    from ..streaming.ingest import stream_events
 
-    from ..streaming.ingest import EVENTS_SCHEMA
-
-    base = scratch_dir("events_stream_windows")
-    sink = os.path.join(base, "sink")
-    ckpt = os.path.join(base, "ckpt")
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .withWatermark("ts", "1 hour")
-    )
-    with replay_state_parts(spark):
-        q = (
-            tumbling_agg(stream)
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(sink).withColumn(
-        "sum_value", F.round("sum_value", 6)
-    )
+    stream = stream_events(spark, sf_dir, with_watermark="1 hour")
+    return replay_to_parquet(
+        spark, "events_stream_windows", tumbling_agg(stream)
+    ).withColumn("sum_value", F.round("sum_value", 6))
 
 
 def q_events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -197,31 +160,14 @@ def q_events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dropDuplicatesWithinWatermark`` (streaming/stateful.py); the
     registry run is a bounded availableNow replay, where run-scoped
     state is the point."""
-    import os
+    from ..streaming.ingest import stream_events
 
-    from ..streaming.ingest import EVENTS_SCHEMA
-
-    base = scratch_dir("events_stream_dedup")
-    sink = os.path.join(base, "sink")
-    ckpt = os.path.join(base, "ckpt")
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+    stream = stream_events(spark, sf_dir, with_watermark=None)
+    deduped = stream.filter(F.col("user_id").isNotNull()).dropDuplicates(
+        ["user_id", "event_type"]
     )
-    with replay_state_parts(spark):
-        q = (
-            stream.filter(F.col("user_id").isNotNull())
-            .dropDuplicates(["user_id", "event_type"])
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.read.parquet(sink)
+        replay_to_parquet(spark, "events_stream_dedup", deduped)
         .groupBy("event_type")
         .agg(F.count("*").alias("unique_users"))
     )
@@ -276,15 +222,8 @@ def _replay_decoy_batches(
     oracle checks. One definition so the BM25 and embedding twins can
     never drift in replay protocol.
     """
-    import os
-
-    from ..streaming.ingest import read_state
     from .common import model
 
-    base = scratch_dir(scratch_name)
-    src = os.path.join(base, "src")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     nodes, _, _ = model(spark, sf_dir)
     docs = nodes.select("id", "text")
     rewrite = F.pmod(F.crc32(F.col("id")), F.lit(3)) == 0
@@ -302,10 +241,9 @@ def _replay_decoy_batches(
             "id", "text", F.lit(2).cast("long").alias("seq")
         ),
     ]
-    for b in batches:
-        b.write.mode("append").parquet(src)
-        maintain_fn(spark, src, schema, state, ckpt)
-    return docs, read_state(spark, state)
+    return docs, replay_batches(
+        spark, scratch_name, batches, schema, maintain_fn
+    )
 
 
 def q_bm25_topk_streamed_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -357,20 +295,11 @@ def q_ann_ivf_streamed_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the value level. Companion of ``bm25_topk_streamed_index``: the
     reference's "index follows writes" invariant (app.py:771-773)
     for the vector index instead of the posting index."""
-    import os
-
     from ..operators import ann
-    from ..streaming.ingest import (
-        incremental_vector_maintenance,
-        read_state,
-    )
+    from ..streaming.ingest import incremental_vector_maintenance
     from .common import model
     from .pipelineq import ANN_QUERY_IDS
 
-    base = scratch_dir("ann_ivf_streamed")
-    src = os.path.join(base, "src")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     _, emb, _ = model(spark, sf_dir)
     vecs = emb.select("node_id", "vector")
     rewrite = F.pmod(F.crc32(F.col("node_id")), F.lit(3)) == 0
@@ -389,37 +318,10 @@ def q_ann_ivf_streamed_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "node_id", "vector", F.lit(2).cast("long").alias("seq")
         ),
     ]
-    # Overlap batch i+1's parquet append with batch i's replay
-    # (guide §2.6 — the tier-report thread-pool idiom): the replay's
-    # awaitTermination used to serialize three write→replay rounds.
-    # Invariant: the WRITES stay serialized (one worker; write i+1 is
-    # submitted only after write i returned), so batch i is fully
-    # visible before any batch i+1 file lands. Whichever replay's
-    # listing picks a file up, a node's lower-seq row is therefore
-    # never applied in a later micro-batch than its higher-seq row:
-    # max_by(seq) settles rows that share a micro-batch, and the
-    # cross-batch upsert is last-APPLIED-wins (the persisted state
-    # drops seq) — not a highest-seq-wins merge. More workers or
-    # reordered submits would let a stale vector overwrite a newer
-    # one. The checkpoint processes each file exactly once, and the
-    # oracle pins the output.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(
-            batches[0].write.mode("append").parquet, src
-        )
-        for i in range(len(batches)):
-            fut.result()
-            fut = (
-                pool.submit(
-                    batches[i + 1].write.mode("append").parquet, src
-                )
-                if i + 1 < len(batches)
-                else None
-            )
-            incremental_vector_maintenance(spark, src, schema, state, ckpt)
-    maintained = read_state(spark, state)
+    maintained = replay_batches(
+        spark, "ann_ivf_streamed", batches, schema,
+        incremental_vector_maintenance,
+    )
     return ann.ivf_topk(
         maintained, ANN_QUERY_IDS, k=5, n_centroids=8, iters=2,
         nprobe=2, dim=64, round_scores=6,
@@ -442,18 +344,9 @@ def q_vector_state_cdc_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row set or a fingerprint and fails the gate. Completes the
     write-API story for the vector index: ann_ivf_streamed_index
     proves upserts reach serving; this proves deletes do too."""
-    import os
-
-    from ..streaming.ingest import (
-        incremental_vector_cdc_maintenance,
-        read_state,
-    )
+    from ..streaming.ingest import incremental_vector_cdc_maintenance
     from .common import model
 
-    base = scratch_dir("vector_state_cdc")
-    src = os.path.join(base, "src")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     _, emb, _ = model(spark, sf_dir)
     vecs = emb.select("node_id", "vector")
     b = (
@@ -481,10 +374,10 @@ def q_vector_state_cdc_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(2).cast("long").alias("seq"),
         ),
     ]
-    for batch in batches:
-        batch.write.mode("append").parquet(src)
-        incremental_vector_cdc_maintenance(spark, src, schema, state, ckpt)
-    kept = read_state(spark, state)
+    kept = replay_batches(
+        spark, "vector_state_cdc", batches, schema,
+        incremental_vector_cdc_maintenance,
+    )
     comp = kept.select(
         F.col("node_id").alias("id"),
         F.posexplode("vector").alias("bucket", "val"),
@@ -805,32 +698,14 @@ def q_events_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the pair set is a pure function of the data and the DuckDB
     twin is the exact batch interval join — the gate value-checks
     the streaming join state machinery end to end."""
-    import os
-
-    from ..streaming.ingest import EVENTS_SCHEMA
+    from ..streaming.ingest import stream_events
     from ..streaming.windows import stream_interval_join
 
-    base = scratch_dir("events_stream_join")
-    sink = os.path.join(base, "sink")
-    ckpt = os.path.join(base, "ckpt")
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+    pairs = stream_interval_join(
+        stream_events(spark, sf_dir, with_watermark=None)
     )
-    with replay_state_parts(spark):
-        q = (
-            stream_interval_join(stream)
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.read.parquet(sink)
+        replay_to_parquet(spark, "events_stream_join", pairs)
         .groupBy("user_id")
         .agg(F.count("*").alias("n_pairs"))
     )
@@ -1154,19 +1029,9 @@ def q_events_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces the emitted set exactly — the gate value-checks
     Spark's stateful session MERGING + late-data finalization, the
     semantics `events_session` (batch) cannot exercise."""
-    import os
+    from ..streaming.ingest import stream_events
 
-    from ..streaming.ingest import EVENTS_SCHEMA
-
-    base = scratch_dir("events_stream_session")
-    sink = os.path.join(base, "sink")
-    ckpt = os.path.join(base, "ckpt")
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .withWatermark("ts", "1 hour")
-    )
+    stream = stream_events(spark, sf_dir, with_watermark="1 hour")
     agg = (
         stream.groupBy(
             F.session_window("ts", "30 minutes").alias("w"), "user_id"
@@ -1181,17 +1046,7 @@ def q_events_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("sum_value", 6).alias("sum_value"),
         )
     )
-    with replay_state_parts(spark):
-        q = (
-            agg.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(sink)
+    return replay_to_parquet(spark, "events_stream_session", agg)
 
 
 QUERIES["events_stream_session"] = q_events_stream_session
@@ -1461,23 +1316,14 @@ def q_events_stream_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete-per-key state bounded by |types|×2. availableNow replay
     makes the result a pure function of the data, so the DuckDB twin
     is the exact batch join."""
-    import os
+    from ..streaming.ingest import stream_events
 
-    from ..streaming.ingest import EVENTS_SCHEMA
-
-    base = scratch_dir("events_stream_dim_join")
-    sink = os.path.join(base, "sink")
-    ckpt = os.path.join(base, "ckpt")
     dim = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(F.avg("value").alias("type_mean"))
     )
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = stream_events(spark, sf_dir, with_watermark=None)
     enriched = (
         stream.join(F.broadcast(dim), "event_type")
         .select(
@@ -1485,17 +1331,8 @@ def q_events_stream_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("value") > F.col("type_mean")).alias("above_mean"),
         )
     )
-    q = (
-        enriched.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.read.parquet(sink)
+        replay_to_parquet(spark, "events_stream_dim_join", enriched)
         .groupBy("event_type", "above_mean")
         .agg(F.count("*").alias("n_events"))
     )
@@ -1772,6 +1609,8 @@ def q_markov_incremental_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter((us >= cut1) & (us < cut2)),
         ev.filter(us >= cut2),
     ]
+    # Sequential on purpose: the carry needs whole event-time batches
+    # (see replay_batches for why the prefetched loop cannot serve it).
     for bdf in batches:
         bdf.select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
@@ -2958,30 +2797,16 @@ def q_events_stream_outer_join(
     output a pure function of the data at every scale. State stays
     bounded (lookback + watermark per side); the post-aggregate is
     one keyed groupBy."""
-    import os
-
-    from ..streaming.ingest import EVENTS_SCHEMA
+    from ..streaming.ingest import stream_events
     from ..streaming.windows import stream_interval_join_outer
 
-    base = scratch_dir("events_stream_outer_join")
-    sink = os.path.join(base, "sink")
-    ckpt = os.path.join(base, "ckpt")
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+    pairs = replay_to_parquet(
+        spark,
+        "events_stream_outer_join",
+        stream_interval_join_outer(
+            stream_events(spark, sf_dir, with_watermark=None)
+        ),
     )
-    with replay_state_parts(spark):
-        q = (
-            stream_interval_join_outer(stream)
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     ev = _events(spark, sf_dir)
     cutoff = (
         ev.filter(
@@ -2995,8 +2820,7 @@ def q_events_stream_outer_join(
         )
     )
     return (
-        spark.read.parquet(sink)
-        .crossJoin(F.broadcast(cutoff))
+        pairs.crossJoin(F.broadcast(cutoff))
         .filter(F.col("left_ts") <= F.col("cutoff"))
         .groupBy("user_id")
         .agg(

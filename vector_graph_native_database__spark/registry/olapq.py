@@ -1063,28 +1063,23 @@ def q_hll_incremental_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch, stale snapshot, or double-merge changes a register max and
     fails the value check — the max-merge monoid law proven through
     the actual streaming path."""
-    import os
-
     from ..operators.sketch import hll_estimate_from_registers
-    from ..streaming.ingest import incremental_hll_maintenance, read_state
-    from .common import scratch_dir
+    from ..streaming.ingest import incremental_hll_maintenance
+    from .common import replay_batches
 
-    base = scratch_dir("hll_incremental")
-    src = os.path.join(base, "src")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id"
     )
-    schema = "event_id long, event_type string, user_id long"
-    for i in range(3):
-        ev.filter(F.pmod("event_id", F.lit(3)) == i).write.mode(
-            "append"
-        ).parquet(src)
-        incremental_hll_maintenance(
-            spark, src, schema, state, ckpt, "event_type", "user_id", m=64
-        )
-    regs = read_state(spark, state)
+    regs = replay_batches(
+        spark,
+        "hll_incremental",
+        [ev.filter(F.pmod("event_id", F.lit(3)) == i) for i in range(3)],
+        "event_id long, event_type string, user_id long",
+        incremental_hll_maintenance,
+        group_col="event_type",
+        value_col="user_id",
+        m=64,
+    )
     return hll_estimate_from_registers(
         regs, ev, "event_type", "user_id", m=64
     )
@@ -1100,28 +1095,23 @@ def q_kmv_incremental_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     KMV state union-merged keeping the k smallest hashes per type;
     the final estimates from the MAINTAINED state must hash-equal the
     single-pass batch sketch's oracle."""
-    import os
-
     from ..operators.sketch import kmv_estimate_from_state
-    from ..streaming.ingest import incremental_kmv_maintenance, read_state
-    from .common import scratch_dir
+    from ..streaming.ingest import incremental_kmv_maintenance
+    from .common import replay_batches
 
-    base = scratch_dir("kmv_incremental")
-    src = os.path.join(base, "src")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id"
     )
-    schema = "event_id long, event_type string, user_id long"
-    for i in range(3):
-        ev.filter(F.pmod("event_id", F.lit(3)) == i).write.mode(
-            "append"
-        ).parquet(src)
-        incremental_kmv_maintenance(
-            spark, src, schema, state, ckpt, "event_type", "user_id", k=64
-        )
-    state_df = read_state(spark, state)
+    state_df = replay_batches(
+        spark,
+        "kmv_incremental",
+        [ev.filter(F.pmod("event_id", F.lit(3)) == i) for i in range(3)],
+        "event_id long, event_type string, user_id long",
+        incremental_kmv_maintenance,
+        group_col="event_type",
+        value_col="user_id",
+        k=64,
+    )
     return kmv_estimate_from_state(
         state_df, ev, "event_type", "user_id", k=64
     )

@@ -477,29 +477,20 @@ def q_tmix_incremental_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus streams in, the |langs|-sized count state is the only
     thing maintained, and the mixture is re-derivable after every
     commit without a corpus rescan."""
-    import os
+    from ..streaming.ingest import incremental_group_count_maintenance
+    from .common import replay_batches
 
-    from ..streaming.ingest import (
-        incremental_group_count_maintenance,
-        read_state,
-    )
-    from .common import scratch_dir
-
-    base = scratch_dir("tmix_incremental")
-    src = os.path.join(base, "src")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     nodes, _, _ = model(spark, sf_dir)
     docs = nodes.select("id", "lang")
     part = F.pmod(F.crc32(F.col("id")), F.lit(3))
-    for i in range(3):
-        docs.filter(part == i).write.mode("append").parquet(src)
-        incremental_group_count_maintenance(
-            spark, src, "id string, lang string", state, ckpt, "lang"
-        )
-    counts = read_state(spark, state).select(
-        "grp", F.col("n").alias("n_g")
-    )
+    counts = replay_batches(
+        spark,
+        "tmix_incremental",
+        [docs.filter(part == i) for i in range(3)],
+        "id string, lang string",
+        incremental_group_count_maintenance,
+        group_col="lang",
+    ).select("grp", F.col("n").alias("n_g"))
     return sampling.temperature_mix(
         nodes, group_col="lang", alpha=0.5, budget_frac=0.5, counts=counts
     )

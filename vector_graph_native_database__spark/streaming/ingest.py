@@ -7,12 +7,21 @@ document batches driving incremental maintenance of the derived
 tables (embeddings here; the BM25 corpus-stat frames the same way)
 via ``foreachBatch`` — O(batch) work per batch, with exactly-once
 progress via checkpointing.
+
+Every ``incremental_*_maintenance`` function is a fold over one
+kernel, :func:`_maintain`, which owns the parquet file-source stream,
+the ``foreachBatch`` sink, the empty-batch guard and the awaited
+``availableNow`` trigger. The fold contract: ``apply_batch`` sees only
+non-empty micro-batches, and the state it derives publishes through
+:func:`commit_state` (usually via :func:`_merge_into`, which reads the
+live state, merges or starts fresh, and commits).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -297,26 +306,7 @@ def commit_state(
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, os.path.join(state_dir, _CURRENT))
-        # Compare parsed integer suffixes, not raw names: lexicographic
-        # order silently misbehaves once versions outgrow the v%06d
-        # zero-padding (commit 1,000,000+).
-        def _vnum(d: str) -> int:
-            try:
-                return int(d[1:])
-            except ValueError:
-                return -1
-
-        versions = sorted(
-            (
-                d
-                for d in os.listdir(state_dir)
-                if d.startswith("v")
-                and 0 <= _vnum(d) <= cur_n + 1
-                and os.path.isdir(os.path.join(state_dir, d))
-            ),
-            key=_vnum,
-        )
-        keep = set(versions[-max(keep_last, 1):])
+        keep = set(list_state_versions(state_dir)[-max(keep_last, 1):])
         for entry in os.listdir(state_dir):
             if entry.startswith("v") and entry not in keep:
                 shutil.rmtree(
@@ -355,6 +345,62 @@ def stream_events(
     return df
 
 
+def _maintain(
+    spark: SparkSession,
+    source_dir: str,
+    schema: str | StructType,
+    checkpoint_dir: str,
+    apply_batch: Callable[[DataFrame], None],
+):
+    """The one streaming-maintenance kernel: parquet files under
+    ``source_dir`` as a file-source stream, each NON-EMPTY micro-batch
+    handed to ``apply_batch`` through ``foreachBatch``, run with
+    ``trigger(availableNow=True)`` and awaited, so callers can use it
+    in batch jobs and tests alike. Returns the finished
+    StreamingQuery."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.take(1):
+            apply_batch(batch_df)
+
+    q = (
+        spark.readStream.schema(schema)
+        .parquet(source_dir)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+def _merge_into(
+    spark: SparkSession,
+    state_dir: str,
+    fresh: DataFrame,
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> str:
+    """Fold ``fresh`` into the live state: ``merge(current, fresh)``,
+    or ``fresh`` alone when nothing was committed yet, published
+    transactionally — a new immutable version dir plus an atomic
+    pointer flip, so a crash anywhere leaves the prior snapshot live
+    (protocol note at the top of this module)."""
+    current = read_state(spark, state_dir)
+    return commit_state(
+        fresh if current is None else merge(current, fresh), state_dir
+    )
+
+
+def _agg_merge(agg, col: str, *keys: str):
+    """Monoid fold: union the partials and re-aggregate ``col`` per
+    ``keys`` with ``agg`` (``F.sum`` for counters, ``F.max`` for
+    registers)."""
+    return lambda cur, fresh: (
+        cur.unionByName(fresh).groupBy(*keys).agg(agg(col).alias(col))
+    )
+
+
 def incremental_index_maintenance(
     spark: SparkSession,
     source_dir: str,
@@ -374,11 +420,7 @@ def incremental_index_maintenance(
     from ..functions.textfn import embed_hash_df
     from ..operators.crud import upsert
 
-    docs = spark.readStream.schema(doc_schema).parquet(source_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def apply_batch(batch_df: DataFrame) -> None:
         # latest state of each doc id within the batch wins
         latest = batch_df.groupBy("id").agg(
             F.max_by("text", "seq").alias("text")
@@ -386,25 +428,16 @@ def incremental_index_maintenance(
         new_emb = embed_hash_df(latest).select(
             F.col("id").alias("node_id"), "vector", "dim"
         )
-        current = read_state(spark, state_dir)
-        merged = (
-            upsert(current, new_emb, "node_id")
-            if current is not None
-            else new_emb
+        _merge_into(
+            spark,
+            state_dir,
+            new_emb,
+            lambda cur, fresh: upsert(cur, fresh, "node_id"),
         )
-        # transactional publish: new immutable version dir + atomic
-        # pointer flip — a crash anywhere leaves the prior snapshot
-        # live (protocol note at the top of this module)
-        commit_state(merged, state_dir)
 
-    q = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        spark, source_dir, doc_schema, checkpoint_dir, apply_batch
     )
-    q.awaitTermination()
-    return q
 
 
 def incremental_vector_maintenance(
@@ -428,30 +461,20 @@ def incremental_vector_maintenance(
     """
     from ..operators.crud import upsert
 
-    vecs = spark.readStream.schema(vec_schema).parquet(source_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def apply_batch(batch_df: DataFrame) -> None:
         latest = batch_df.groupBy("node_id").agg(
             F.max_by("vector", "seq").alias("vector")
         )
-        current = read_state(spark, state_dir)
-        merged = (
-            upsert(current, latest, "node_id")
-            if current is not None
-            else latest
+        _merge_into(
+            spark,
+            state_dir,
+            latest,
+            lambda cur, fresh: upsert(cur, fresh, "node_id"),
         )
-        commit_state(merged, state_dir)
 
-    q = (
-        vecs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        spark, source_dir, vec_schema, checkpoint_dir, apply_batch
     )
-    q.awaitTermination()
-    return q
 
 
 def incremental_vector_cdc_maintenance(
@@ -471,38 +494,25 @@ def incremental_vector_cdc_maintenance(
     else replaces it (the changelog_apply rule, applied through the
     transactional snapshot commit). The state side is touched only by
     a broadcast anti-join on the batch's id set — O(batch) work."""
-    from ..operators.crud import upsert
 
-    vecs = spark.readStream.schema(vec_schema).parquet(source_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def apply_batch(batch_df: DataFrame) -> None:
         winners = batch_df.groupBy("node_id").agg(
             F.max_by(F.struct("vector", "op"), "seq").alias("w")
         ).select("node_id", F.col("w.vector").alias("vector"),
                  F.col("w.op").alias("op"))
         ups = winners.filter(F.col("op") != "D").drop("op")
-        current = read_state(spark, state_dir)
-        if current is None:
-            merged = ups
-        else:
-            survivors = current.join(
-                F.broadcast(winners.select("node_id")),
-                "node_id",
-                "left_anti",
-            )
-            merged = survivors.unionByName(ups)
-        commit_state(merged, state_dir)
+        _merge_into(
+            spark,
+            state_dir,
+            ups,
+            lambda cur, fresh: cur.join(
+                F.broadcast(winners.select("node_id")), "node_id", "left_anti"
+            ).unionByName(fresh),
+        )
 
-    q = (
-        vecs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        spark, source_dir, vec_schema, checkpoint_dir, apply_batch
     )
-    q.awaitTermination()
-    return q
 
 
 def incremental_bm25_maintenance(
@@ -529,33 +539,22 @@ def incremental_bm25_maintenance(
     """
     from ..operators.bm25 import posting_frame
 
-    docs = spark.readStream.schema(doc_schema).parquet(source_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def apply_batch(batch_df: DataFrame) -> None:
         latest = batch_df.groupBy("id").agg(
             F.max_by("text", "seq").alias("text")
         )
-        fresh = posting_frame(latest)
-        current = read_state(spark, state_dir)
-        merged = (
-            current.join(
+        _merge_into(
+            spark,
+            state_dir,
+            posting_frame(latest),
+            lambda cur, fresh: cur.join(
                 F.broadcast(latest.select("id")), "id", "left_anti"
-            ).unionByName(fresh)
-            if current is not None
-            else fresh
+            ).unionByName(fresh),
         )
-        commit_state(merged, state_dir)
 
-    q = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        spark, source_dir, doc_schema, checkpoint_dir, apply_batch
     )
-    q.awaitTermination()
-    return q
 
 
 def dedup_stream(
@@ -602,32 +601,17 @@ def incremental_cms_maintenance(
     """
     from ..operators.sketch import cms_partial_counters
 
-    docs = spark.readStream.schema(doc_schema).parquet(source_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        fresh = cms_partial_counters(
-            batch_df, "text", depth=depth, width=width
+    def apply_batch(batch_df: DataFrame) -> None:
+        _merge_into(
+            spark,
+            state_dir,
+            cms_partial_counters(batch_df, "text", depth=depth, width=width),
+            _agg_merge(F.sum, "cnt", "d", "b"),
         )
-        current = read_state(spark, state_dir)
-        merged = (
-            current.unionByName(fresh)
-            .groupBy("d", "b")
-            .agg(F.sum("cnt").alias("cnt"))
-            if current is not None
-            else fresh
-        )
-        commit_state(merged, state_dir)
 
-    q = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        spark, source_dir, doc_schema, checkpoint_dir, apply_batch
     )
-    q.awaitTermination()
-    return q
 
 
 def incremental_hll_maintenance(
@@ -654,30 +638,17 @@ def incremental_hll_maintenance(
     """
     from ..operators.sketch import hll_registers
 
-    events = spark.readStream.schema(event_schema).parquet(source_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        fresh = hll_registers(batch_df, group_col, value_col, m=m)
-        current = read_state(spark, state_dir)
-        merged = (
-            current.unionByName(fresh)
-            .groupBy("grp", "reg")
-            .agg(F.max("mrho").alias("mrho"))
-            if current is not None
-            else fresh
+    def apply_batch(batch_df: DataFrame) -> None:
+        _merge_into(
+            spark,
+            state_dir,
+            hll_registers(batch_df, group_col, value_col, m=m),
+            _agg_merge(F.max, "mrho", "grp", "reg"),
         )
-        commit_state(merged, state_dir)
 
-    q = (
-        events.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        spark, source_dir, event_schema, checkpoint_dir, apply_batch
     )
-    q.awaitTermination()
-    return q
 
 
 def incremental_kmv_maintenance(
@@ -701,28 +672,17 @@ def incremental_kmv_maintenance(
     """
     from ..operators.sketch import kmv_merge_states, kmv_state
 
-    events = spark.readStream.schema(event_schema).parquet(source_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        fresh = kmv_state(batch_df, group_col, value_col, k=k)
-        current = read_state(spark, state_dir)
-        merged = (
-            kmv_merge_states(current, fresh, group_col, k=k)
-            if current is not None
-            else fresh
+    def apply_batch(batch_df: DataFrame) -> None:
+        _merge_into(
+            spark,
+            state_dir,
+            kmv_state(batch_df, group_col, value_col, k=k),
+            lambda cur, fresh: kmv_merge_states(cur, fresh, group_col, k=k),
         )
-        commit_state(merged, state_dir)
 
-    q = (
-        events.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        spark, source_dir, event_schema, checkpoint_dir, apply_batch
     )
-    q.awaitTermination()
-    return q
 
 
 def list_state_versions(state_dir: str) -> list[str]:
@@ -808,11 +768,7 @@ def incremental_markov_maintenance(
     """
     from pyspark.sql.window import Window
 
-    ev = spark.readStream.schema(event_schema).parquet(source_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def apply_batch(batch_df: DataFrame) -> None:
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         seq = batch_df.select(
             "user_id",
@@ -834,16 +790,12 @@ def incremental_markov_maintenance(
                 F.col("first_type").alias("dst"),
             )
             pairs = pairs.unionByName(boundary)
-        fresh = pairs.groupBy("src", "dst").agg(F.count("*").alias("n"))
-        cur = read_state(spark, counts_dir)
-        merged = (
-            cur.unionByName(fresh)
-            .groupBy("src", "dst")
-            .agg(F.sum("n").alias("n"))
-            if cur is not None
-            else fresh
+        _merge_into(
+            spark,
+            counts_dir,
+            pairs.groupBy("src", "dst").agg(F.count("*").alias("n")),
+            _agg_merge(F.sum, "n", "src", "dst"),
         )
-        commit_state(merged, counts_dir)
         wl = Window.partitionBy("user_id").orderBy(
             F.desc("ts"), F.desc("event_id")
         )
@@ -860,14 +812,9 @@ def incremental_markov_maintenance(
         )
         commit_state(new_carry, carry_dir)
 
-    q = (
-        ev.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        spark, source_dir, event_schema, checkpoint_dir, apply_batch
     )
-    q.awaitTermination()
-    return q
 
 def incremental_group_count_maintenance(
     spark: SparkSession,
@@ -888,27 +835,15 @@ def incremental_group_count_maintenance(
     Per batch: one map-side-combinable count of the BATCH, one
     |groups|-sized merge, one transactional snapshot commit.
     """
-    rows = spark.readStream.schema(row_schema).parquet(source_dir)
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        fresh = batch_df.groupBy(
-            F.col(group_col).alias("grp")
-        ).agg(F.count("*").alias("n"))
-        cur = read_state(spark, state_dir)
-        merged = (
-            cur.unionByName(fresh).groupBy("grp").agg(F.sum("n").alias("n"))
-            if cur is not None
-            else fresh
+    def apply_batch(batch_df: DataFrame) -> None:
+        _merge_into(
+            spark,
+            state_dir,
+            batch_df.groupBy(F.col(group_col).alias("grp")).agg(
+                F.count("*").alias("n")
+            ),
+            _agg_merge(F.sum, "n", "grp"),
         )
-        commit_state(merged, state_dir)
 
-    q = (
-        rows.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _maintain(spark, source_dir, row_schema, checkpoint_dir, apply_batch)
