@@ -257,3 +257,20 @@ def test_engine_seeded_from_source_frames_accepts_writes(spark, sf_dir):
     after = eng.stats()
     assert after["total_nodes"] == before["total_nodes"] + 1
     assert after["total_edges"] == before["total_edges"] + 1
+
+
+def test_encode_runs_no_spark_job(engine, spark_jobs):
+    # the row-local embedder folds into the one-row local relation, so
+    # the facade embeds a request string on the driver
+    from vector_graph_native_database__spark.functions.textfn import (
+        embed_hash_df,
+    )
+    from vector_graph_native_database__spark.session import local_frame
+
+    text = "Naïve  Σίσυφος\tİstanbul spark"
+    vec, jobs = spark_jobs(lambda: engine._encode(text))
+    assert jobs == 0
+    want = embed_hash_df(
+        local_frame(engine.spark, [("q", text)], "id string, text string")
+    ).collect()[0]["vector"]
+    assert vec == list(want)

@@ -90,21 +90,47 @@ def test_bm25_staged_scores_are_bit_identical_across_calls(spark):
     assert runs[0] and all(r == runs[0] for r in runs[1:])
 
 
-def test_graph_bfs_start_frame_is_local_table_scan(spark):
-    # the level-0 reached set is a JVM local relation, not a
-    # checkpointed Python RDD; the per-level frontiers stay
-    # checkpointed (their statistics keep the level joins broadcast)
+def test_graph_bfs_start_frame_is_local_table_scan(spark, monkeypatch):
+    # on the shuffle path (FRONTIER_CAP = 0: from level 1) the level-0
+    # reached set is a JVM local relation, not a checkpointed Python
+    # RDD; the per-level frontiers stay checkpointed (their statistics
+    # keep the level joins broadcast)
+    import re
+
+    from vector_graph_native_database__spark.operators import graph as graph_ops
+    from vector_graph_native_database__spark.registry.common import model
+
+    monkeypatch.setattr(graph_ops, "FRONTIER_CAP", 0)
+    _, _, edges = model(spark, SF)
+    p = plan_string(graph_ops.graph_bfs(edges, "0", 2))
+    assert re.search(
+        r"LocalTableScan \[id#\d+, distance#\d+, path_weight#\d+\]", p
+    ), p
+    assert "Scan ExistingRDD[id#" in p, "levels must stay checkpointed"
+
+
+def test_graph_bfs_below_cap_is_one_local_scan_per_level(spark, spark_jobs):
+    # below FRONTIER_CAP each level is one bounded collect of the
+    # frontier's out-edges and the whole result is a local relation: no
+    # join, no checkpoint, no probe. Spark's bounded collect scans one
+    # partition, then the rest, so it is one job on a one-partition
+    # edge frame and at most two on the three-partition model frame.
     import re
 
     from vector_graph_native_database__spark.operators.graph import graph_bfs
     from vector_graph_native_database__spark.registry.common import model
 
     _, _, edges = model(spark, SF)
-    p = plan_string(graph_bfs(edges, "0", 2))
-    assert re.search(
-        r"LocalTableScan \[id#\d+, distance#\d+, path_weight#\d+\]", p
-    ), p
-    assert "Scan ExistingRDD[id#" in p, "levels must stay checkpointed"
+    for parts, per_level in ((1, 1), (3, 2)):
+        e = edges.coalesce(parts).localCheckpoint(eager=True)
+        assert e.rdd.getNumPartitions() == parts
+        bfs, jobs = spark_jobs(lambda: graph_bfs(e, "0", 2))
+        p = plan_string(bfs).strip()
+        assert re.fullmatch(
+            r"LocalTableScan \[id#\d+, distance#\d+, path_weight#\d+\]", p
+        ), p
+        assert {r["distance"] for r in bfs.collect()} == {0, 1, 2}
+        assert jobs <= 2 * per_level, (parts, jobs)
 
 
 def test_bm25_topk_skips_outer_join_to_zero(spark):

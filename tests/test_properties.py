@@ -10,8 +10,9 @@ kept small because every example is a Spark round-trip.
 from __future__ import annotations
 
 import math
+from unittest import mock
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from vector_graph_native_database__spark.operators.bm25 import bm25_scores
 from vector_graph_native_database__spark.operators.crud import upsert
@@ -21,30 +22,39 @@ SETTINGS = dict(max_examples=8, deadline=None)
 
 # -- BFS ---------------------------------------------------------------------
 
+# Weights are finite floats (negative, zero, ±0.0) or NaN; sums follow
+# the same left-to-right order in every engine, so equality is exact.
+weight_strategy = st.one_of(
+    st.floats(-100, 100, allow_nan=False), st.just(math.nan)
+)
 edges_strategy = st.lists(
     st.tuples(
         st.integers(0, 5),  # src
-        st.integers(0, 5),  # dst
-        st.integers(1, 9),  # weight (ints keep float equality exact)
+        st.one_of(st.integers(0, 5), st.none()),  # dst (null allowed)
+        weight_strategy,
+        st.sampled_from("tu"),  # type
     ),
     min_size=0,
     max_size=12,
 )
+UNCAPPED = 2**31 - 2  # the largest cap Spark's limit(cap + 1) accepts
 
 
-def py_bfs(edges, start, depth):
+def py_bfs(edges, start, depth, edge_type=None):
     """Level-synchronous reference: per node min hop distance, max
-    accumulated weight among min-distance paths (SURVEY §4.8.4)."""
+    accumulated weight among min-distance paths (SURVEY §4.8.4), NaN
+    largest as in Spark's and DuckDB's max; null endpoints ignored."""
     best = {start: (0, 0.0)}
     frontier = {start: 0.0}
     for level in range(1, depth + 1):
         nxt: dict[str, float] = {}
         for src, w_acc in frontier.items():
-            for s, d, w in edges:
-                if str(s) == src:
+            for s, d, w, t in edges:
+                if str(s) == src and d is not None and edge_type in (None, t):
                     cand = w_acc + w
                     key = str(d)
-                    if key not in nxt or cand > nxt[key]:
+                    old = nxt.get(key)
+                    if old is None or math.isnan(cand) or cand > old:
                         nxt[key] = cand
         nxt = {k: v for k, v in nxt.items() if k not in best}
         if not nxt:
@@ -55,22 +65,123 @@ def py_bfs(edges, start, depth):
     return best
 
 
-@given(edges=edges_strategy, depth=st.integers(1, 4))
-@settings(**SETTINGS)
-def test_bfs_matches_level_synchronous_reference(spark, edges, depth):
-    rows = [
-        (f"e{i}", str(s), str(d), "t", float(w))
-        for i, (s, d, w) in enumerate(edges)
-    ]
-    edf = spark.createDataFrame(
-        rows or [("e0", "0", "0", "t", 0.0)][:0],
+def _edges_frame(spark, edges):
+    return spark.createDataFrame(
+        [
+            (f"e{i}", str(s), None if d is None else str(d), t, float(w))
+            for i, (s, d, w, t) in enumerate(edges)
+        ],
         "id string, src string, dst string, type string, weight double",
     )
-    got = {
-        r["id"]: (r["distance"], r["path_weight"])
-        for r in graph_bfs(edf, "0", depth).collect()
+
+
+def _canon(bfs: dict) -> dict:
+    return {
+        k: (d, "nan" if math.isnan(w) else w) for k, (d, w) in bfs.items()
     }
-    assert got == py_bfs(edges, "0", depth)
+
+
+def _duck_bfs(edges, start, depth, edge_type):
+    import duckdb
+    import pyarrow as pa
+
+    from vector_graph_native_database__spark.registry.common import (
+        sql_bfs_cte,
+    )
+
+    con = duckdb.connect()
+    con.register(
+        "edges",
+        pa.table({
+            "src": pa.array([str(s) for s, _, _, _ in edges], pa.string()),
+            "dst": pa.array(
+                [None if d is None else str(d) for _, d, _, _ in edges],
+                pa.string(),
+            ),
+            "type": pa.array([t for _, _, _, t in edges], pa.string()),
+            "weight": pa.array([float(w) for _, _, w, _ in edges], pa.float64()),
+        }),
+    )
+    sql = "WITH RECURSIVE __one AS (SELECT 1)" + sql_bfs_cte(
+        start, depth, edge_type
+    ) + "\nSELECT id, distance, path_weight FROM bfsr"
+    return {r[0]: (r[1], r[2]) for r in con.execute(sql).fetchall()}
+
+
+@given(
+    edges=edges_strategy,
+    depth=st.integers(1, 4),
+    edge_type=st.sampled_from([None, "t"]),
+)
+# null dst at every level; a NaN path beside a finite one; self-loop
+# and a multi-edge under the type filter
+@example([(0, None, 1.0, "t"), (0, 1, 1.0, "t"), (1, None, 2.0, "t")], 3, None)
+@example([(0, 1, 5.0, "t"), (0, 1, math.nan, "t"), (1, 2, -1.0, "t")], 2, None)
+@example([(0, 0, 3.0, "t"), (0, 1, 0.0, "u"), (0, 1, -0.0, "t")], 2, "t")
+@settings(**SETTINGS)
+def test_bfs_matches_level_synchronous_reference(spark, edges, depth, edge_type):
+    # the driver path (cap ∞), the shuffle path from level 1 (cap 0),
+    # the DuckDB twin and the pure-Python reference agree exactly
+    from vector_graph_native_database__spark.operators import graph as graph_ops
+
+    edf = _edges_frame(spark, edges)
+    got = {}
+    for cap in (0, UNCAPPED):
+        with mock.patch.object(graph_ops, "FRONTIER_CAP", cap):
+            got[cap] = _canon({
+                r["id"]: (r["distance"], r["path_weight"])
+                for r in graph_bfs(edf, "0", depth, edge_type).collect()
+            })
+    want = _canon(py_bfs(edges, "0", depth, edge_type))
+    assert got[0] == got[UNCAPPED] == want
+    assert _canon(_duck_bfs(edges, "0", depth, edge_type)) == want
+
+
+@given(edges=edges_strategy, depth=st.integers(1, 3))
+@settings(max_examples=4, deadline=None)
+def test_multi_source_bfs_kernels_match_per_source_bfs(spark, edges, depth):
+    # graph_bfs_multi and analytics.multi_source_bfs run the same
+    # kernel keyed by source; each slice equals that source's graph_bfs
+    from vector_graph_native_database__spark.operators import graph as graph_ops
+    from vector_graph_native_database__spark.operators.analytics import (
+        multi_source_bfs,
+    )
+
+    edf = _edges_frame(spark, edges)
+    starts = ["0", "1", "2"]
+    srcs = spark.createDataFrame([(s,) for s in starts], "id string")
+    single = {
+        (s, r["id"]): (r["distance"], r["path_weight"])
+        for s in starts
+        for r in graph_bfs(edf, s, depth).collect()
+    }
+    for cap in (0, UNCAPPED):
+        with mock.patch.object(graph_ops, "FRONTIER_CAP", cap):
+            multi = {
+                (r["qid"], r["id"]): (r["distance"], r["path_weight"])
+                for r in graph_ops.graph_bfs_multi(edf, starts, depth).collect()
+            }
+            hops = {
+                (r["root"], r["id"]): r["dist"]
+                for r in multi_source_bfs(edf, srcs, depth).collect()
+            }
+        assert _canon(multi) == _canon(single)
+        assert hops == {k: d for k, (d, _) in single.items()}
+
+
+@given(text=st.one_of(st.none(), st.text(max_size=40)))
+@settings(**SETTINGS)
+def test_embed_hash_column_is_bit_equal_to_embed_hash_df(spark, text):
+    from vector_graph_native_database__spark.functions.textfn import (
+        embed_hash,
+        embed_hash_df,
+    )
+    from vector_graph_native_database__spark.session import local_frame
+
+    row = local_frame(spark, [("q", text)], "id string, text string")
+    got = row.select(embed_hash("text").alias("v")).collect()[0]["v"]
+    want = embed_hash_df(row).collect()[0]["vector"]
+    assert got == want
 
 
 # -- BM25 --------------------------------------------------------------------

@@ -32,7 +32,7 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.textfn import EMBED_DIM, embed_hash_df
+from .functions.textfn import EMBED_DIM, embed_hash
 from .operators import crud
 from .operators.bm25 import bm25_topk
 from .operators.graph import graph_search as _graph_search
@@ -89,9 +89,11 @@ class VectorGraphEngine:
 
     def _encode(self, text: str) -> list[float]:
         """Hash-embed one text (the reference's auto-embedding)."""
-        row = embed_hash_df(
-            local_frame(self.spark, [("q", text)], "id string, text string")
-        ).collect()[0]
+        row = (
+            local_frame(self.spark, [(text,)], "text string")
+            .select(embed_hash("text").alias("vector"))
+            .collect()[0]
+        )
         return list(row["vector"])
 
     def _query_frame(self, text: str) -> DataFrame:

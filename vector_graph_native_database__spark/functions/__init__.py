@@ -1,5 +1,5 @@
 from .vectorfn import dot, l2_norm, l2_normalize, cosine, minmax_normalize
-from .textfn import tokenize, hash_bucket, embed_hash_df, EMBED_DIM
+from .textfn import tokenize, hash_bucket, embed_hash, embed_hash_df, EMBED_DIM
 
 __all__ = [
     "dot",
@@ -9,6 +9,7 @@ __all__ = [
     "minmax_normalize",
     "tokenize",
     "hash_bucket",
+    "embed_hash",
     "embed_hash_df",
     "EMBED_DIM",
 ]

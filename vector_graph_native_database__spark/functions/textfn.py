@@ -13,8 +13,9 @@ DuckDB, and any other engine can compute identically. Because
 dim=256 divides 2**8, the bucket only depends on hex chars 7-8 of the
 prefix, but we keep the full conv() form so any dim works.
 
-All of it is explode/groupBy/higher-order-function work — fully
-distributed, no UDFs, map-side partial aggregation on (id, bucket).
+``embed_hash_df`` is explode/groupBy/higher-order-function work —
+fully distributed, no UDFs, map-side partial aggregation on (id,
+bucket). ``embed_hash`` is its row-local twin for request strings.
 """
 
 from __future__ import annotations
@@ -35,6 +36,26 @@ def hash_bucket(tok: Column | str, dim: int = EMBED_DIM) -> Column:
     """Stable token→bucket hash: int(md5(tok)[:8], 16) % dim."""
     c = F.col(tok) if isinstance(tok, str) else tok
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long") % dim
+
+
+def embed_hash(text: Column | str, dim: int = EMBED_DIM) -> Column:
+    """Row-local twin of ``embed_hash_df``: text → L2-normalized
+    ``array<double>`` bucket counts (null text → zero vector).
+
+    Same tokens, buckets and normalization, so vectors are bit-equal;
+    no aggregate, so over a local relation the optimizer evaluates it
+    on the driver and a one-string encode runs no Spark job.
+    """
+    from .vectorfn import l2_normalize
+
+    c = F.col(text) if isinstance(text, str) else text
+    toks = tokenize(F.coalesce(c, F.lit("")))
+    buckets = F.transform(toks, lambda t: hash_bucket(t, dim))
+    counts = F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda i: F.size(F.filter(buckets, lambda b: b == i)).cast("double"),
+    )
+    return l2_normalize(counts)
 
 
 def embed_hash_df(

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_frame
+from .graph import _bfs_levels
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -927,36 +928,16 @@ def multi_source_bfs(
     every node it reaches within ``max_hops`` (directed, unweighted;
     multi-edges collapse).
 
-    All sources advance in the SAME frontier frame keyed (root, node)
-    — k sources cost one BFS whose frontier is at most k× wider, not
-    k sequential BFS jobs. Each round: frontier ⨝ adjacency on the
-    node key (one shuffle), then a min-dist merge into the visited
-    set; rounds are checkpointed so the plan stays linear in hops.
-    This is the sampled-source primitive closeness/betweenness
-    estimators build on at 100 TB, where all-pairs is off the table
-    and k fixed sources give the standard unbiased estimate.
+    All sources advance in the SAME frontier keyed by root (the
+    ``graph._bfs_levels`` kernel, weights ignored): k sources cost one
+    BFS, not k. This is the sampled-source primitive closeness
+    estimators build on, where all-pairs is off the table.
     """
-    adj = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
-    visited = sources.select(
-        F.col("id").alias("root"),
-        F.col("id").alias("node"),
-        F.lit(0).alias("dist"),
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(adj, frontier["node"] == adj["src"])
-            .select("root", F.col("dst").alias("node"), F.lit(hop).alias("dist"))
-            .distinct()
-        )
-        new = nxt.join(
-            visited.select("root", "node"), ["root", "node"], "left_anti"
-        ).localCheckpoint(eager=True)
-        if not new.take(1):
-            break
-        visited = visited.unionByName(new).localCheckpoint(eager=False)
-        frontier = new
-    return visited.select("root", F.col("node").alias("id"), "dist")
+    roots = {r["id"]: r["id"] for r in sources.select("id").collect()}
+    unweighted = edges.select("src", "dst", F.lit(0.0).alias("weight"))
+    return _bfs_levels(unweighted, roots, max_hops, None).select(
+        F.col("qid").alias("root"), "id", F.col("distance").alias("dist")
+    )
 
 
 def closeness_sampled(

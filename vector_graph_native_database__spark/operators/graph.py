@@ -21,30 +21,112 @@ Reference semantics (``GraphService``, ``/root/reference/app.py:498-642``):
 - ``graph_search`` (``app.py:591-642``): BFS → drop start from the
   node list → attach node details; induced edges kept separately.
 
-Spark shape: a driver-side loop of ≤depth frontier-expansion joins —
-the one place the engine keeps imperative control flow, because
-Catalyst has no fixpoint operator and the iteration count is a small
-data-independent constant. Each level: frontier ⨝ edges on ``src``
-(shuffle on the join key), per-node max-weight aggregate, anti-join
-against the reached set, ``localCheckpoint`` to cut lineage. This is
-textbook level-synchronous Pregel expressed as joins; at cluster
-scale each level is one co-partitioned shuffle, and the reached set
-stays distributed (never collected to the driver).
-
-The start frame (the level-0 reached set) is a JVM local relation
-built on the driver (``session.local_frame``): it has no lineage to
-cut, so it is not checkpointed, and it runs no Python-worker tasks.
-The per-level checkpoints stay — they hand the planner the frontier's
-real size, which keeps the next level's join a broadcast; one lazy
-plan over all levels turns those joins into shuffles and is slower.
+Spark shape: one driver-side level loop, ``_bfs_levels``, serves
+``graph_bfs``, ``graph_bfs_multi`` and ``analytics.multi_source_bfs``
+(Catalyst has no fixpoint operator). It picks each level's join shape
+from the size of the active set, as Pregelix does. While a level's
+out-edges fit under ``FRONTIER_CAP`` the reached set stays on the
+driver: the level is one bounded collect of
+``edges.filter(src IN <frontier ids>)`` (also the emptiness probe),
+the per-(qid, id) max and the anti-join run on the collected rows,
+and the result is a JVM local relation — a few ids per level cost one
+scan instead of a shuffle join, an aggregate, an anti-join, an eager
+checkpoint and a probe. Out-edges that do not fit may not fit on the
+driver either, so from that level on the loop runs as joins that
+never collect: frontier ⨝ edges on ``src``, max aggregate, anti-join,
+eager ``localCheckpoint`` (its statistics keep the next join a
+broadcast) and a ``take(1)`` probe. Both paths ignore edges with a
+null endpoint, as ``sql_bfs_cte`` does.
 """
 
 from __future__ import annotations
+
+import math
+from collections import defaultdict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_frame
+
+FRONTIER_CAP = 10_000
+"""Most out-edges a BFS level collects to the driver; from the first
+level with more, the loop runs on the shuffle path."""
+
+_BFS_DDL = "id string, distance int, path_weight double, qid string"
+
+
+def _bfs_levels(
+    edges: DataFrame,
+    starts: dict[str, str],
+    depth: int,
+    edge_type: str | None,
+) -> DataFrame:
+    """Level-synchronous BFS from each ``starts`` entry (qid → start
+    id) → (id, distance, path_weight, qid).
+
+    Per qid: the start is present with (0, 0.0); a node first reached
+    at level L gets distance L and the max path weight among its
+    length-L paths (NaN counts as largest, as in Spark's ``max``). The
+    key column comes last so a single-source caller projects it away.
+    """
+    spark = edges.sparkSession
+    e = edges
+    if edge_type is not None:
+        e = e.filter(F.col("type") == edge_type)
+    e = e.filter(F.col("src").isNotNull() & F.col("dst").isNotNull()).select(
+        "src", "dst", F.coalesce("weight", F.lit(0.0)).alias("weight")
+    )
+
+    reached = {(q, s): (0, 0.0) for q, s in starts.items()}
+    frontier = {key: 0.0 for key in reached}
+    level = 1
+    while level <= depth and frontier:
+        ids = {i for _, i in frontier}
+        out = e.filter(F.col("src").isin(ids)).limit(FRONTIER_CAP + 1).collect()
+        if len(out) > FRONTIER_CAP:
+            break
+        by_src = defaultdict(list)
+        for src, dst, w in out:
+            by_src[src].append((dst, w))
+        new: dict[tuple[str, str], float] = {}
+        for (q, i), pw in frontier.items():
+            for dst, w in by_src[i]:
+                key, cand, old = (q, dst), pw + w, new.get((q, dst))
+                if key not in reached and (
+                    old is None or math.isnan(cand) or cand > old
+                ):
+                    new[key] = cand
+        reached.update((key, (level, pw)) for key, pw in new.items())
+        frontier, level = new, level + 1
+
+    reached_df = local_frame(
+        spark, [(i, d, w, q) for (q, i), (d, w) in reached.items()], _BFS_DDL
+    )
+    if not frontier:
+        return reached_df
+    frontier_df = reached_df.filter(F.col("distance") == level - 1)
+    for level in range(level, depth + 1):
+        candidates = (
+            frontier_df.join(e, frontier_df["id"] == e["src"])
+            .select(
+                "qid",
+                e["dst"].alias("id"),
+                (frontier_df["path_weight"] + e["weight"]).alias("w"),
+            )
+            .groupBy("qid", "id")
+            .agg(F.max("w").alias("path_weight"))
+            .withColumn("distance", F.lit(level))
+        )
+        new_df = candidates.join(reached_df, ["qid", "id"], "left_anti").select(
+            "id", "distance", "path_weight", "qid"
+        )
+        new_df = new_df.localCheckpoint(eager=True)
+        if not new_df.take(1):
+            break
+        reached_df = reached_df.unionByName(new_df)
+        frontier_df = new_df
+    return reached_df
 
 
 def graph_bfs(
@@ -59,40 +141,9 @@ def graph_bfs(
     reached at level L get distance L and the max path weight among
     their length-L paths from the start.
     """
-    spark = edges.sparkSession
-    e = edges
-    if edge_type is not None:
-        e = e.filter(F.col("type") == edge_type)
-    e = e.select("src", "dst", F.coalesce("weight", F.lit(0.0)).alias("weight"))
-
-    reached = local_frame(
-        spark,
-        [(start_id, 0, 0.0)],
-        "id string, distance int, path_weight double",
+    return _bfs_levels(edges, {start_id: start_id}, depth, edge_type).select(
+        "id", "distance", "path_weight"
     )
-    frontier = reached
-
-    for level in range(1, depth + 1):
-        candidates = (
-            frontier.join(e, frontier["id"] == e["src"])
-            .select(
-                e["dst"].alias("id"),
-                (frontier["path_weight"] + e["weight"]).alias("w"),
-            )
-            .groupBy("id")
-            .agg(F.max("w").alias("path_weight"))
-            .withColumn("distance", F.lit(level))
-        )
-        new = candidates.join(reached, "id", "left_anti").select(
-            "id", "distance", "path_weight"
-        )
-        new = new.localCheckpoint(eager=True)
-        if not new.take(1):
-            break
-        reached = reached.unionByName(new)
-        frontier = new
-
-    return reached
 
 
 def graph_score(
@@ -171,46 +222,10 @@ def graph_bfs_multi(
     start — the batched-serving twin of graph_bfs.
 
     The frontier carries the source id as just another key column,
-    so Q concurrent traversals cost the SAME number of shuffles as
-    one (each level is one frontier⨝edges join keyed by src + one
-    (qid, id) max-aggregate); state grows only with the union of the
-    depth-balls. This is how a serving tier amortizes graph scoring
-    across a query batch at 100 TB — never one iterative job per
-    query."""
-    spark = edges.sparkSession
-    e = edges
-    if edge_type is not None:
-        e = e.filter(F.col("type") == edge_type)
-    e = e.select(
-        "src", "dst", F.coalesce("weight", F.lit(0.0)).alias("weight")
-    )
-
-    reached = local_frame(
-        spark,
-        [(s, s, 0, 0.0) for s in start_ids],
-        "qid string, id string, distance int, path_weight double",
-    )
-    frontier = reached
-
-    for level in range(1, depth + 1):
-        candidates = (
-            frontier.join(e, frontier["id"] == e["src"])
-            .select(
-                "qid",
-                e["dst"].alias("id"),
-                (frontier["path_weight"] + e["weight"]).alias("w"),
-            )
-            .groupBy("qid", "id")
-            .agg(F.max("w").alias("path_weight"))
-            .withColumn("distance", F.lit(level))
-        )
-        new = candidates.join(
-            reached, ["qid", "id"], "left_anti"
-        ).select("qid", "id", "distance", "path_weight")
-        new = new.localCheckpoint(eager=True)
-        if not new.take(1):
-            break
-        reached = reached.unionByName(new)
-        frontier = new
-
-    return reached
+    so Q concurrent traversals cost the SAME number of jobs as one;
+    state grows only with the union of the depth-balls. This is how a
+    serving tier amortizes graph scoring across a query batch — never
+    one iterative job per query."""
+    return _bfs_levels(
+        edges, {s: s for s in start_ids}, depth, edge_type
+    ).select("qid", "id", "distance", "path_weight")

@@ -199,7 +199,7 @@ def hybrid_search_multi(
     side scores ALL queries in one pass over the embeddings scan
     (|Q|-row broadcast of query vectors, per-qid min-max from one
     grouped aggregate), and the graph side runs ONE multi-source BFS
-    (graph_bfs_multi — Q traversals for the shuffle count of one).
+    (graph_bfs_multi — Q traversals for the job count of one).
     Per-query top-k is a rank window over the fused frame. The
     BM25 twin of this shape is bm25_topk_multi; this completes the
     batched-serving story for the §2.5 flagship."""

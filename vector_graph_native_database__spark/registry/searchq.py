@@ -599,7 +599,7 @@ def q_hybrid_search_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector side and the graph traversal from its own node) answered
     in ONE plan — one embeddings pass scores all query vectors, one
     multi-source BFS covers all traversals (Q traversals for the
-    shuffle count of one; see operators/hybrid.hybrid_search_multi
+    job count of one; see operators/hybrid.hybrid_search_multi
     and operators/graph.graph_bfs_multi). Per-query semantics are
     byte-identical to hybrid_search (reference app.py:657-736
     including the final>0 drop); the oracle replays each query's
