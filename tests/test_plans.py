@@ -133,6 +133,43 @@ def test_graph_bfs_below_cap_is_one_local_scan_per_level(spark, spark_jobs):
         assert jobs <= 2 * per_level, (parts, jobs)
 
 
+def test_bfs_driver_state_stays_under_cap(spark, monkeypatch):
+    # the cap bounds driver work, not only collected edges: a start set
+    # over the cap never enters the driver loop (its sources are read
+    # only up to cap + 1), and a level whose (qid, out-edge) pairs push
+    # the reached set over the cap hands over to the shuffle path
+    from vector_graph_native_database__spark.operators import graph as graph_ops
+    from vector_graph_native_database__spark.operators.analytics import (
+        multi_source_bfs,
+    )
+
+    levels = []
+    src_in = graph_ops._src_in
+    monkeypatch.setattr(
+        graph_ops, "_src_in", lambda ids: levels.append(ids) or src_in(ids)
+    )
+    monkeypatch.setattr(graph_ops, "FRONTIER_CAP", 4)
+    star = spark.createDataFrame(
+        [(f"e{i}", "0", str(i), "t", 1.0) for i in range(1, 5)]
+        + [("f", "1", "6", "t", 1.0)],
+        "id string, src string, dst string, type string, weight double",
+    )
+    roots = spark.createDataFrame([(str(i),) for i in range(6)], "id string")
+    hops = multi_source_bfs(star, roots, 2)
+    assert levels == []
+    assert "Scan ExistingRDD" in plan_string(hops)
+    assert hops.count() == 6 + 4 + 1 + 1
+
+    bfs = graph_ops.graph_bfs(star, "0", 2)
+    # level 1's 4 out-edges fit, but it folds 4 pairs into a reached
+    # set of 1: 1 + 4 > 4
+    assert levels == [{"0"}]
+    assert "Scan ExistingRDD" in plan_string(bfs)
+    assert {r["id"]: r["distance"] for r in bfs.collect()} == {
+        "0": 0, "1": 1, "2": 1, "3": 1, "4": 1, "6": 2
+    }
+
+
 def test_bm25_topk_skips_outer_join_to_zero(spark):
     # the positive filter makes the outer join dead weight; guard that
     # the top-k path never reintroduces it

@@ -121,19 +121,20 @@ def _duck_bfs(edges, start, depth, edge_type):
 @settings(**SETTINGS)
 def test_bfs_matches_level_synchronous_reference(spark, edges, depth, edge_type):
     # the driver path (cap ∞), the shuffle path from level 1 (cap 0),
-    # the DuckDB twin and the pure-Python reference agree exactly
+    # a switch between them mid-run (cap 3), the DuckDB twin and the
+    # pure-Python reference agree exactly
     from vector_graph_native_database__spark.operators import graph as graph_ops
 
     edf = _edges_frame(spark, edges)
     got = {}
-    for cap in (0, UNCAPPED):
+    for cap in (0, 3, UNCAPPED):
         with mock.patch.object(graph_ops, "FRONTIER_CAP", cap):
             got[cap] = _canon({
                 r["id"]: (r["distance"], r["path_weight"])
                 for r in graph_bfs(edf, "0", depth, edge_type).collect()
             })
     want = _canon(py_bfs(edges, "0", depth, edge_type))
-    assert got[0] == got[UNCAPPED] == want
+    assert got[0] == got[3] == got[UNCAPPED] == want
     assert _canon(_duck_bfs(edges, "0", depth, edge_type)) == want
 
 
@@ -141,32 +142,56 @@ def test_bfs_matches_level_synchronous_reference(spark, edges, depth, edge_type)
 @settings(max_examples=4, deadline=None)
 def test_multi_source_bfs_kernels_match_per_source_bfs(spark, edges, depth):
     # graph_bfs_multi and analytics.multi_source_bfs run the same
-    # kernel keyed by source; each slice equals that source's graph_bfs
+    # kernel keyed by source; each slice equals that source's graph_bfs.
+    # Caps 0 and 4 hold fewer than the six roots, so the roots start on
+    # the shuffle path (multi_source_bfs collects at most cap + 1 of
+    # them); cap 8 switches mid-run. A repeated root collapses.
     from vector_graph_native_database__spark.operators import graph as graph_ops
     from vector_graph_native_database__spark.operators.analytics import (
         multi_source_bfs,
     )
 
     edf = _edges_frame(spark, edges)
-    starts = ["0", "1", "2"]
-    srcs = spark.createDataFrame([(s,) for s in starts], "id string")
+    starts = ["0", "1", "2", "3", "4", "5"]
+    srcs = spark.createDataFrame([(s,) for s in starts + ["0"]], "id string")
     single = {
         (s, r["id"]): (r["distance"], r["path_weight"])
         for s in starts
         for r in graph_bfs(edf, s, depth).collect()
     }
-    for cap in (0, UNCAPPED):
+    for cap in (0, 4, 8, UNCAPPED):
         with mock.patch.object(graph_ops, "FRONTIER_CAP", cap):
             multi = {
                 (r["qid"], r["id"]): (r["distance"], r["path_weight"])
                 for r in graph_ops.graph_bfs_multi(edf, starts, depth).collect()
             }
-            hops = {
-                (r["root"], r["id"]): r["dist"]
-                for r in multi_source_bfs(edf, srcs, depth).collect()
+            rows = multi_source_bfs(edf, srcs, depth).collect()
+        hops = {(r["root"], r["id"]): r["dist"] for r in rows}
+        assert _canon(multi) == _canon(single), cap
+        assert hops == {k: d for k, (d, _) in single.items()}, cap
+        assert len(rows) == len(hops), cap
+
+
+def test_bfs_frontier_filter_quotes_any_id(spark):
+    # the level filter is one parsed SQL IN list; ids with quotes,
+    # backslashes and escape-like text must reach exactly themselves
+    from vector_graph_native_database__spark.operators import graph as graph_ops
+
+    ids = ["a'b", "c\\d", "\\'", "x\\u0041", "naïve Σ", "t\tn\n", "''"]
+    chain = [(s, d, 1.0, "t") for s, d in zip(ids, ids[1:])]
+    edf = spark.createDataFrame(
+        [(f"e{i}", s, d, t, w) for i, (s, d, w, t) in enumerate(chain)]
+        + [("x", "x\\u0041", "A", "t", 1.0)],
+        "id string, src string, dst string, type string, weight double",
+    )
+    want = {i: (d, float(d)) for d, i in enumerate(ids)}
+    for cap in (0, UNCAPPED):
+        with mock.patch.object(graph_ops, "FRONTIER_CAP", cap):
+            got = {
+                r["id"]: (r["distance"], r["path_weight"])
+                for r in graph_bfs(edf, ids[0], len(ids)).collect()
             }
-        assert _canon(multi) == _canon(single)
-        assert hops == {k: d for k, (d, _) in single.items()}
+        assert got == {**want, "A": (4, 4.0)}, cap
 
 
 @given(text=st.one_of(st.none(), st.text(max_size=40)))

@@ -15,7 +15,13 @@ prefix, but we keep the full conv() form so any dim works.
 
 ``embed_hash_df`` is explode/groupBy/higher-order-function work —
 fully distributed, no UDFs, map-side partial aggregation on (id,
-bucket). ``embed_hash`` is its row-local twin for request strings.
+bucket). ``embed_hash`` is its row-local twin for request strings
+only: over the sf0.1 corpus (5 000 docs, 54 tokens on average, one
+partition, 4 vCPUs) ``embed_hash_df`` took 3.5-5.6 s and
+``embed_hash`` 187 s. Spark interprets higher-order functions and
+re-evaluates the bucket array for each of the 256 dimensions; even
+with the buckets materialized first in their own column the row-local
+form took 6.8-7.2 s.
 """
 
 from __future__ import annotations
@@ -44,7 +50,9 @@ def embed_hash(text: Column | str, dim: int = EMBED_DIM) -> Column:
 
     Same tokens, buckets and normalization, so vectors are bit-equal;
     no aggregate, so over a local relation the optimizer evaluates it
-    on the driver and a one-string encode runs no Spark job.
+    on the driver and a one-string encode runs no Spark job. Cost is
+    dim × tokens interpreted evaluations per row: for request strings,
+    not corpora (module docstring).
     """
     from .vectorfn import l2_normalize
 

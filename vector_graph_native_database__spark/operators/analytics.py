@@ -933,7 +933,7 @@ def multi_source_bfs(
     BFS, not k. This is the sampled-source primitive closeness
     estimators build on, where all-pairs is off the table.
     """
-    roots = {r["id"]: r["id"] for r in sources.select("id").collect()}
+    roots = sources.select(F.col("id").alias("qid"), "id")
     unweighted = edges.select("src", "dst", F.lit(0.0).alias("weight"))
     return _bfs_levels(unweighted, roots, max_hops, None).select(
         F.col("qid").alias("root"), "id", F.col("distance").alias("dist")

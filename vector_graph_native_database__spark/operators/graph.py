@@ -25,18 +25,19 @@ Spark shape: one driver-side level loop, ``_bfs_levels``, serves
 ``graph_bfs``, ``graph_bfs_multi`` and ``analytics.multi_source_bfs``
 (Catalyst has no fixpoint operator). It picks each level's join shape
 from the size of the active set, as Pregelix does. While a level's
-out-edges fit under ``FRONTIER_CAP`` the reached set stays on the
+driver work — reached (qid, id) pairs plus the (qid, out-edge) pairs
+it folds — fits under ``FRONTIER_CAP``, the reached set stays on the
 driver: the level is one bounded collect of
 ``edges.filter(src IN <frontier ids>)`` (also the emptiness probe),
-the per-(qid, id) max and the anti-join run on the collected rows,
-and the result is a JVM local relation — a few ids per level cost one
-scan instead of a shuffle join, an aggregate, an anti-join, an eager
-checkpoint and a probe. Out-edges that do not fit may not fit on the
-driver either, so from that level on the loop runs as joins that
-never collect: frontier ⨝ edges on ``src``, max aggregate, anti-join,
-eager ``localCheckpoint`` (its statistics keep the next join a
-broadcast) and a ``take(1)`` probe. Both paths ignore edges with a
-null endpoint, as ``sql_bfs_cte`` does.
+the max and the anti-join run on the collected rows, and the result
+is a JVM local relation — one scan instead of a shuffle join, an
+aggregate, an anti-join, an eager checkpoint and a probe. Work over
+the cap may not fit on the driver, so from that level on (from level
+1 when the starts alone exceed it) the loop runs as joins that never
+collect: frontier ⨝ edges on ``src``, max aggregate, anti-join, eager
+``localCheckpoint`` (its statistics keep the next join a broadcast)
+and a ``take(1)`` probe. Both paths ignore edges with a null
+endpoint, as ``sql_bfs_cte`` does.
 """
 
 from __future__ import annotations
@@ -44,26 +45,40 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_frame
 
-FRONTIER_CAP = 10_000
-"""Most out-edges a BFS level collects to the driver; from the first
-level with more, the loop runs on the shuffle path."""
+FRONTIER_CAP = 20_000
+"""Most driver work a BFS level may take; below the driver/shuffle
+crossover measured on sampled closeness (SCALING.md §Graph)."""
 
 _BFS_DDL = "id string, distance int, path_weight double, qid string"
+_STARTS_DDL = "qid string, id string"
+
+
+def _src_in(ids: set[str | None]) -> Column:
+    """``src IN (<ids>)`` parsed from one SQL string: ``isin`` makes one
+    JVM call per literal (about 0.5 ms each, 2 s for 5 000 ids). Null
+    ids never match, so they are left out."""
+    lits = [
+        "'" + i.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        for i in ids
+        if i is not None
+    ]
+    return F.expr(f"src IN ({','.join(lits)})") if lits else F.lit(False)
 
 
 def _bfs_levels(
     edges: DataFrame,
-    starts: dict[str, str],
+    starts: dict[str, str] | DataFrame,
     depth: int,
     edge_type: str | None,
 ) -> DataFrame:
-    """Level-synchronous BFS from each ``starts`` entry (qid → start
-    id) → (id, distance, path_weight, qid).
+    """Level-synchronous BFS from each start (qid → start id, or a
+    (qid, id) frame too large to collect) → (id, distance,
+    path_weight, qid).
 
     Per qid: the start is present with (0, 0.0); a node first reached
     at level L gets distance L and the max path weight among its
@@ -78,33 +93,50 @@ def _bfs_levels(
         "src", "dst", F.coalesce("weight", F.lit(0.0)).alias("weight")
     )
 
-    reached = {(q, s): (0, 0.0) for q, s in starts.items()}
-    frontier = {key: 0.0 for key in reached}
+    if isinstance(starts, DataFrame):
+        few = starts.limit(FRONTIER_CAP + 1).collect()
+        starts = dict(few) if len(few) <= FRONTIER_CAP else starts.distinct()
+    elif len(starts) > FRONTIER_CAP:
+        starts = local_frame(spark, list(starts.items()), _STARTS_DDL)
     level = 1
-    while level <= depth and frontier:
-        ids = {i for _, i in frontier}
-        out = e.filter(F.col("src").isin(ids)).limit(FRONTIER_CAP + 1).collect()
-        if len(out) > FRONTIER_CAP:
-            break
-        by_src = defaultdict(list)
-        for src, dst, w in out:
-            by_src[src].append((dst, w))
-        new: dict[tuple[str, str], float] = {}
-        for (q, i), pw in frontier.items():
-            for dst, w in by_src[i]:
-                key, cand, old = (q, dst), pw + w, new.get((q, dst))
-                if key not in reached and (
-                    old is None or math.isnan(cand) or cand > old
-                ):
-                    new[key] = cand
-        reached.update((key, (level, pw)) for key, pw in new.items())
-        frontier, level = new, level + 1
+    if isinstance(starts, DataFrame):
+        zero = (F.lit(0).alias("distance"), F.lit(0.0).alias("path_weight"))
+        reached_df = starts.select("id", *zero, "qid")
+    else:
+        reached = {(q, s): (0, 0.0) for q, s in starts.items()}
+        frontier = dict.fromkeys(reached, 0.0)
+        while level <= depth and frontier:
+            out = e.filter(_src_in({i for _, i in frontier}))
+            out = out.limit(FRONTIER_CAP + 1)
+            by_src = defaultdict(list)
+            for src, dst, w in out.collect():
+                by_src[src].append((dst, w))
+            # driver work: the reached set plus every (qid, out-edge)
+            # pair this level folds; it also bounds the collect above
+            pairs = sum(len(by_src[i]) for _, i in frontier)
+            if len(reached) + pairs > FRONTIER_CAP:
+                break
+            new: dict[tuple[str, str], float] = {}
+            for (q, i), pw in frontier.items():
+                for dst, w in by_src[i]:
+                    key, cand, old = (q, dst), pw + w, new.get((q, dst))
+                    if key not in reached and (
+                        old is None or math.isnan(cand) or cand > old
+                    ):
+                        new[key] = cand
+            reached.update((key, (level, pw)) for key, pw in new.items())
+            frontier, level = new, level + 1
+        reached_df = local_frame(
+            spark,
+            [(i, d, w, q) for (q, i), (d, w) in reached.items()],
+            _BFS_DDL,
+        )
+        if not frontier or level > depth:
+            return reached_df
+        # each shuffle level scans it twice; a local relation would be
+        # shipped with every task
+        reached_df = reached_df.localCheckpoint(eager=True)
 
-    reached_df = local_frame(
-        spark, [(i, d, w, q) for (q, i), (d, w) in reached.items()], _BFS_DDL
-    )
-    if not frontier:
-        return reached_df
     frontier_df = reached_df.filter(F.col("distance") == level - 1)
     for level in range(level, depth + 1):
         candidates = (
