@@ -25,6 +25,13 @@ def verts_df(spark, ids):
     return spark.createDataFrame([(i,) for i in ids], "id string")
 
 
+def _edges(spark, pairs):
+    return spark.createDataFrame(
+        [(a, b, "t", 1.0) for a, b in pairs],
+        "src string, dst string, type string, weight double",
+    )
+
+
 def test_degrees(spark):
     e = edges_df(
         spark,
@@ -366,3 +373,99 @@ def test_betweenness_hop_truncation(spark):
     }
     # only paths of length ≤2 count: node 1 mediates one 2-hop path
     assert got["1"] == 1.0 and got["2"] == 0.0
+
+
+def test_personalized_pagerank_mass_and_locality(spark):
+    # chain s -> a -> b plus far pair (c -> d) unreachable from s
+    verts = spark.createDataFrame(
+        [(v,) for v in ["s", "a", "b", "c", "d"]], "id string"
+    )
+    ranks = {
+        r["id"]: r["rank"]
+        for r in pagerank(
+            verts, _edges(spark, [("s", "a"), ("a", "b"), ("c", "d")]),
+            iterations=40, source="s",
+        ).collect()
+    }
+    assert abs(sum(ranks.values()) - 1.0) < 1e-9  # mass conserved
+    # fixpoint: r_s = 0.15 + 0.7225*0.85*r_s -> 0.3886, then *0.85/hop
+    assert abs(ranks["s"] - 0.3886) < 2e-3
+    assert ranks["s"] > ranks["a"] > ranks["b"]  # decays along the walk
+    assert ranks["c"] == 0.0 and ranks["d"] == 0.0  # unreachable gets none
+
+
+def test_scc_bounded_cycles_within_and_beyond_bound(spark):
+    from vector_graph_native_database__spark.operators.analytics import (
+        scc_bounded,
+    )
+
+    # 3-cycle a->b->c->a (diameter 2 <= 3), 2-cycle x<->y, a directed
+    # path p->q (no cycle), a 5-cycle (length 5 <= 2*3: witness pairs
+    # exist, CC merges it), and a 7-cycle (length 7 > 2*3: no witness
+    # pair at all — the bounded contract leaves every node singleton
+    # rather than mislabeling).
+    pairs = [
+        ("a", "b"), ("b", "c"), ("c", "a"),
+        ("x", "y"), ("y", "x"),
+        ("p", "q"),
+        ("v1", "v2"), ("v2", "v3"), ("v3", "v4"), ("v4", "v5"),
+        ("v5", "v1"),
+        ("w1", "w2"), ("w2", "w3"), ("w3", "w4"), ("w4", "w5"),
+        ("w5", "w6"), ("w6", "w7"), ("w7", "w1"),
+    ]
+    ids = sorted({n for p in pairs for n in p})
+    verts = spark.createDataFrame([(i,) for i in ids], "id string")
+    got = {
+        r["id"]: r["scc_id"]
+        for r in scc_bounded(verts, _edges(spark, pairs), max_hops=3).collect()
+    }
+    assert got["a"] == got["b"] == got["c"] == "a"
+    assert got["x"] == got["y"] == "x"
+    assert got["p"] == "p" and got["q"] == "q"
+    assert all(got[f"v{i}"] == "v1" for i in range(1, 6))
+    assert all(got[f"w{i}"] == f"w{i}" for i in range(1, 8))
+    # raising the bound past the 7-cycle's half-length merges it too
+    got4 = {
+        r["id"]: r["scc_id"]
+        for r in scc_bounded(verts, _edges(spark, pairs), max_hops=4).collect()
+    }
+    assert all(got4[f"w{i}"] == "w1" for i in range(1, 8))
+
+
+def test_walk_counts_path_graph(spark):
+    from vector_graph_native_database__spark.operators.analytics import (
+        walk_counts,
+    )
+
+    # path 1->2->3->4->5: walks of length h = max(0, 5-h) starts
+    nodes = spark.createDataFrame([(str(i),) for i in range(1, 6)], "id string")
+    edges = spark.createDataFrame(
+        [(str(i), str(i + 1)) for i in range(1, 5)], "src string, dst string"
+    )
+    got = {
+        r.hop: (r.n_active, r.total_walks)
+        for r in walk_counts(nodes, edges, hops=4).collect()
+    }
+    assert got == {1: (4, 4), 2: (3, 3), 3: (2, 2), 4: (1, 1)}
+
+
+def test_katz_bounded_exact_on_path(spark):
+    from vector_graph_native_database__spark.operators.analytics import (
+        katz_bounded,
+    )
+
+    # path 1->2->3->4->5, reversed walks end AT each node:
+    # node 5 receives in-walks of length 1..4 -> katz = .1+.01+.001+.0001
+    nodes = spark.createDataFrame(
+        [(str(i),) for i in range(1, 6)], "id string"
+    )
+    edges = spark.createDataFrame(
+        [(str(i), str(i + 1)) for i in range(1, 5)],
+        "src string, dst string",
+    )
+    got = {r.id: r.katz for r in katz_bounded(nodes, edges, hops=4).collect()}
+    assert got["1"] == 0.0
+    assert got["2"] == 0.1
+    assert got["3"] == 0.11
+    assert got["4"] == 0.111
+    assert got["5"] == 0.1111

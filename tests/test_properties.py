@@ -10,6 +10,7 @@ kept small because every example is a Spark round-trip.
 from __future__ import annotations
 
 import math
+import string
 from unittest import mock
 
 from hypothesis import example, given, settings, strategies as st
@@ -207,6 +208,30 @@ def test_embed_hash_column_is_bit_equal_to_embed_hash_df(spark, text):
     got = row.select(embed_hash("text").alias("v")).collect()[0]["v"]
     want = embed_hash_df(row).collect()[0]["vector"]
     assert got == want
+
+
+WHITESPACE = "".join(c for c in map(chr, range(0x110000)) if c.isspace())
+
+
+@given(text=st.text(alphabet=string.ascii_letters + WHITESPACE, max_size=40))
+@example("a\xa0b\u3000c\x1cd\x85e\u2003f")
+@example("\va\vB\v")
+@example("a\u180eb\u200bc\ufeffd\u2060e")  # format chars: no split
+@settings(**SETTINGS)
+def test_tokenizers_split_like_str_split(spark, text):
+    """``tokenize`` (Spark) and its DuckDB twin ``SQL_TOKENS`` both
+    split where ``str.split()`` does: on every ``isspace()`` character."""
+    import duckdb
+
+    from vector_graph_native_database__spark.functions.textfn import tokenize
+    from vector_graph_native_database__spark.registry.common import SQL_TOKENS
+    from vector_graph_native_database__spark.session import local_frame
+
+    want = text.lower().split()
+    row = local_frame(spark, [(text,)], "text string")
+    assert row.select(tokenize("text").alias("t")).collect()[0]["t"] == want
+    sql = f"SELECT {SQL_TOKENS.format(col='?')}"
+    assert duckdb.connect().execute(sql, [text]).fetchone()[0] == want
 
 
 # -- BM25 --------------------------------------------------------------------

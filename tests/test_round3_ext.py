@@ -158,29 +158,6 @@ def test_mad_outlier_registry_entry(spark):
     assert all(r["n_outliers"] < 0.1 * r["n"] for r in rows)
 
 
-def test_personalized_pagerank_mass_and_locality(spark):
-    from vector_graph_native_database__spark.operators.analytics import (
-        personalized_pagerank,
-    )
-
-    # chain s -> a -> b plus far pair (c -> d) unreachable from s
-    verts = spark.createDataFrame(
-        [(v,) for v in ["s", "a", "b", "c", "d"]], "id string"
-    )
-    ranks = {
-        r["id"]: r["rank"]
-        for r in personalized_pagerank(
-            verts, _edges(spark, [("s", "a"), ("a", "b"), ("c", "d")]),
-            source="s", iterations=40,
-        ).collect()
-    }
-    assert abs(sum(ranks.values()) - 1.0) < 1e-9  # mass conserved
-    # fixpoint: r_s = 0.15 + 0.7225*0.85*r_s -> 0.3886, then *0.85/hop
-    assert abs(ranks["s"] - 0.3886) < 2e-3
-    assert ranks["s"] > ranks["a"] > ranks["b"]  # decays along the walk
-    assert ranks["c"] == 0.0 and ranks["d"] == 0.0  # unreachable gets none
-
-
 def test_modularity_two_cliques_with_bridge(spark):
     from vector_graph_native_database__spark.operators.analytics import (
         modularity,

@@ -283,44 +283,6 @@ def test_bm25_topk_multi_matches_single_query(spark, sf_dir):
     assert len(single) > 0
 
 
-def test_scc_bounded_cycles_within_and_beyond_bound(spark):
-    from vector_graph_native_database__spark.operators.analytics import (
-        scc_bounded,
-    )
-
-    # 3-cycle a->b->c->a (diameter 2 <= 3), 2-cycle x<->y, a directed
-    # path p->q (no cycle), a 5-cycle (length 5 <= 2*3: witness pairs
-    # exist, CC merges it), and a 7-cycle (length 7 > 2*3: no witness
-    # pair at all — the bounded contract leaves every node singleton
-    # rather than mislabeling).
-    pairs = [
-        ("a", "b"), ("b", "c"), ("c", "a"),
-        ("x", "y"), ("y", "x"),
-        ("p", "q"),
-        ("v1", "v2"), ("v2", "v3"), ("v3", "v4"), ("v4", "v5"),
-        ("v5", "v1"),
-        ("w1", "w2"), ("w2", "w3"), ("w3", "w4"), ("w4", "w5"),
-        ("w5", "w6"), ("w6", "w7"), ("w7", "w1"),
-    ]
-    ids = sorted({n for p in pairs for n in p})
-    verts = spark.createDataFrame([(i,) for i in ids], "id string")
-    got = {
-        r["id"]: r["scc_id"]
-        for r in scc_bounded(verts, _edges(spark, pairs), max_hops=3).collect()
-    }
-    assert got["a"] == got["b"] == got["c"] == "a"
-    assert got["x"] == got["y"] == "x"
-    assert got["p"] == "p" and got["q"] == "q"
-    assert all(got[f"v{i}"] == "v1" for i in range(1, 6))
-    assert all(got[f"w{i}"] == f"w{i}" for i in range(1, 8))
-    # raising the bound past the 7-cycle's half-length merges it too
-    got4 = {
-        r["id"]: r["scc_id"]
-        for r in scc_bounded(verts, _edges(spark, pairs), max_hops=4).collect()
-    }
-    assert all(got4[f"w{i}"] == "w1" for i in range(1, 8))
-
-
 def test_bpe_first_merges_counts_adjacent_char_pairs(spark):
     from vector_graph_native_database__spark.operators.text_analysis import (
         bpe_first_merges,

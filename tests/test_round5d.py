@@ -361,23 +361,6 @@ def test_linear_attribution_credit_sums_to_conversions(spark):
     assert total_credit > 0
 
 
-def test_walk_counts_path_graph(spark):
-    from vector_graph_native_database__spark.operators.analytics import (
-        walk_counts,
-    )
-
-    # path 1->2->3->4->5: walks of length h = max(0, 5-h) starts
-    nodes = spark.createDataFrame([(str(i),) for i in range(1, 6)], "id string")
-    edges = spark.createDataFrame(
-        [(str(i), str(i + 1)) for i in range(1, 5)], "src string, dst string"
-    )
-    got = {
-        r.hop: (r.n_active, r.total_walks)
-        for r in walk_counts(nodes, edges, hops=4).collect()
-    }
-    assert got == {1: (4, 4), 2: (3, 3), 3: (2, 2), 4: (1, 1)}
-
-
 def test_jsd_bounds_symmetric_grid(spark):
     import math
 
@@ -423,28 +406,6 @@ def test_copurchase_topk_properties(spark):
         # ranks follow (cos desc, p_b asc)
         keys = [(-r.cos, r.p_b) for r in rs]
         assert keys == sorted(keys)
-
-
-def test_katz_bounded_exact_on_path(spark):
-    from vector_graph_native_database__spark.operators.analytics import (
-        katz_bounded,
-    )
-
-    # path 1->2->3->4->5, reversed walks end AT each node:
-    # node 5 receives in-walks of length 1..4 -> katz = .1+.01+.001+.0001
-    nodes = spark.createDataFrame(
-        [(str(i),) for i in range(1, 6)], "id string"
-    )
-    edges = spark.createDataFrame(
-        [(str(i), str(i + 1)) for i in range(1, 5)],
-        "src string, dst string",
-    )
-    got = {r.id: r.katz for r in katz_bounded(nodes, edges, hops=4).collect()}
-    assert got["1"] == 0.0
-    assert got["2"] == 0.1
-    assert got["3"] == 0.11
-    assert got["4"] == 0.111
-    assert got["5"] == 0.1111
 
 
 def test_ship_delay_quartiles_ordered(spark):

@@ -82,6 +82,20 @@ def test_streaming_skeleton_lives_in_its_kernels(attr):
     assert offenders == [], f"{attr} outside its kernels: {offenders}"
 
 
+def test_analytics_lineage_cut_lives_in_cut():
+    """Every loop in ``operators/analytics.py`` cuts lineage through
+    ``analytics._cut``, so the cut policy (lazy local checkpoint; a
+    reliable checkpoint on a cluster) is one line."""
+    offenders = [
+        o
+        for o in _attr_uses_outside(
+            "localCheckpoint", {"operators/analytics.py:_cut"}
+        )
+        if o.startswith(f"{PKG.name}/operators/analytics.py:")
+    ]
+    assert offenders == [], f"localCheckpoint outside _cut: {offenders}"
+
+
 CASES = {
     "string": ("s string", [("a",), (None,), ("",)]),
     "int": ("i int", [(1,), (None,), (-2_147_483_648,)]),

@@ -31,11 +31,22 @@ from pyspark.sql import functions as F
 
 EMBED_DIM = 256
 
+# Exactly the characters ``str.isspace()`` accepts: the ASCII and C1
+# separators as literal characters (no escape syntax for the two
+# regex dialects to disagree on), plus Unicode category Z (``\pZ``:
+# Zs, Zl, Zp), which Java and RE2 (DuckDB) both read. Java's ``\s``
+# misses \x1c-\x1f, \x85 and the Unicode spaces; RE2's also misses \v.
+# Listing the Unicode spaces one by one splits the same, but Java then
+# tests every other character against each range: over 1.08 M tokens
+# (the sf0.1 corpus four times, 4 local cores) that took 0.45 s, ``\s+``
+# 0.30 s and this class 0.32 s.
+WS_SPLIT = "[\t-\r\x1c-\x1f\x85\\pZ]+"
+
 
 def tokenize(col: Column | str) -> Column:
     """Lowercase whitespace tokens, empties dropped (= str.split())."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(c), r"\s+"), lambda t: t != "")
+    return F.filter(F.split(F.lower(c), WS_SPLIT), lambda t: t != "")
 
 
 def hash_bucket(tok: Column | str, dim: int = EMBED_DIM) -> Column:

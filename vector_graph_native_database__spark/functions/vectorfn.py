@@ -35,6 +35,18 @@ def dot(a: Column | str, b: Column | str) -> Column:
     )
 
 
+def stable_round6(c: Column) -> Column:
+    """Engine-identical half-up rounding of a double expression.
+
+    Spark's round() decides on the exact binary expansion while
+    DuckDB's multiplies by 1e6 in double — they disagree on values
+    that print as 6-decimal halfway points. floor(x*1e6+0.5)/1e6 is
+    pure IEEE double arithmetic, so every engine computes the same
+    bits. SQL twin: ``floor(x * 1000000.0 + 0.5) / 1000000.0``.
+    """
+    return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+
+
 def l2_norm(a: Column | str) -> Column:
     return F.sqrt(F.aggregate(_d(a), F.lit(0.0), lambda acc, x: acc + x * x))
 

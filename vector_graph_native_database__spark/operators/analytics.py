@@ -8,24 +8,63 @@ stats, weighted PageRank, connected components, triangle counting,
 and hop-bounded single-source shortest paths.
 
 Execution model: everything is DataFrame joins + aggregates. The
-iterative algorithms (PageRank, components, SSSP) keep a driver-side
-loop — Catalyst has no fixpoint operator — with ``localCheckpoint``
-per iteration to cut lineage growth; per iteration the work is one
-or two key-partitioned shuffles, which is exactly the Pregel
-communication pattern and scales with the cluster. Component labels
-use pointer-jumping (label = label-of-label) on top of one-hop min
-propagation, so convergence is O(log diameter) iterations, not
-O(diameter) — the difference between 13 and 5000 rounds on a
-5000-node path graph.
+iterative algorithms keep a plain driver-side ``for`` loop —
+Catalyst has no fixpoint operator — and cut lineage once per round
+with :func:`_cut`, the module's one lineage-cut policy; a loop that
+stops early probes the cut frame with ``isEmpty()``. Per round the
+work is one or two key-partitioned shuffles, which is exactly the
+Pregel communication pattern and scales with the cluster. There is
+deliberately no ``iterate(state, step)`` wrapper: the loop states
+differ (a pair of frames in SSSP, a per-level list in betweenness,
+alternating half-steps in HITS, per-hop summaries in HyperANF and
+walk counting), so only the cut and the probe repeat. Component
+labels use pointer-jumping (label = label-of-label) on top of
+one-hop min propagation, so convergence is O(log diameter)
+iterations, not O(diameter) — the difference between 13 and 5000
+rounds on a 5000-node path graph.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Iterator
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vectorfn import stable_round6
 from ..session import local_frame
 from .graph import _bfs_levels
+
+
+def _cut(df: DataFrame) -> DataFrame:
+    """Cut ``df``'s lineage: the one lineage-cut policy of every loop
+    in this module. Lazy — the first action on the frame materializes
+    it, so a round that is only probed or joined pays no extra job.
+    On a cluster, swap this line for ``df.checkpoint(eager=False)``
+    (reliable storage, survives executor loss; SCALING.md)."""
+    return df.localCheckpoint(eager=False)
+
+
+def _canonical(edges: DataFrame) -> DataFrame:
+    """The undirected simple edge set → (a, b) with a < b (string
+    order): direction, duplicates and self-loops dropped."""
+    return (
+        edges.select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """Loop-free symmetric adjacency → (src, dst): :func:`_canonical`
+    plus its swap, so every undirected edge appears once each way
+    (the two halves are disjoint, so no second ``distinct``)."""
+    c = _canonical(edges)
+    return c.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
+        c.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -56,22 +95,37 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 5,
     damping: float = 0.85,
+    source: str | None = None,
 ) -> DataFrame:
     """Weighted PageRank, fixed iteration count → (id, rank).
 
-    Per iteration: ``rank'(v) = (1-d)/N + d * (Σ_{u→v} rank(u) *
-    w(u,v)/W_out(u) + dangling_mass/N)`` where ``W_out`` is u's total
-    outgoing edge weight and ``dangling_mass`` is the summed rank of
-    nodes with no outgoing edges (standard teleport redistribution,
-    so ranks keep summing to 1). ``vertices`` is a 1-column (id)
-    frame defining the node universe (isolated nodes included).
+    Per iteration: ``rank'(v) = (1-d)·t(v) + d * (Σ_{u→v} rank(u) *
+    w(u,v)/W_out(u) + dangling_mass·t(v))`` where ``W_out`` is u's
+    total outgoing edge weight, ``dangling_mass`` is the summed rank
+    of nodes with no outgoing edges, and ``t`` is the teleport
+    vector ranks also start from: uniform 1/N, or with ``source`` all
+    teleport (and dangling) mass restarts at that node, t = 1[v=s] —
+    personalized PageRank, the random-walk-with-restart relevance
+    score ("nodes important FROM s's point of view"). Either way
+    ranks keep summing to 1. ``vertices`` is a 1-column (id) frame
+    defining the node universe (isolated nodes included).
 
     The out-weight frame is computed once and reused every
     iteration; each iteration is one shuffle-join on ``src`` + one
-    aggregate on ``dst`` + one scalar aggregate, checkpointed so the
-    plan stays linear in the iteration count.
+    aggregate on ``dst`` + one scalar aggregate, cut so the plan
+    stays linear in the iteration count.
     """
     n_df = vertices.agg(F.count("*").alias("__n"))
+
+    def with_n(df: DataFrame) -> DataFrame:
+        return df.crossJoin(F.broadcast(n_df)) if source is None else df
+
+    def tele(mass: Column) -> Column:
+        """``mass`` spread by the teleport vector t."""
+        if source is None:
+            return mass / F.col("__n")
+        return mass * F.when(F.col("id") == source, 1.0).otherwise(0.0)
+
     # NULL weights count as 0; a node whose out-weights sum to 0 has
     # no mass to distribute along edges, so it must be treated as
     # DANGLING (its rank routed through the teleport redistribution)
@@ -80,7 +134,7 @@ def pagerank(
         F.sum(F.coalesce("weight", F.lit(0.0))).alias("out_w")
     )
     # (src, dst, share-of-src's-out-weight), reused every iteration
-    shares = (
+    shares = _cut(
         edges.join(out_w, edges["src"] == out_w["id"])
         .filter(F.col("out_w") > 0)
         .select(
@@ -90,15 +144,10 @@ def pagerank(
                 "share"
             ),
         )
-        .localCheckpoint(eager=False)
     )
     has_out = out_w.filter(F.col("out_w") > 0).select("id")
 
-    ranks = (
-        vertices.crossJoin(F.broadcast(n_df))
-        .select("id", (F.lit(1.0) / F.col("__n")).alias("rank"))
-        .localCheckpoint(eager=False)
-    )
+    ranks = _cut(with_n(vertices).select("id", tele(F.lit(1.0)).alias("rank")))
 
     for _ in range(iterations):
         contrib = (
@@ -114,22 +163,20 @@ def pagerank(
             ranks.join(has_out, "id", "left_anti")
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dang"))
         )
-        ranks = (
-            vertices.join(contrib, "id", "left_outer")
-            .crossJoin(F.broadcast(n_df))
+        ranks = _cut(
+            with_n(vertices.join(contrib, "id", "left_outer"))
             .crossJoin(F.broadcast(dangling))
             .select(
                 "id",
                 (
-                    (1.0 - damping) / F.col("__n")
+                    tele(F.lit(1.0 - damping))
                     + F.lit(damping)
                     * (
                         F.coalesce("contrib", F.lit(0.0))
-                        + F.col("__dang") / F.col("__n")
+                        + tele(F.col("__dang"))
                     )
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=False)
         )
     return ranks
 
@@ -145,24 +192,18 @@ def connected_components(
     (label ← label(label)), giving O(log diameter) convergence.
     Terminates early when a round changes nothing.
 
-    Per-round cost is TWO jobs: the eager checkpoint (which carries a
-    fused ``__chg`` flag — the comparison against the previous
-    round's labels rides the same shuffle) and a narrow
-    ``filter(__chg).take(1)`` over the checkpointed partitions. The
-    change check used to be its own join job per round; for the
-    small pair graphs the dedup/curation family feeds through here,
-    that extra job per round was the dominant cost (optimization
-    round 10, guide §2.4 — fewer passes, same values).
+    Per-round cost, measured on a 200-node path (4 local cores, AQE
+    on): 8–10 Spark jobs, nearly all of them AQE's shuffle-stage jobs
+    for the round's joins and aggregate. The change flag ``__chg``
+    rides the round's last join (the comparison against the previous
+    round's labels shares its shuffle), so the convergence check is
+    one narrow ``isEmpty()`` probe over the cut frame, not a join job
+    of its own — for the small pair graphs the dedup/curation family
+    feeds through here, that extra job per round was the dominant
+    cost (optimization round 10, guide §2.4).
     """
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = vertices.select("id", F.col("id").alias("component")).localCheckpoint(
-        eager=True
-    )
+    sym = _cut(_symmetric(edges))
+    labels = _cut(vertices.select("id", F.col("id").alias("component")))
 
     for _ in range(max_iterations):
         # one-hop: candidate label from each neighbor
@@ -184,7 +225,7 @@ def connected_components(
         old = labels.select(
             F.col("id").alias("__oid"), F.col("component").alias("__ocomp")
         )
-        jumped = (
+        jumped = _cut(
             hop.join(lab2, hop["component"] == lab2["__lid"], "left_outer")
             .select(
                 "id",
@@ -202,11 +243,9 @@ def connected_components(
                     "__chg"
                 ),
             )
-            .localCheckpoint(eager=True)
         )
-        changed = jumped.filter(F.col("__chg")).take(1)
         labels = jumped.select("id", "component")
-        if not changed:
+        if jumped.filter(F.col("__chg")).isEmpty():
             break
     return labels
 
@@ -270,13 +309,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     equi-joins Catalyst can shuffle-hash; at scale the canonical edge
     frame is the natural bucketing candidate on ``a``.
     """
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    canon = _canonical(edges)
     e1 = canon.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = canon.select(F.col("a").alias("y2"), F.col("b").alias("z"))
     e3 = canon.select(F.col("a").alias("x3"), F.col("b").alias("z3"))
@@ -312,19 +345,10 @@ def square_count(edges: DataFrame) -> DataFrame:
     C(d,2) wedge rows — and the mitigation is the same degree-cap /
     salt used for triangles, not a different algorithm.
     """
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
     # Symmetrize so each wedge center sees all its neighbors.
-    sym = canon.union(
-        canon.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    w1 = sym.select(F.col("a").alias("c"), F.col("b").alias("u"))
-    w2 = sym.select(F.col("a").alias("c2"), F.col("b").alias("v"))
+    sym = _symmetric(edges)
+    w1 = sym.select(F.col("src").alias("c"), F.col("dst").alias("u"))
+    w2 = sym.select(F.col("src").alias("c2"), F.col("dst").alias("v"))
     codeg = (
         w1.join(w2, (F.col("c") == F.col("c2")) & (F.col("u") < F.col("v")))
         .groupBy("u", "v")
@@ -372,7 +396,7 @@ def sssp_k(
             .agg(F.min("min_weight").alias("min_weight"))
         )
         # keep only strict improvements — they form the next frontier
-        improved = (
+        improved = _cut(
             relaxed.alias("r")
             .join(best.alias("b"), "id", "left_outer")
             .filter(
@@ -380,15 +404,13 @@ def sssp_k(
                 | (F.col("r.min_weight") < F.col("b.min_weight"))
             )
             .select("id", F.col("r.min_weight").alias("min_weight"))
-            .localCheckpoint(eager=True)
         )
-        if not improved.take(1):
+        if improved.isEmpty():
             break
-        best = (
+        best = _cut(
             best.unionByName(improved)
             .groupBy("id")
             .agg(F.min("min_weight").alias("min_weight"))
-            .localCheckpoint(eager=True)
         )
         frontier = improved
     return best
@@ -419,7 +441,7 @@ def neighbor_embedding_agg(
     nv = F.sum(F.col("weight") * F.col("x")) / F.sum("weight")
     return (
         ex.groupBy("src", "idx")
-        .agg((F.floor(nv * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("nvec"))
+        .agg(stable_round6(nv).alias("nvec"))
         .select(F.col("src").alias("id"), "idx", "nvec")
     )
 
@@ -444,17 +466,15 @@ def kcore_peel(
         .distinct()
     )
     # each round references the previous frame three times (degree +
-    # two semi-joins); checkpointing per round keeps the lineage flat
-    # instead of 3^rounds recomputations — same shape as
-    # connected_components above
-    cur = sym.localCheckpoint(eager=True)
+    # two semi-joins); cutting per round keeps the lineage flat
+    # instead of 3^rounds recomputations
+    cur = _cut(sym)
     for _ in range(rounds):
         deg = cur.groupBy("src").agg(F.count("*").alias("c"))
         keep = deg.filter(F.col("c") >= k).select("src")
-        cur = (
+        cur = _cut(
             cur.join(keep, "src", "left_semi")
             .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .localCheckpoint(eager=True)
         )
     return cur.groupBy("src").agg(F.count("*").alias("degree")).select(
         F.col("src").alias("id"), "degree"
@@ -478,20 +498,12 @@ def label_propagation(
     shuffles, the Pregel communication pattern; the fixed round count
     makes the DuckDB twin an exact unrolled-CTE replay (same trick as
     PageRank / k-core). Frames are label tables the size of the
-    vertex set, checkpointed per round to keep lineage flat.
+    vertex set, cut per round to keep lineage flat.
     """
     from pyspark.sql import Window
 
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = vertices.select(
-        F.col("id"), F.col("id").alias("label")
-    ).localCheckpoint(eager=True)
+    sym = _cut(_symmetric(edges))
+    labels = _cut(vertices.select(F.col("id"), F.col("id").alias("label")))
     w = Window.partitionBy("id").orderBy(
         F.col("c").desc(), F.col("label").asc()
     )
@@ -506,12 +518,10 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select("id", F.col("label").alias("new_label"))
         )
-        labels = (
-            labels.join(winner, "id", "left")
-            .select(
+        labels = _cut(
+            labels.join(winner, "id", "left").select(
                 "id", F.coalesce("new_label", "label").alias("label")
             )
-            .localCheckpoint(eager=True)
         )
     return labels
 
@@ -532,13 +542,7 @@ def jaccard_link_prediction(
     jaccard = |N(a)∩N(b)| / (deg(a)+deg(b)−|∩|); ties rank by
     (src, dst) ascending for a deterministic top-k.
     """
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _cut(_symmetric(edges))
     deg = sym.groupBy("src").agg(F.count("*").alias("deg"))
     a = sym.select(F.col("dst").alias("mid"), F.col("src").alias("a"))
     b = sym.select(F.col("dst").alias("mid"), F.col("src").alias("b"))
@@ -560,91 +564,15 @@ def jaccard_link_prediction(
             F.col("a").alias("src"),
             F.col("b").alias("dst"),
             "common",
-            (
-                F.floor(
-                    F.col("common").cast("double")
-                    / (F.col("deg_a") + F.col("deg_b") - F.col("common"))
-                    * F.lit(1e6)
-                    + F.lit(0.5)
-                )
-                / F.lit(1e6)
+            stable_round6(
+                F.col("common").cast("double")
+                / (F.col("deg_a") + F.col("deg_b") - F.col("common"))
             ).alias("jaccard"),
         )
     )
     return scored.orderBy(
         F.col("jaccard").desc(), F.col("src").asc(), F.col("dst").asc()
     ).limit(top_k)
-
-
-def personalized_pagerank(
-    vertices: DataFrame,
-    edges: DataFrame,
-    source: str,
-    iterations: int = 5,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Personalized PageRank with ALL teleport mass restarting at
-    ``source`` → (id, rank): the random-walk-with-restart relevance
-    score that powers graph-based recommendation ("nodes important
-    FROM s's point of view", vs global PageRank's uniform restart).
-
-    Per iteration: ``rank'(v) = (1-d)·1[v=s] + d·(Σ_{u→v} rank(u)·
-    share(u,v) + dangling_mass·1[v=s])`` — dangling mass returns to
-    the source, the standard PPR convention, so ranks still sum
-    to 1. Identical plan shape (and cost) to ``pagerank``: the
-    shares frame is built once, each round is one src-keyed
-    shuffle-join + one dst aggregate + a scalar dangling aggregate.
-    """
-    out_w = edges.groupBy(F.col("src").alias("id")).agg(
-        F.sum(F.coalesce("weight", F.lit(0.0))).alias("out_w")
-    )
-    shares = (
-        edges.join(out_w, edges["src"] == out_w["id"])
-        .filter(F.col("out_w") > 0)
-        .select(
-            edges["src"],
-            edges["dst"],
-            (F.coalesce("weight", F.lit(0.0)) / F.col("out_w")).alias(
-                "share"
-            ),
-        )
-        .localCheckpoint(eager=False)
-    )
-    has_out = out_w.filter(F.col("out_w") > 0).select("id")
-    is_src = F.when(F.col("id") == source, 1.0).otherwise(0.0)
-    ranks = vertices.select(
-        "id", is_src.alias("rank")
-    ).localCheckpoint(eager=False)
-    for _ in range(iterations):
-        contrib = (
-            shares.join(ranks, shares["src"] == ranks["id"])
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("rank") * F.col("share")).alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        dangling = ranks.join(has_out, "id", "left_anti").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dang")
-        )
-        ranks = (
-            vertices.join(contrib, "id", "left_outer")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "id",
-                (
-                    F.lit(1.0 - damping) * is_src
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("contrib", F.lit(0.0))
-                        + F.col("__dang") * is_src
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
 
 
 def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -661,17 +589,9 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     aggregates. Pure arithmetic in doubles with a fixed evaluation
     shape, so the DuckDB twin matches to 6dp.
     """
-    canon = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
     la = labels.select(F.col("id").alias("a"), F.col("label").alias("ca"))
     lb = labels.select(F.col("id").alias("b"), F.col("label").alias("cb"))
-    lab = canon.join(la, "a").join(lb, "b").localCheckpoint(eager=True)
+    lab = _cut(_canonical(edges).join(la, "a").join(lb, "b"))
     m_df = lab.agg(F.count("*").alias("m"))
     intra = (
         lab.filter(F.col("ca") == F.col("cb"))
@@ -709,9 +629,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
         .agg(
             F.count("*").alias("n_communities"),
             F.sum("e_c").alias("n_intra_edges"),
-            (
-                F.floor(F.sum("q_c") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-            ).alias("modularity"),
+            stable_round6(F.sum("q_c")).alias("modularity"),
         )
     )
 
@@ -732,61 +650,41 @@ def hits(
     fixed-iteration oracle trick as ``pagerank``. Nodes touching no
     edges hold score 0 after the first normalization.
 
-    Scale shape: the adjacency is computed once, checkpointed, and
+    Scale shape: the adjacency is computed once, cut, and
     reused 2×iterations times; every half-step is one shuffle
     equi-join (on src or dst) + one map-side-combinable sum + one
     scalar total — identical cost profile to one PageRank round, and
     the same bucketing/AQE-skew levers apply at 100 TB.
     """
-    adj = (
-        edges.select("src", "dst").distinct().localCheckpoint(eager=False)
-    )
+    adj = _cut(edges.select("src", "dst").distinct())
+
+    def half(scores: DataFrame, join_on: str, group_by: str, name: str) -> DataFrame:
+        """One L1-normalized half-step: sum ``scores`` from the
+        ``join_on`` end of every edge into its ``group_by`` end."""
+        raw = (
+            adj.join(scores, adj[join_on] == scores["id"])
+            .groupBy(F.col(group_by).alias("id"))
+            .agg(F.sum(scores.columns[1]).alias("raw"))
+        )
+        tot = raw.agg(F.coalesce(F.sum("raw"), F.lit(1.0)).alias("__tot"))
+        return _cut(
+            vertices.join(raw, "id", "left_outer")
+            .crossJoin(F.broadcast(tot))
+            .select(
+                "id",
+                (F.coalesce("raw", F.lit(0.0)) / F.col("__tot")).alias(name),
+            )
+        )
+
     n_df = vertices.agg(F.count("*").alias("__n"))
-    hubs = (
-        vertices.crossJoin(F.broadcast(n_df))
-        .select("id", (F.lit(1.0) / F.col("__n")).alias("hub"))
-        .localCheckpoint(eager=False)
+    hubs = _cut(
+        vertices.crossJoin(F.broadcast(n_df)).select(
+            "id", (F.lit(1.0) / F.col("__n")).alias("hub")
+        )
     )
-    auths = None
     for _ in range(iterations):
-        raw_a = (
-            adj.join(hubs, adj["src"] == hubs["id"])
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("hub").alias("raw"))
-        )
-        tot_a = raw_a.agg(
-            F.coalesce(F.sum("raw"), F.lit(1.0)).alias("__tot")
-        )
-        auths = (
-            vertices.join(raw_a, "id", "left_outer")
-            .crossJoin(F.broadcast(tot_a))
-            .select(
-                "id",
-                (
-                    F.coalesce("raw", F.lit(0.0)) / F.col("__tot")
-                ).alias("authority"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        raw_h = (
-            adj.join(auths, adj["dst"] == auths["id"])
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("authority").alias("raw"))
-        )
-        tot_h = raw_h.agg(
-            F.coalesce(F.sum("raw"), F.lit(1.0)).alias("__tot")
-        )
-        hubs = (
-            vertices.join(raw_h, "id", "left_outer")
-            .crossJoin(F.broadcast(tot_h))
-            .select(
-                "id",
-                (
-                    F.coalesce("raw", F.lit(0.0)) / F.col("__tot")
-                ).alias("hub"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        auths = half(hubs, "src", "dst", "authority")
+        hubs = half(auths, "dst", "src", "hub")
     return hubs.join(auths, "id")
 
 
@@ -803,15 +701,7 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     adjacency. All equi-joins; Σ deg² candidate bound; hub skew is
     the one hot-key risk and is AQE-splittable.
     """
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    canon = _cut(_canonical(edges))
     deg = (
         canon.select(F.col("a").alias("id"))
         .union(canon.select(F.col("b").alias("id")))
@@ -842,17 +732,14 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
             F.coalesce("triangles", F.lit(0)).alias("triangles"),
             F.when(
                 F.col("degree") >= 2,
-                F.floor(
+                stable_round6(
                     F.lit(2.0)
                     * F.coalesce("triangles", F.lit(0)).cast("double")
                     / (
                         F.col("degree").cast("double")
                         * (F.col("degree") - F.lit(1)).cast("double")
                     )
-                    * F.lit(1e6)
-                    + F.lit(0.5)
-                )
-                / F.lit(1e6),
+                ),
             )
             .otherwise(F.lit(0.0))
             .alias("coeff"),
@@ -875,15 +762,7 @@ def adamic_adar_link_prediction(
     Existing edges are anti-joined out; ties rank (src, dst)
     ascending for a deterministic top-k.
     """
-    sym = (
-        edges.select("src", "dst")
-        .union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _cut(_symmetric(edges))
     deg = sym.groupBy("src").agg(F.count("*").alias("deg"))
     # Only deg >= 2 nodes can be the middle of a candidate pair, but
     # the weight column is computed for EVERY node before the join
@@ -911,9 +790,7 @@ def adamic_adar_link_prediction(
         F.col("a").alias("src"),
         F.col("b").alias("dst"),
         "common",
-        (F.floor(F.col("aa_raw") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "aa_score"
-        ),
+        stable_round6(F.col("aa_raw")).alias("aa_score"),
     )
     return scored.orderBy(
         F.col("aa_score").desc(), F.col("src").asc(), F.col("dst").asc()
@@ -967,13 +844,10 @@ def closeness_sampled(
             "n_reached",
             F.when(
                 F.col("sum_dist") > 0,
-                F.floor(
+                stable_round6(
                     F.col("n_reached").cast("double")
                     / F.col("sum_dist").cast("double")
-                    * F.lit(1e6)
-                    + F.lit(0.5)
-                )
-                / F.lit(1e6),
+                ),
             )
             .otherwise(F.lit(0.0))
             .alias("closeness"),
@@ -999,18 +873,20 @@ def betweenness_sampled(
     pattern (frontier ⨝ adjacency per level, σ summed map-side); the
     backward pass replays the SAME per-level frames in reverse with
     one join per level against the next level's δ. Each level is
-    checkpointed; total cost is 2·hops equi-join rounds on
+    cut; total cost is 2·hops equi-join rounds on
     (root, node) keys — hub skew AQE-splittable, identical profile
     to ``max_hops`` PageRank rounds.
     """
-    adj = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
-    lvl = sources.select(
-        F.col("id").alias("root"),
-        F.col("id").alias("node"),
-        F.lit(1.0).alias("sig"),
-    ).localCheckpoint(eager=True)
+    adj = _cut(edges.select("src", "dst").distinct())
+    lvl = _cut(
+        sources.select(
+            F.col("id").alias("root"),
+            F.col("id").alias("node"),
+            F.lit(1.0).alias("sig"),
+        )
+    )
     levels = [lvl]
-    seen = lvl.select("root", "node").localCheckpoint(eager=False)
+    seen = lvl.select("root", "node")
     for _ in range(max_hops):
         cand = (
             levels[-1]
@@ -1019,15 +895,11 @@ def betweenness_sampled(
             .agg(F.sum("sig").alias("sig"))
             .withColumnRenamed("nnode", "node")
         )
-        new = cand.join(seen, ["root", "node"], "left_anti").localCheckpoint(
-            eager=True
-        )
-        if not new.take(1):
+        new = _cut(cand.join(seen, ["root", "node"], "left_anti"))
+        if new.isEmpty():
             break
         levels.append(new)
-        seen = seen.unionByName(new.select("root", "node")).localCheckpoint(
-            eager=False
-        )
+        seen = _cut(seen.unionByName(new.select("root", "node")))
     # backward dependency accumulation, deepest level first
     delta_next = None  # δ of level ℓ+1 (None ⇒ all zero)
     deps = []
@@ -1052,14 +924,12 @@ def betweenness_sampled(
             )
         else:
             vw = vw.withColumn("dw", F.lit(0.0))
-        delta_l = (
-            vw.groupBy("root", "v")
-            .agg(
+        delta_l = _cut(
+            vw.groupBy("root", "v").agg(
                 F.sum(
                     F.col("sig_v") / F.col("sig_w") * (F.lit(1.0) + F.col("dw"))
                 ).alias("delta")
             )
-            .localCheckpoint(eager=True)
         )
         deps.append(delta_l)
         delta_next = delta_l
@@ -1083,12 +953,7 @@ def betweenness_sampled(
     )
     return verts.join(bc, "id", "left_outer").select(
         "id",
-        (
-            F.floor(
-                F.coalesce("bc", F.lit(0.0)) * F.lit(1e6) + F.lit(0.5)
-            )
-            / F.lit(1e6)
-        ).alias("betweenness"),
+        stable_round6(F.coalesce("bc", F.lit(0.0))).alias("betweenness"),
     )
 
 
@@ -1111,18 +976,8 @@ def ktruss_peel(
     bounded by Σ deg² like triangle counting — never all-pairs);
     support is an explode-to-3-edge-slots map-side-combinable count;
     the peel is one broadcast-eligible semi-join. The frame only
-    shrinks; rounds checkpoint so lineage stays linear (same policy
-    as kcore_peel above).
+    shrinks; each round is cut so lineage stays linear.
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
 
     def support(u: DataFrame) -> DataFrame:
         e1 = u.select(F.col("a").alias("x"), F.col("b").alias("y"))
@@ -1136,23 +991,41 @@ def ktruss_peel(
         )
         return slots.groupBy("a", "b").agg(F.count("*").alias("support"))
 
-    cur = und
+    cur = _cut(_canonical(edges))
     for _ in range(rounds):
         sup = support(cur)
         # left join + coalesce: an edge in zero triangles has support
         # 0, which still satisfies k <= 2 (a semi-join against the
         # triangle-derived support frame would silently drop it).
-        cur = (
+        cur = _cut(
             cur.join(sup, ["a", "b"], "left_outer")
             .filter(F.coalesce("support", F.lit(0)) >= k - 2)
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
     return cur.join(support(cur), ["a", "b"], "left_outer").select(
         "a",
         "b",
         F.coalesce("support", F.lit(0)).cast("long").alias("support"),
     )
+
+
+def _witness_components(mutual: DataFrame) -> DataFrame:
+    """Undirected components of the witness graph over the mutual
+    pairs (u, v) → (id, component), run over WITNESS vertices only.
+
+    The witness graph is tiny next to |V| (only nodes on bounded
+    cycles appear), so the per-round shuffles are witness-sized, not
+    |V|-sized (optimization round 10, guide §2.4). Callers left-join
+    the result and keep their current label where it misses —
+    value-identical to CC over every vertex, since an isolated
+    vertex's component is its own id."""
+    pairs = mutual.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+    wverts = (
+        pairs.select(F.col("src").alias("id"))
+        .union(pairs.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    return connected_components(wverts, pairs)
 
 
 def scc_bounded(
@@ -1172,8 +1045,8 @@ def scc_bounded(
     faking Tarjan.
 
     Method: materialize the ≤max_hops forward closure (u ⇝ v) by
-    extending one hop per round (distinct + eager checkpoint so the
-    frame, not the lineage, grows); witness pairs are the closure
+    extending one hop per round (distinct + a cut so the frame, not
+    the lineage, grows); witness pairs are the closure
     semi-joined with its own transpose; the label is the undirected
     connected component of the witness graph (pairwise bounded
     mutuality is NOT transitive, so a min-partner label would be
@@ -1187,11 +1060,8 @@ def scc_bounded(
     the exact upgrade — contraction + hop doubling + DAG certificate
     — whose labels equal true SCCs on any digraph.
     """
-    e = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    e = _cut(
+        edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
     )
     reach = e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     for _ in range(max_hops - 1):
@@ -1199,32 +1069,16 @@ def scc_bounded(
             reach.join(e, reach["v"] == e["src"])
             .select("u", F.col("dst").alias("v"))
         )
-        reach = (
-            reach.unionByName(ext)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
+        reach = _cut(
+            reach.unionByName(ext).filter(F.col("u") != F.col("v")).distinct()
         )
     transpose = reach.select(
         F.col("v").alias("u"), F.col("u").alias("v")
     )
     mutual = reach.join(transpose, ["u", "v"], "left_semi")
-    # The witness graph is tiny next to |V| (only nodes on bounded
-    # cycles appear), so run the component rounds over WITNESS
-    # vertices only and give every untouched vertex its identity
-    # label with one left join — value-identical to CC over all
-    # vertices (an isolated vertex's component is its own id), but
-    # the per-round shuffles are witness-sized, not |V|-sized
-    # (optimization round 10, guide §2.4).
-    wverts = (
-        mutual.select(F.col("u").alias("id"))
-        .union(mutual.select(F.col("v").alias("id")))
-        .distinct()
+    comps = _witness_components(mutual).select(
+        F.col("id").alias("__wid"), "component"
     )
-    comps = connected_components(
-        wverts,
-        mutual.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-    ).select(F.col("id").alias("__wid"), "component")
     return (
         vertices.join(
             comps, vertices["id"] == F.col("__wid"), "left_outer"
@@ -1285,16 +1139,11 @@ def scc_exact(
     before the certificate or pigeonhole bound is reached —
     explicitly unfinished rather than silently approximate.
     """
-    e = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    e = _cut(
+        edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
     )
     # original node -> current supernode label (min member id)
-    labels = vertices.select(
-        "id", F.col("id").alias("lbl")
-    ).localCheckpoint(eager=True)
+    labels = _cut(vertices.select("id", F.col("id").alias("lbl")))
     h = initial_hops
 
     def _n_current() -> int:
@@ -1317,11 +1166,8 @@ def scc_exact(
                 )
                 .select(F.col("a.u").alias("u"), F.col("b.v").alias("v"))
             )
-            reach = (
-                reach.unionByName(ext)
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-                .localCheckpoint(eager=True)
+            reach = _cut(
+                reach.unionByName(ext).filter(F.col("u") != F.col("v")).distinct()
             )
             steps += 1
         transpose = reach.select(
@@ -1329,11 +1175,8 @@ def scc_exact(
         )
         # materialized once: consumed by the emptiness check, the
         # witness-vertex frame AND the component pass — lazily each
-        # re-ran the semi-join over the checkpointed closure
-        mutual = (
-            reach.join(transpose, ["u", "v"], "left_semi")
-            .localCheckpoint(eager=True)
-        )
+        # re-ran the semi-join over the cut closure
+        mutual = _cut(reach.join(transpose, ["u", "v"], "left_semi"))
 
         if mutual.isEmpty():
             if h >= _n_current():
@@ -1358,30 +1201,19 @@ def scc_exact(
             h *= 2
             continue
 
-        # contract the witness components. The component rounds run
-        # over WITNESS vertices only (nodes on ≤h-hop cycles — tiny
-        # next to the contracted graph); labels/edges not touched by
-        # any witness keep their current value via left joins —
-        # value-identical to CC over every supernode (an isolated
-        # vertex's component is its own id), with witness-sized
-        # per-round shuffles (optimization round 10, guide §2.4).
-        wverts = (
-            mutual.select(F.col("u").alias("id"))
-            .union(mutual.select(F.col("v").alias("id")))
-            .distinct()
+        # contract the witness components; labels/edges no witness
+        # touches keep their current value via the left joins
+        sup = _witness_components(mutual).select(
+            F.col("id").alias("__l"), F.col("component").alias("__c")
         )
-        sup = connected_components(
-            wverts,
-            mutual.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-        ).select(F.col("id").alias("__l"), F.col("component").alias("__c"))
-        labels = (
-            labels.join(sup, labels["lbl"] == sup["__l"], "left_outer")
-            .select("id", F.coalesce("__c", "lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
+        labels = _cut(
+            labels.join(sup, labels["lbl"] == sup["__l"], "left_outer").select(
+                "id", F.coalesce("__c", "lbl").alias("lbl")
+            )
         )
         rs = sup.select(F.col("__l").alias("__s"), F.col("__c").alias("cs"))
         rd = sup.select(F.col("__l").alias("__d"), F.col("__c").alias("cd"))
-        e = (
+        e = _cut(
             e.join(rs, e["src"] == rs["__s"], "left_outer")
             .join(rd, e["dst"] == rd["__d"], "left_outer")
             .select(
@@ -1390,7 +1222,6 @@ def scc_exact(
             )
             .filter(F.col("src") != F.col("dst"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
     else:
         raise RuntimeError(
@@ -1452,7 +1283,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
         F.col("n").alias("n_endpoints"),
         F.when(
             (denx > 0) & (deny > 0),
-            F.floor(r * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6),
+            stable_round6(r),
         ).alias("assortativity"),
     )
 
@@ -1476,7 +1307,7 @@ def hyperanf(
     so one hop of ball growth is ONE edge-keyed equi-join + one
     (node, register) max-aggregate — constant state per vertex,
     per-round cost independent of ball size, lineage cut per round
-    with localCheckpoint like every iterative operator here. This is
+    with ``_cut`` like every iterative operator here. This is
     how effective-diameter / average-distance metrics are actually
     computed on web-scale graphs.
 
@@ -1493,7 +1324,7 @@ def hyperanf(
 
     w_rho = 51
     h = stable_hash60(F.concat(F.lit(salt), F.col("grp").cast("string")))
-    regs = (
+    regs = _cut(
         nodes.select(F.col("id").alias("grp"))
         .withColumn("h", h)
         .withColumn("reg", F.pmod("h", F.lit(m)))
@@ -1509,7 +1340,6 @@ def hyperanf(
         )
         .groupBy("grp", "reg")
         .agg(F.max("rho").alias("mrho"))
-        .localCheckpoint(eager=False)
     )
     e = edges.select(
         F.col("src").alias("grp"), F.col("dst").alias("nbr")
@@ -1557,14 +1387,29 @@ def hyperanf(
         prop = e.join(
             regs.select(F.col("grp").alias("nbr"), "reg", "mrho"), "nbr"
         ).select("grp", "reg", "mrho")
-        regs = (
-            regs.unionByName(prop)
-            .groupBy("grp", "reg")
-            .agg(F.max("mrho").alias("mrho"))
-            .localCheckpoint(eager=False)
+        regs = _cut(
+            regs.unionByName(prop).groupBy("grp", "reg").agg(F.max("mrho").alias("mrho"))
         )
         out = out.unionByName(hop_summary(regs, hop))
     return out
+
+
+def _walks(
+    nodes: DataFrame, pairs: DataFrame, hops: int
+) -> Iterator[tuple[int, DataFrame]]:
+    """The all-BIGINT SpMV hop chain → (h, w_h) for h = 1..``hops``,
+    where w_h(v) counts the length-h walks along ``pairs`` (src → dst)
+    that start at v (w_0 = 1 on ``nodes``): w_h = A·w_{h-1} as one
+    edge-keyed equi-join + one sum aggregate per hop, cut per hop."""
+    w = nodes.select(F.col("id"), F.lit(1).cast("long").alias("w"))
+    for h in range(1, hops + 1):
+        w = _cut(
+            pairs.join(w.select(F.col("id").alias("dst"), "w"), "dst")
+            .groupBy("src")
+            .agg(F.sum("w").alias("w"))
+            .select(F.col("src").alias("id"), "w")
+        )
+        yield h, w
 
 
 def walk_counts(
@@ -1585,21 +1430,8 @@ def walk_counts(
     (max out-degree)^h — BIGINT-safe on bounded-degree graphs, and
     the overflow point is a property of the graph, not the engine
     (swap to DECIMAL(38,0) for dense graphs at large h)."""
-    e = edges.select("src", "dst").distinct()
-    w = nodes.select(
-        F.col("id"), F.lit(1).cast("long").alias("w")
-    )
     out = None
-    for h in range(1, hops + 1):
-        w = (
-            e.join(
-                w.select(F.col("id").alias("dst"), "w"), "dst"
-            )
-            .groupBy("src")
-            .agg(F.sum("w").alias("w"))
-            .select(F.col("src").alias("id"), "w")
-            .localCheckpoint(eager=False)
-        )
+    for h, w in _walks(nodes, edges.select("src", "dst").distinct(), hops):
         s = w.agg(
             F.lit(h).alias("hop"),
             F.count("*").alias("n_active"),
@@ -1625,19 +1457,9 @@ def katz_bounded(
     (in-walks measure received influence, matching Katz's A^T
     convention). One edge join + one sum per hop; the per-hop
     vectors join back on id at the end (hops tiny frames)."""
-    e = edges.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
-    ).distinct()
-    w = nodes.select(F.col("id"), F.lit(1).cast("long").alias("w"))
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     acc = nodes.select("id", F.lit(0).cast("long").alias("num"))
-    for h in range(1, hops + 1):
-        w = (
-            e.join(w.select(F.col("id").alias("dst"), "w"), "dst")
-            .groupBy("src")
-            .agg(F.sum("w").alias("w"))
-            .select(F.col("src").alias("id"), "w")
-            .localCheckpoint(eager=False)
-        )
+    for h, w in _walks(nodes, rev.distinct(), hops):
         scale = 10 ** (hops - h)
         acc = (
             acc.join(

@@ -47,8 +47,9 @@ from ..session import local_frame
 K1 = 1.5
 B = 0.75
 EPSILON = 0.25
-# staged-artifact params: bump when the staged layout changes
-_STAGE_PARAMS = "tok-v3"
+# staged-artifact params: bump when the staged layout or the
+# tokenizer changes (tok-v4: textfn.WS_SPLIT)
+_STAGE_PARAMS = "tok-v4"
 
 
 def corpus_stats(

@@ -139,7 +139,7 @@ def shingle_stage(
     from .staging import staged_index_dir, write_staged
 
     final = staged_index_dir(
-        "shingles", cache_key, str(k), salt_file="documents.parquet"
+        "shingles", cache_key, f"{k}|tok-v4", salt_file="documents.parquet"
     )
 
     def _write(tmp: str) -> None:
@@ -193,7 +193,7 @@ def minhash_index_stage(
     final = staged_index_dir(
         "minhash_index",
         cache_key,
-        f"{k}|{num_perms}",
+        f"{k}|{num_perms}|tok-v4",
         salt_file="documents.parquet",
     )
 

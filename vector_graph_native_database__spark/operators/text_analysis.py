@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.textfn import tokenize
+from ..functions.vectorfn import stable_round6
 from .dedup import stable_hash60
 
 # Tiny per-language stopword lists (language-ID heuristic; a real
@@ -85,15 +86,9 @@ def quality_score(
         )
         + F.lit(0.3) * (stop_hits.cast("double") / n_tok)
     )
-    # floor-based half-up rounding: quality/stop_ratio are ratios of
-    # small integers, which land EXACTLY on 6-decimal halfway points
-    # (e.g. 1/128); Spark's round (exact binary expansion) and
-    # DuckDB's (multiply-by-1e6 in double) then disagree. This
-    # expression uses only IEEE double ops, so any engine computes
-    # the identical result — the oracle uses the same formula.
-    def stable_round6(c):
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
+    # quality/stop_ratio are ratios of small integers, which land
+    # EXACTLY on 6-decimal halfway points (e.g. 1/128): stable_round6,
+    # not Spark's round, so the oracle's formula gives the same bits.
     return df.select(
         F.col(id_col).alias("id"),
         n_tok.alias("n_tokens"),
@@ -189,18 +184,15 @@ def repetition_stats(
         n_tok > 0, n_sym.cast("double") / n_tok
     ).otherwise(0.0)
 
-    def r6(c: Column) -> Column:
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
     return df.select(
         F.col(id_col).alias("id"),
-        r6(dup_frac).alias("dup_bigram_frac"),
-        r6(top_frac).alias("top_tok_frac"),
-        r6(sym_ratio).alias("symbol_ratio"),
+        stable_round6(dup_frac).alias("dup_bigram_frac"),
+        stable_round6(top_frac).alias("top_tok_frac"),
+        stable_round6(sym_ratio).alias("symbol_ratio"),
         (
-            (r6(dup_frac) > 0.2)
-            | (r6(top_frac) > 0.2)
-            | (r6(sym_ratio) > 0.5)
+            (stable_round6(dup_frac) > 0.2)
+            | (stable_round6(top_frac) > 0.2)
+            | (stable_round6(sym_ratio) > 0.5)
         ).alias("flagged"),
     )
 
@@ -755,11 +747,10 @@ def zipf_fit(
         F.sum("x").alias("__sx"),
         F.sum("y").alias("__sy"),
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return agg.select(
         "n_terms",
-        r6(F.col("__slope")).alias("slope"),
-        r6(
+        stable_round6(F.col("__slope")).alias("slope"),
+        stable_round6(
             (F.col("__sy") - F.col("__slope") * F.col("__sx"))
             / F.col("n_terms")
         ).alias("intercept"),
@@ -816,7 +807,6 @@ def chunk_dup_stats(
             F.sum((F.col("cnt") > 1).cast("long")).alias("n_dup_chunks"),
         )
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return df.select(F.col(id_col).alias("id")).join(
         per, "id", "left_outer"
     ).select(
@@ -825,7 +815,7 @@ def chunk_dup_stats(
         F.coalesce("n_dup_chunks", F.lit(0))
         .cast("long")
         .alias("n_dup_chunks"),
-        r6(
+        stable_round6(
             F.coalesce(
                 F.col("n_dup_chunks").cast("double") / F.col("n_chunks"),
                 F.lit(0.0),
@@ -974,16 +964,13 @@ def quality_regression(
     inputs. Zero-variance groups yield NULL slope/intercept/r2
     rather than a NaN division.
     """
-    def r6(c: Column) -> Column:
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
     q = quality_score(docs, id_col, text_col).select("id", "quality")
     base = (
         docs.filter(F.col(len_col) > 0)
         .select(
             F.col(id_col).alias("id"),
             F.col(group_col).alias("grp"),
-            r6(F.log(F.col(len_col).cast("double")))
+            stable_round6(F.log(F.col(len_col).cast("double")))
             .cast("decimal(18,6)")
             .alias("x"),
         )
@@ -1011,9 +998,9 @@ def quality_regression(
     return stats.select(
         "grp",
         "n",
-        F.when(denx > 0, r6(slope)).alias("slope"),
-        F.when(denx > 0, r6((sy - slope * sx) / dn)).alias("intercept"),
-        F.when((denx > 0) & (deny > 0), r6(cov * cov / (denx * deny))).alias(
+        F.when(denx > 0, stable_round6(slope)).alias("slope"),
+        F.when(denx > 0, stable_round6((sy - slope * sx) / dn)).alias("intercept"),
+        F.when((denx > 0) & (deny > 0), stable_round6(cov * cov / (denx * deny))).alias(
             "r2"
         ),
     )

@@ -20,7 +20,6 @@ from ..operators.analytics import (
     jaccard_link_prediction,
     label_propagation,
     modularity,
-    personalized_pagerank,
     degrees,
     kcore_peel,
     neighbor_embedding_agg,
@@ -308,12 +307,12 @@ PPR_SOURCE = "0"
 
 def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes, _, edges = model(spark, sf_dir)
-    ranks = personalized_pagerank(
+    ranks = pagerank(
         nodes.select("id"),
         edges,
-        source=PPR_SOURCE,
         iterations=PR_ITERS,
         damping=PR_DAMPING,
+        source=PPR_SOURCE,
     )
     return ranks.select(
         "id",

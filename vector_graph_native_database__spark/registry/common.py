@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.textfn import WS_SPLIT
+from ..functions.vectorfn import stable_round6  # noqa: F401  (re-export)
 from ..sources import edges_df, embeddings_df, nodes_df
 
 ORACLE_PRELUDE = """
@@ -57,22 +59,8 @@ edges AS (
 
 # Whitespace tokenizer in DuckDB (= Python str.split / engine tokenize()).
 SQL_TOKENS = (
-    r"list_filter(string_split_regex(lower({col}), '\s+'), x -> x <> '')"
+    f"list_filter(string_split_regex(lower({{col}}), '{WS_SPLIT}'), x -> x <> '')"
 )
-
-
-def stable_round6(c):
-    """Engine-identical half-up rounding of a double expression.
-
-    Spark's round() decides on the exact binary expansion while
-    DuckDB's multiplies by 1e6 in double — they disagree on values
-    that print as 6-decimal halfway points. floor(x*1e6+0.5)/1e6 is
-    pure IEEE double arithmetic, so every engine computes the same
-    bits. SQL twin: ``floor(x * 1000000.0 + 0.5) / 1000000.0``.
-    """
-    from pyspark.sql import functions as F
-
-    return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
 
 def sql_stable_round6(expr: str) -> str:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import ann, curation, dedup, text_analysis
-from .common import ORACLE_PRELUDE, model, sql_stable_round6
+from .common import ORACLE_PRELUDE, SQL_TOKENS, model, sql_stable_round6
 from .pipelineq import _COS, _H60, _IDS_IN, _TOKS, _sh_cte
 
 EVAL_MOD = 41
@@ -1080,8 +1080,7 @@ nodes2 AS (
 ),
 tk AS (
   SELECT id,
-         len(list_filter(string_split_regex(lower(text), '\s+'),
-                         x -> x <> '')) AS ws_tokens
+         len({SQL_TOKENS.format(col='text')}) AS ws_tokens
   FROM nodes2
 ),
 dropped AS (SELECT id FROM ca WHERE keep = 0)

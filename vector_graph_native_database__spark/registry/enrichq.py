@@ -30,13 +30,13 @@ from ..operators.text_analysis import (
     pii_scrub,
     winnowing_fingerprint,
 )
-from .common import ORACLE_PRELUDE, model
+from .common import ORACLE_PRELUDE, SQL_TOKENS, model
 
 _H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
-_TOKS = r""",
+_TOKS = f""",
 toks AS (
-  SELECT id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
+  SELECT id, {SQL_TOKENS.format(col='text')} AS t
   FROM nodes
 )"""
 

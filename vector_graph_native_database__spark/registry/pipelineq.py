@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import ann, dedup, text_analysis
-from .common import ORACLE_PRELUDE, model
+from .common import ORACLE_PRELUDE, SQL_TOKENS, model
 
 ANN_QUERY_IDS = ["0", "100", "200", "300", "400"]
 
@@ -637,9 +637,9 @@ cand AS (
     )
 
 
-_TOKS = r""",
+_TOKS = f""",
 toks AS (
-  SELECT id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
+  SELECT id, {SQL_TOKENS.format(col='text')} AS t
   FROM nodes
 )"""
 
@@ -2302,15 +2302,12 @@ def q_text_jsd_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     absent on one side contributes only the present side's
     p·ln(p/m) term (the 0·ln 0 = 0 convention). Output in nats,
     6dp."""
+    from ..functions.textfn import tokenize
+
     nodes, _, _ = model(spark, sf_dir)
     toks = nodes.select(
         F.col("source"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), r"\s+"),
-                lambda x: x != "",
-            )
-        ).alias("tok"),
+        F.explode(tokenize("text")).alias("tok"),
     )
     tc = toks.groupBy("source", "tok").agg(F.count("*").alias("c"))
     tot = tc.groupBy("source").agg(F.sum("c").alias("n"))

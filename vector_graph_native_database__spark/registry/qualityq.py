@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..operators import profiling
 from ..sources import load_table
-from .common import stable_round6
+from .common import SQL_TOKENS, stable_round6
 
 
 def q_profile_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1154,7 +1154,9 @@ reps AS MATERIALIZED (
   FROM nodes GROUP BY text
 ),
 toks AS (
-  SELECT id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
+  SELECT id, """
+        + SQL_TOKENS.format(col="text")
+        + """ AS t
   FROM reps
 )"""
         + _sh_cte(2, "sh").replace("\nsh AS (", "\nsh AS MATERIALIZED (")

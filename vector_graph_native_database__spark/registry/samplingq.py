@@ -96,9 +96,9 @@ QUERIES = {
     "corpus_pipeline_summary": q_corpus_pipeline_summary,
 }
 
-_TOKS = r""",
+_TOKS = f""",
 toks AS (
-  SELECT id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
+  SELECT id, {SQL_TOKENS.format(col='text')} AS t
   FROM nodes
 )"""
 

@@ -393,10 +393,9 @@ def q_bm25_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["bm25_phrase_search"] = q_bm25_phrase_search
-_TOKS = r""",
+_TOKS = f""",
 toks AS (
-  SELECT id, list_filter(string_split_regex(lower(text), '\s+'),
-                         x -> x <> '') AS t
+  SELECT id, {SQL_TOKENS.format(col='text')} AS t
   FROM nodes
 )"""
 
