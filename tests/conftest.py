@@ -25,19 +25,24 @@ def sf_dir():
 
 @pytest.fixture()
 def spark_jobs(spark):
-    """``spark_jobs(fn)`` → (fn(), number of Spark jobs fn started)."""
+    """``spark_jobs(fn)`` → (fn(), number of Spark jobs fn started).
+
+    Calls nest: an inner call's jobs count only for the inner call, and
+    the outer group is restored when it returns."""
     import uuid
 
     sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description")
 
     def run(fn):
         group = f"spark-jobs-{uuid.uuid4().hex}"
+        outer = [sc.getLocalProperty(key) for key in keys]
         sc.setJobGroup(group, group)
         try:
             out = fn()
         finally:
-            for key in ("spark.jobGroup.id", "spark.job.description"):
-                sc.setLocalProperty(key, None)
+            for key, value in zip(keys, outer):
+                sc.setLocalProperty(key, value)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 

@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 from vector_graph_native_database__spark.operators.analytics import (
     connected_components,
     degrees,
+    jaccard_link_prediction,
+    label_propagation,
     pagerank,
     sssp_k,
     triangle_count,
@@ -469,3 +471,97 @@ def test_katz_bounded_exact_on_path(spark):
     assert got["3"] == 0.11
     assert got["4"] == 0.111
     assert got["5"] == 0.1111
+
+
+def test_label_propagation_two_cliques(spark):
+    # two triangles joined by nothing: each converges to its min id
+    pairs = [("a", "b"), ("b", "c"), ("a", "c"), ("x", "y"), ("y", "z"), ("x", "z")]
+    verts = spark.createDataFrame(
+        [(v,) for v in "abcxyz"], "id string"
+    )
+    got = {
+        r["id"]: r["label"]
+        for r in label_propagation(verts, _edges(spark, pairs), rounds=4).collect()
+    }
+    assert {got[v] for v in "abc"} == {"a"}
+    assert {got[v] for v in "xyz"} == {"x"}
+
+
+def test_label_propagation_isolated_keeps_own_label(spark):
+    verts = spark.createDataFrame([("a",), ("b",), ("lone",)], "id string")
+    got = {
+        r["id"]: r["label"]
+        for r in label_propagation(
+            verts, _edges(spark, [("a", "b")]), rounds=1
+        ).collect()
+    }
+    assert got["lone"] == "lone"
+    # synchronous LPA: after one round each endpoint holds the
+    # other's start label (the documented deterministic variant —
+    # a lone edge oscillates, cliques converge)
+    assert got["a"] == "b" and got["b"] == "a"
+
+
+def test_jaccard_linkpred_excludes_existing_edges(spark):
+    # path a-b-c: only non-adjacent pair sharing a neighbor is (a,c)
+    got = jaccard_link_prediction(
+        _edges(spark, [("a", "b"), ("b", "c")]), top_k=10
+    ).collect()
+    assert len(got) == 1
+    row = got[0]
+    assert (row["src"], row["dst"]) == ("a", "c")
+    # N(a)={b}, N(c)={b}: jaccard 1/1
+    assert row["common"] == 1 and row["jaccard"] == 1.0
+
+
+def test_jaccard_linkpred_score_value(spark):
+    # star: hub h connects a,b,c; pairs (a,b),(a,c),(b,c) each share
+    # exactly {h}; deg=1 each -> jaccard = 1/(1+1-1) = 1
+    got = jaccard_link_prediction(
+        _edges(spark, [("h", "a"), ("h", "b"), ("h", "c")]), top_k=10
+    ).collect()
+    assert {(r["src"], r["dst"]) for r in got} == {
+        ("a", "b"),
+        ("a", "c"),
+        ("b", "c"),
+    }
+    assert all(r["jaccard"] == 1.0 for r in got)
+
+
+def test_modularity_two_cliques_with_bridge(spark):
+    from vector_graph_native_database__spark.operators.analytics import (
+        modularity,
+    )
+
+    pairs = [
+        ("a", "b"), ("b", "c"), ("a", "c"),
+        ("x", "y"), ("y", "z"), ("x", "z"),
+        ("c", "x"),  # bridge
+    ]
+    labels = spark.createDataFrame(
+        [(v, "A") for v in "abc"] + [(v, "X") for v in "xyz"],
+        "id string, label string",
+    )
+    (row,) = modularity(_edges(spark, pairs), labels).collect()
+    assert row["n_communities"] == 2
+    assert row["n_intra_edges"] == 6
+    # Q = 2 * (3/7 - (7/14)^2) = 0.357142857...
+    assert abs(row["modularity"] - 0.357143) < 1e-6
+
+
+def test_ktruss_triangle_survives_pendants_drop(spark):
+    from vector_graph_native_database__spark.operators.analytics import (
+        ktruss_peel,
+    )
+
+    # one triangle (a,b,c) plus a pendant path c-d-e
+    pairs = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("d", "e")]
+    edges = _edges(spark, pairs)
+    got = {
+        (r["a"], r["b"]): r["support"]
+        for r in ktruss_peel(edges, k=3, rounds=2).collect()
+    }
+    assert got == {("a", "b"): 1, ("b", "c"): 1, ("a", "c"): 1}
+    # k=4 demands every edge sit in ≥2 triangles of the truss: a
+    # single triangle cannot satisfy it — peel cascades to empty
+    assert ktruss_peel(edges, k=4, rounds=2).count() == 0

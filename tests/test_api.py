@@ -274,3 +274,105 @@ def test_encode_runs_no_spark_job(engine, spark_jobs):
         local_frame(engine.spark, [("q", text)], "id string, text string")
     ).collect()[0]["vector"]
     assert vec == list(want)
+
+
+def _probes_counted(monkeypatch, spark_jobs) -> list[int]:
+    """Run every ``_node_exists`` probe in its own job group; → the
+    per-probe job counts, so a route's own group counts the rest."""
+    probe = VectorGraphEngine._node_exists
+    counts: list[int] = []
+
+    def counted(self, node_id):
+        out, jobs = spark_jobs(lambda: probe(self, node_id))
+        counts.append(jobs)
+        return out
+
+    monkeypatch.setattr(VectorGraphEngine, "_node_exists", counted)
+    return counts
+
+
+def test_write_routes_commit_without_spark_jobs(engine, spark_jobs, monkeypatch):
+    # every write commits a narrow plan, so the lazy checkpoint runs
+    # no query stage: a write pays only for its existence probes
+    a = engine.create_node("alpha beta", {"k": "v"})
+    b = engine.create_node("beta gamma")
+    engine.bm25_search("beta")  # builds the maintained index
+    _, jobs = spark_jobs(lambda: engine.create_node("gamma delta", node_id="c"))
+    assert jobs == 0
+    probes = _probes_counted(monkeypatch, spark_jobs)
+    for route in (
+        lambda: engine.create_edge(a, b, "t", 2.0),
+        lambda: engine.update_node(
+            a, text="alpha alpha", metadata={}, regen_embedding=True
+        ),
+        lambda: engine.delete_node(b),
+    ):
+        before = len(probes)
+        _, jobs = spark_jobs(route)
+        assert jobs == 0 and len(probes) > before
+    assert engine.get_node(a)["metadata"] == {}
+    assert engine.get_node(a)["outgoing"] == []
+
+
+def _assert_bm25_matches_rebuild(engine, query, got):
+    from vector_graph_native_database__spark.operators.bm25 import bm25_topk
+
+    want = bm25_topk(engine.nodes, query, 10).collect()
+    assert [(r["id"], round(r["score"], 6)) for r in got] == [
+        (r["id"], round(r["score"], 6)) for r in want
+    ]
+
+
+def test_bm25_search_folds_writes_in_bounded_jobs(engine, spark_jobs):
+    for i, text in enumerate(["red fox", "lazy dog", "red dog dog", "fox"]):
+        engine.create_node(text, node_id=f"n{i}")
+    engine.bm25_search("red")
+    engine.create_node("red red hen", node_id="n9")
+    engine.update_node("n1", text="quick red fox")
+    engine.delete_node("n3")
+    got, jobs = spark_jobs(lambda: engine.bm25_search("red fox dog", 10))
+    assert jobs <= 13
+    _assert_bm25_matches_rebuild(engine, "red fox dog", got)
+
+
+def test_reassigned_nodes_rebuild_the_bm25_index(engine, spark):
+    from vector_graph_native_database__spark.session import local_frame
+
+    for i, text in enumerate(["old text about cats", "birds", "fish"]):
+        engine.create_node(text, node_id="abc"[i])
+    assert [r["id"] for r in engine.bm25_search("cats dogs")] == ["a"]
+    engine.nodes = local_frame(
+        spark,
+        [("x", "dogs and more dogs", {}), ("y", "cats", {}),
+         ("w", "birds", {}), ("v", "fish", {}), ("u", "owls", {}),
+         ("t", "bats", {})],
+        "id string, text string, metadata map<string,string>",
+    )
+    _assert_bm25_matches_rebuild(
+        engine, "cats dogs", engine.bm25_search("cats dogs")
+    )
+    # reassigned again, then written through a route
+    engine.nodes = engine.nodes.filter("id <> 'y'")
+    engine.create_node("dogs", node_id="z")
+    got = engine.bm25_search("cats dogs")
+    _assert_bm25_matches_rebuild(engine, "cats dogs", got)
+    assert {r["id"] for r in got} == {"x", "z"}
+
+
+def test_commits_cap_partitions_at_default_parallelism(engine, spark):
+    cap = spark.sparkContext.defaultParallelism
+    ids = []
+    for i in range(50):
+        if i % 5 < 4:
+            ids.append(
+                engine.create_node(f"t {i}", node_id=f"p{i}", embedding=[1.0])
+            )
+        else:
+            engine.create_edge(ids[-1], ids[-2], "t", edge_id=f"e{i}")
+    for frame in (engine.nodes, engine.embeddings, engine.edges):
+        assert frame.rdd.getNumPartitions() <= cap
+    assert engine.stats() == {
+        "total_nodes": len(ids),
+        "nodes_with_embeddings": len(ids),
+        "total_edges": 50 - len(ids),
+    }

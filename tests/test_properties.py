@@ -220,18 +220,37 @@ WHITESPACE = "".join(c for c in map(chr, range(0x110000)) if c.isspace())
 @settings(**SETTINGS)
 def test_tokenizers_split_like_str_split(spark, text):
     """``tokenize`` (Spark) and its DuckDB twin ``SQL_TOKENS`` both
-    split where ``str.split()`` does: on every ``isspace()`` character."""
-    import duckdb
+    split where ``str.split()`` does: on every ``isspace()`` character;
+    exact dedup's normalized text (``normalize_ws`` / ``SQL_NORMALIZED``)
+    hashes the same in both engines as the ``str.split()`` join."""
+    import hashlib
 
-    from vector_graph_native_database__spark.functions.textfn import tokenize
-    from vector_graph_native_database__spark.registry.common import SQL_TOKENS
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from vector_graph_native_database__spark.functions.textfn import (
+        normalize_ws,
+        tokenize,
+    )
+    from vector_graph_native_database__spark.registry.common import (
+        SQL_NORMALIZED,
+        SQL_TOKENS,
+    )
     from vector_graph_native_database__spark.session import local_frame
 
     want = text.lower().split()
     row = local_frame(spark, [(text,)], "text string")
-    assert row.select(tokenize("text").alias("t")).collect()[0]["t"] == want
-    sql = f"SELECT {SQL_TOKENS.format(col='?')}"
-    assert duckdb.connect().execute(sql, [text]).fetchone()[0] == want
+    got = row.select(
+        tokenize("text").alias("t"), F.md5(normalize_ws("text")).alias("h")
+    ).collect()[0]
+    assert got["t"] == want
+    sql = (
+        f"SELECT {SQL_TOKENS.format(col='$1')}, "
+        f"md5({SQL_NORMALIZED.format(col='$1')})"
+    )
+    toks, digest = duckdb.connect().execute(sql, [text]).fetchone()
+    assert toks == want
+    assert got["h"] == digest == hashlib.md5(" ".join(want).encode()).hexdigest()
 
 
 # -- BM25 --------------------------------------------------------------------
@@ -319,6 +338,175 @@ def test_upsert_is_idempotent_and_batch_wins(spark, table, batch):
     got_twice = {r["id"]: r["v"] for r in twice.collect()}
     assert got_once == want
     assert got_twice == want
+
+
+# -- facade writes -----------------------------------------------------------
+
+node_ids = st.sampled_from(["n0", "n1", "n2", "n3"])
+edge_ids = st.sampled_from(["e0", "e1"])
+# zero-token ("", "  ") and repeated-token ("a a") texts included
+doc_text = st.text(alphabet="abc d", max_size=8)
+bm25_query = st.lists(st.sampled_from("abcd"), min_size=1, max_size=3).map(
+    " ".join
+)
+facade_op = st.one_of(
+    st.tuples(st.just("create"), node_ids, doc_text),
+    st.tuples(
+        st.just("update"),
+        node_ids,
+        st.none() | doc_text,
+        st.none()
+        | st.dictionaries(st.sampled_from("xy"), st.sampled_from("12"), max_size=2),
+    ),
+    st.tuples(st.just("delete"), node_ids),
+    st.tuples(st.just("delete_all")),
+    st.tuples(st.just("edge"), edge_ids, node_ids, node_ids),
+    st.tuples(
+        st.just("edge_update"),
+        edge_ids,
+        st.none() | st.sampled_from("tu"),
+        st.none() | st.sampled_from([0.5, 2.0]),
+    ),
+    st.tuples(st.just("edge_delete"), edge_ids),
+    st.tuples(st.just("search"), bm25_query),
+)
+
+
+def _duck_bm25(nodes, query: str, k: int) -> list[tuple]:
+    import duckdb
+    import pyarrow as pa
+
+    from vector_graph_native_database__spark.registry.searchq import (
+        _bm25_multi_sql,
+    )
+
+    rows = nodes.select("id", "text").collect()
+    con = duckdb.connect()
+    con.register("documents", pa.table({
+        "doc_id": pa.array([r["id"] for r in rows], pa.string()),
+        "text": pa.array([r["text"] for r in rows], pa.string()),
+        "lang": pa.array([None] * len(rows), pa.string()),
+        "source": pa.array([None] * len(rows), pa.string()),
+        "n_chars": pa.array([0] * len(rows), pa.int64()),
+    }))
+    return [
+        (nid, round(score, 6))
+        for _, nid, score in con.execute(
+            _bm25_multi_sql({"q": query}, k)
+        ).fetchall()
+    ]
+
+
+def _ranked6(rows) -> list[tuple]:
+    return sorted(
+        ((r[0], round(r[1], 6)) for r in rows), key=lambda r: (-r[1], r[0])
+    )
+
+
+def _check_bm25(engine, query: str) -> None:
+    """The maintained index answers like a rebuild and like DuckDB."""
+    from vector_graph_native_database__spark.operators.bm25 import bm25_topk
+
+    k = 10
+    got = [(r["id"], r["score"]) for r in engine.bm25_search(query, k)]
+    rebuilt = [
+        (r["id"], r["score"])
+        for r in bm25_topk(engine.nodes, query, k).collect()
+    ]
+    assert _ranked6(got) == _ranked6(rebuilt) == _ranked6(
+        _duck_bm25(engine.nodes, query, k)
+    )
+
+
+@given(ops=st.lists(facade_op, max_size=8))
+@example([("delete", "n0"), ("create", "n0", "a a"), ("search", "a")])
+@example([("edge", "e0", "n0", "n1"), ("delete_all",), ("search", "a b")])
+@settings(max_examples=4, deadline=None)
+def test_facade_writes_match_crud_batch_operators(spark, ops):
+    """Any write sequence through the facade's narrow single-row commits
+    leaves the state the ``crud`` batch operators leave, and its
+    maintained BM25 index answers like a rebuild and like DuckDB."""
+    from vector_graph_native_database__spark.api import (
+        EDGES_SCHEMA,
+        EMB_SCHEMA,
+        NODES_SCHEMA,
+        VectorGraphEngine,
+    )
+    from vector_graph_native_database__spark.operators import crud
+    from vector_graph_native_database__spark.session import local_frame
+
+    def frame(rows, ddl):
+        return local_frame(spark, rows, ddl)
+
+    seed = [("n0", "a b", {}), ("n1", "b c c", {"x": "1"}), ("n2", "d", {})]
+    nodes = frame(seed, NODES_SCHEMA)
+    emb = frame([(i, [1.0], 1) for i, _, _ in seed], EMB_SCHEMA)
+    edges = frame([], EDGES_SCHEMA)
+    engine = VectorGraphEngine(spark, nodes, emb, edges)
+    live, links = {i for i, _, _ in seed}, {}
+    engine.bm25_search("a")  # build, so the writes below are folded
+    for step, (kind, *args) in enumerate(ops):
+        if kind == "create":
+            nid, text = args
+            engine.create_node(text, node_id=nid, embedding=[float(step)])
+            nodes = crud.upsert(nodes, frame([(nid, text, {})], NODES_SCHEMA), "id")
+            emb = crud.upsert(
+                emb, frame([(nid, [float(step)], 1)], EMB_SCHEMA), "node_id"
+            )
+            live.add(nid)
+        elif kind == "update" and args[0] in live:
+            nid, text, meta = args
+            engine.update_node(nid, text=text, metadata=meta)
+            nodes = crud.update_partial(
+                nodes, frame([(nid, text, meta)], NODES_SCHEMA), "id",
+                ["text", "metadata"],
+            )
+        elif kind in ("delete", "delete_all"):
+            for nid in sorted(live) if kind == "delete_all" else args:
+                if nid not in live:
+                    continue
+                engine.delete_node(nid)
+                nodes, emb, edges = crud.node_delete_cascade(
+                    nodes, emb, edges, frame([(nid,)], "id string")
+                )
+                live.discard(nid)
+                links = {e: sd for e, sd in links.items() if nid not in sd}
+        elif kind == "edge" and args[0] not in links and live >= set(args[1:]):
+            eid, src, dst = args
+            engine.create_edge(src, dst, "t", 1.0, edge_id=eid)
+            edges = crud.edge_insert_validated(
+                edges, nodes, frame([(eid, src, dst, "t", 1.0)], EDGES_SCHEMA)
+            )
+            links[eid] = (src, dst)
+        elif kind == "edge_update" and args[0] in links:
+            eid, etype, weight = args
+            engine.update_edge(eid, edge_type=etype, weight=weight)
+            edges = crud.update_partial(
+                edges,
+                frame([(eid, etype, weight)], "id string, type string, weight double"),
+                "id", ["type", "weight"],
+            )
+        elif kind == "edge_delete" and args[0] in links:
+            engine.delete_edge(args[0])
+            edges = crud.edge_delete(edges, frame([(args[0],)], "id string"))
+            del links[args[0]]
+        elif kind == "search":
+            _check_bm25(engine, args[0])
+
+    def rows(df):
+        return sorted(
+            tuple(
+                tuple(sorted(v.items())) if isinstance(v, dict)
+                else tuple(v) if isinstance(v, list) else v
+                for v in r
+            )
+            for r in df.collect()
+        )
+
+    assert rows(engine.nodes) == rows(nodes)
+    assert rows(engine.embeddings) == rows(emb)
+    assert rows(engine.edges) == rows(edges)
+    _check_bm25(engine, "a b c d")
 
 
 # -- hot-key-salted join -----------------------------------------------------

@@ -10,10 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from vector_graph_native_database__spark.operators.analytics import (
-    jaccard_link_prediction,
-    label_propagation,
-)
 from vector_graph_native_database__spark.operators.cdc import scd2_merge
 from vector_graph_native_database__spark.operators.curation import pca_pc1
 from vector_graph_native_database__spark.operators.ann import range_search
@@ -24,61 +20,6 @@ def _edges(spark, pairs):
         [(a, b, "t", 1.0) for a, b in pairs],
         "src string, dst string, type string, weight double",
     )
-
-
-def test_label_propagation_two_cliques(spark):
-    # two triangles joined by nothing: each converges to its min id
-    pairs = [("a", "b"), ("b", "c"), ("a", "c"), ("x", "y"), ("y", "z"), ("x", "z")]
-    verts = spark.createDataFrame(
-        [(v,) for v in "abcxyz"], "id string"
-    )
-    got = {
-        r["id"]: r["label"]
-        for r in label_propagation(verts, _edges(spark, pairs), rounds=4).collect()
-    }
-    assert {got[v] for v in "abc"} == {"a"}
-    assert {got[v] for v in "xyz"} == {"x"}
-
-
-def test_label_propagation_isolated_keeps_own_label(spark):
-    verts = spark.createDataFrame([("a",), ("b",), ("lone",)], "id string")
-    got = {
-        r["id"]: r["label"]
-        for r in label_propagation(
-            verts, _edges(spark, [("a", "b")]), rounds=1
-        ).collect()
-    }
-    assert got["lone"] == "lone"
-    # synchronous LPA: after one round each endpoint holds the
-    # other's start label (the documented deterministic variant —
-    # a lone edge oscillates, cliques converge)
-    assert got["a"] == "b" and got["b"] == "a"
-
-
-def test_jaccard_linkpred_excludes_existing_edges(spark):
-    # path a-b-c: only non-adjacent pair sharing a neighbor is (a,c)
-    got = jaccard_link_prediction(
-        _edges(spark, [("a", "b"), ("b", "c")]), top_k=10
-    ).collect()
-    assert len(got) == 1
-    row = got[0]
-    assert (row["src"], row["dst"]) == ("a", "c")
-    # N(a)={b}, N(c)={b}: jaccard 1/1
-    assert row["common"] == 1 and row["jaccard"] == 1.0
-
-
-def test_jaccard_linkpred_score_value(spark):
-    # star: hub h connects a,b,c; pairs (a,b),(a,c),(b,c) each share
-    # exactly {h}; deg=1 each -> jaccard = 1/(1+1-1) = 1
-    got = jaccard_link_prediction(
-        _edges(spark, [("h", "a"), ("h", "b"), ("h", "c")]), top_k=10
-    ).collect()
-    assert {(r["src"], r["dst"]) for r in got} == {
-        ("a", "b"),
-        ("a", "c"),
-        ("b", "c"),
-    }
-    assert all(r["jaccard"] == 1.0 for r in got)
 
 
 def test_pca_pc1_recovers_dominant_axis(spark):
@@ -156,27 +97,6 @@ def test_mad_outlier_registry_entry(spark):
     assert rows and all(r["mad"] >= 0 for r in rows)
     # outliers are a small tail by construction of the estimator
     assert all(r["n_outliers"] < 0.1 * r["n"] for r in rows)
-
-
-def test_modularity_two_cliques_with_bridge(spark):
-    from vector_graph_native_database__spark.operators.analytics import (
-        modularity,
-    )
-
-    pairs = [
-        ("a", "b"), ("b", "c"), ("a", "c"),
-        ("x", "y"), ("y", "z"), ("x", "z"),
-        ("c", "x"),  # bridge
-    ]
-    labels = spark.createDataFrame(
-        [(v, "A") for v in "abc"] + [(v, "X") for v in "xyz"],
-        "id string, label string",
-    )
-    (row,) = modularity(_edges(spark, pairs), labels).collect()
-    assert row["n_communities"] == 2
-    assert row["n_intra_edges"] == 6
-    # Q = 2 * (3/7 - (7/14)^2) = 0.357142857...
-    assert abs(row["modularity"] - 0.357143) < 1e-6
 
 
 def test_bigram_logprob_prefers_frequent_bigrams(spark):
@@ -696,24 +616,6 @@ def test_changelog_apply_latest_seq_wins_and_deletes(spark):
         for r in changelog_apply(base, log, ["k"]).collect()
     }
     assert got == {"a": 20.0, "d": 4.0}
-
-
-def test_ktruss_triangle_survives_pendants_drop(spark):
-    from vector_graph_native_database__spark.operators.analytics import (
-        ktruss_peel,
-    )
-
-    # one triangle (a,b,c) plus a pendant path c-d-e
-    pairs = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("d", "e")]
-    edges = _edges(spark, pairs)
-    got = {
-        (r["a"], r["b"]): r["support"]
-        for r in ktruss_peel(edges, k=3, rounds=2).collect()
-    }
-    assert got == {("a", "b"): 1, ("b", "c"): 1, ("a", "c"): 1}
-    # k=4 demands every edge sit in ≥2 triangles of the truss: a
-    # single triangle cannot satisfy it — peel cascades to empty
-    assert ktruss_peel(edges, k=4, rounds=2).count() == 0
 
 
 def test_zipf_fit_exact_on_synthetic_power_law(spark):

@@ -13,13 +13,26 @@ State model: the engine holds the current ``nodes`` / ``embeddings``
 snapshots, the DataFrame idiom). Seed frames are projected to the
 facade schemas on entry, so wider frames such as ``sources.nodes_df``
 (which also carries ``lang``/``source``/``n_chars``) are accepted.
-Single-row convenience methods wrap the batch operators in
-``operators/crud.py``; batch ingestion should call those operators
-directly, and a durable deployment writes each new state (or a Delta
-MERGE) instead of holding it in memory.
+
+Each write route commits a narrow single-row plan with the same result
+as the batch operator in ``operators/crud.py`` that it replaces: an
+upsert filters the old state by a null-safe key literal and unions
+the one-row batch, a partial update is a ``when(key = …)``
+projection, a delete is a null-safe literal filter, and an edge insert
+(whose endpoints the route has probed) is a plain union. None of them
+has an exchange, so the commit starts no Spark job (see
+:meth:`VectorGraphEngine._commit`). Batch ingestion should call the
+``crud`` operators directly, and a durable deployment writes each new
+state (or a Delta MERGE) instead of holding it in memory.
+
+``bm25_search`` serves from a :class:`~.operators.bm25.MaintainedIndex`
+built on its first call: writes record the changed texts on the
+driver and the next search folds them in, so a search stops
+re-tokenizing the whole node set. Reassigning ``nodes`` outside the
+write routes makes the next search rebuild it.
 
 Every request frame a route builds from its arguments — the mutation
-batch, the delete key, the query vector — is a JVM local relation
+batch, the query vector — is a JVM local relation
 (``session.local_frame``): it is scanned on the driver, so a route
 runs no Python-worker tasks for its own inputs.
 """
@@ -28,13 +41,13 @@ from __future__ import annotations
 
 import uuid
 from collections.abc import Mapping
+from functools import cached_property
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.textfn import EMBED_DIM, embed_hash
-from .operators import crud
-from .operators.bm25 import bm25_topk
+from .operators.bm25 import MaintainedIndex, bm25_topk
 from .operators.graph import graph_search as _graph_search
 from .operators.hybrid import hybrid_search as _hybrid_search
 from .operators.vector_search import vector_topk
@@ -61,6 +74,9 @@ class VectorGraphEngine:
         self.nodes = self._conform(nodes, NODES_SCHEMA)
         self.embeddings = self._conform(embeddings, EMB_SCHEMA)
         self.edges = self._conform(edges, EDGES_SCHEMA)
+        # the BM25 index and the nodes frame it describes
+        self._bm25: MaintainedIndex | None = None
+        self._bm25_nodes: DataFrame | None = None
 
     # -- helpers -----------------------------------------------------------
 
@@ -79,19 +95,73 @@ class VectorGraphEngine:
     def _commit(df: DataFrame) -> DataFrame:
         """Truncate lineage after a mutation (deferred checkpoint).
 
-        Without this, every single-row mutation stacks another
-        upsert/anti-join onto the plan and the Nth operation pays for
-        all N-1 before it; with it, each state is a shallow plan over
-        the previous checkpoint. A durable deployment writes the new
-        state (or a Delta MERGE) here instead.
+        Without this, every single-row mutation stacks another filter
+        or union onto the plan and the Nth operation pays for all N-1
+        before it; with it, each state is a shallow plan over the
+        previous checkpoint. The plan must stay narrow: a lazy
+        checkpoint builds its RDD at once, and with AQE building it
+        runs every query stage (shuffle, broadcast) of the plan, so an
+        exchange here is paid as Spark jobs by the write itself. Each
+        union adds the batch's partition, so a narrow ``coalesce`` caps
+        the count at the session's ``defaultParallelism``. A durable
+        deployment writes the new state (or a Delta MERGE) here
+        instead.
         """
-        return df.localCheckpoint(eager=False)
+        cap = df.sparkSession.sparkContext.defaultParallelism
+        return df.coalesce(cap).localCheckpoint(eager=False)
+
+    def _set_nodes(
+        self,
+        nodes: DataFrame,
+        node_id: str | None = None,
+        text: str | None = None,
+        live: bool = True,
+    ) -> None:
+        """Commit ``nodes`` and tell the BM25 index that ``node_id`` now
+        holds ``text`` or, not ``live``, is gone (no id: no text
+        changed). An index that no longer describes the old state,
+        because ``nodes`` was reassigned outside the routes, is dropped
+        and rebuilt at the next read."""
+        tracked = self._bm25 is not None and self.nodes is self._bm25_nodes
+        self.nodes = self._commit(nodes)
+        if not tracked:
+            self._bm25 = None
+            return
+        if node_id is not None:
+            self._bm25.record(node_id, text, live)
+        self._bm25_nodes = self.nodes
+
+    @staticmethod
+    def _without(df: DataFrame, key: str, value: str) -> DataFrame:
+        """``df`` minus its rows whose ``key`` is ``value`` (null-safe:
+        null keys stay, as with a broadcast anti-join)."""
+        return df.filter(~F.col(key).eqNullSafe(value))
+
+    @staticmethod
+    def _patch(
+        df: DataFrame, key: str, value: str, changes: Mapping[str, object]
+    ) -> DataFrame:
+        """``df`` with the non-null ``changes`` (column → literal) set
+        on the rows whose ``key`` is ``value``; others pass as-is."""
+        hit = F.col(key) == value
+        return df.select(*(
+            F.when(hit, changes[c]).otherwise(F.col(c)).alias(c)
+            if changes.get(c) is not None
+            else F.col(c)
+            for c in df.columns
+        ))
+
+    @cached_property
+    def _embed_text(self) -> Column:
+        # built once: building the 256-dim expression tree took about
+        # 0.08 s of py4j calls, a quarter of a create_node
+        return embed_hash("text").alias("vector")
 
     def _encode(self, text: str) -> list[float]:
         """Hash-embed one text (the reference's auto-embedding)."""
         row = (
             local_frame(self.spark, [(text,)], "text string")
-            .select(embed_hash("text").alias("vector"))
+            .select(self._embed_text)
             .collect()[0]
         )
         return list(row["vector"])
@@ -111,7 +181,9 @@ class VectorGraphEngine:
             EMB_SCHEMA,
         )
         self.embeddings = self._commit(
-            crud.upsert(self.embeddings, batch, "node_id")
+            self._without(self.embeddings, "node_id", node_id).unionByName(
+                batch
+            )
         )
 
     # -- node routes (app.py:753-834) --------------------------------------
@@ -135,7 +207,9 @@ class VectorGraphEngine:
         batch = local_frame(
             self.spark, [(nid, text, dict(metadata or {}))], NODES_SCHEMA
         )
-        self.nodes = self._commit(crud.upsert(self.nodes, batch, "id"))
+        self._set_nodes(
+            self._without(self.nodes, "id", nid).unionByName(batch), nid, text
+        )
         if embedding is not None:
             self._put_embedding(nid, embedding)
         elif auto_embed:
@@ -185,13 +259,19 @@ class VectorGraphEngine:
         """
         if not self._node_exists(node_id):
             raise KeyError(node_id)
-        changes = local_frame(
-            self.spark,
-            [(node_id, text, dict(metadata) if metadata is not None else None)],
-            NODES_SCHEMA,
-        )
-        self.nodes = self._commit(
-            crud.update_partial(self.nodes, changes, "id", ["text", "metadata"])
+        meta = None
+        if metadata is not None:
+            meta = F.create_map(
+                *(F.lit(x) for kv in metadata.items() for x in kv)
+            ).cast("map<string,string>")
+        self._set_nodes(
+            self._patch(
+                self.nodes, "id", node_id,
+                {"text": None if text is None else F.lit(text),
+                 "metadata": meta},
+            ),
+            None if text is None else node_id,
+            text,
         )
         if embedding is not None:
             self._put_embedding(node_id, embedding)
@@ -208,13 +288,20 @@ class VectorGraphEngine:
         """DELETE /nodes/{id} — cascade (embedding + incident edges)."""
         if not self._node_exists(node_id):
             raise KeyError(node_id)
-        d = local_frame(self.spark, [(node_id,)], "id string")
-        n2, emb2, e2 = crud.node_delete_cascade(
-            self.nodes, self.embeddings, self.edges, d
+        self._set_nodes(
+            self._without(self.nodes, "id", node_id), node_id, live=False
         )
-        self.nodes = self._commit(n2)
-        self.embeddings = self._commit(emb2)
-        self.edges = self._commit(e2)
+        self.embeddings = self._commit(
+            self._without(self.embeddings, "node_id", node_id)
+        )
+        self.edges = self._commit(
+            self.edges.filter(
+                ~(
+                    F.col("src").eqNullSafe(node_id)
+                    | F.col("dst").eqNullSafe(node_id)
+                )
+            )
+        )
 
     # -- edge routes (app.py:839-877) --------------------------------------
 
@@ -236,9 +323,7 @@ class VectorGraphEngine:
             [(eid, src, dst, edge_type, float(weight))],
             EDGES_SCHEMA,
         )
-        self.edges = self._commit(
-            crud.edge_insert_validated(self.edges, self.nodes, batch)
-        )
+        self.edges = self._commit(self.edges.unionByName(batch))
         return eid
 
     def get_edge(self, edge_id: str) -> dict:
@@ -260,25 +345,18 @@ class VectorGraphEngine:
         """PUT /edges/{id} — partial update of type/weight."""
         if not self.edges.filter(F.col("id") == edge_id).take(1):
             raise KeyError(edge_id)
-        changes = local_frame(
-            self.spark,
-            [(edge_id, edge_type,
-              float(weight) if weight is not None else None)],
-            "id string, type string, weight double",
-        )
         self.edges = self._commit(
-            crud.update_partial(self.edges, changes, "id", ["type", "weight"])
+            self._patch(
+                self.edges, "id", edge_id,
+                {"type": None if edge_type is None else F.lit(edge_type),
+                 "weight": None if weight is None else F.lit(float(weight))},
+            )
         )
 
     def delete_edge(self, edge_id: str) -> None:
         if not self.edges.filter(F.col("id") == edge_id).take(1):
             raise KeyError(edge_id)
-        self.edges = self._commit(
-            crud.edge_delete(
-                self.edges,
-                local_frame(self.spark, [(edge_id,)], "id string"),
-            )
-        )
+        self.edges = self._commit(self._without(self.edges, "id", edge_id))
 
     # -- search routes (app.py:882-920) ------------------------------------
 
@@ -345,10 +423,22 @@ class VectorGraphEngine:
 
     def bm25_search(self, query_text: str, top_k: int = 10) -> list[dict]:
         """The standalone BM25 capability (no reference endpoint —
-        advertised in its readme but never routed; SURVEY §4.8.3)."""
+        advertised in its readme but never routed; SURVEY §4.8.3).
+
+        The first call builds the index from ``nodes``; later calls fold
+        the writes recorded since into it, or rebuild it when ``nodes``
+        was reassigned outside the write routes.
+        """
+        if self._bm25 is None or self.nodes is not self._bm25_nodes:
+            self._bm25 = MaintainedIndex(self.nodes, self._commit)
+            self._bm25_nodes = self.nodes
+        else:
+            self._bm25.fold()
+        stats = self._bm25.stats()
         return [
             r.asDict()
-            for r in bm25_topk(self.nodes, query_text, top_k).collect()
+            for r in bm25_topk(self.nodes, query_text, top_k, stats=stats)
+            .collect()
         ]
 
     # -- misc routes (app.py:923-940) --------------------------------------
@@ -357,7 +447,8 @@ class VectorGraphEngine:
         return {"status": "ok"}
 
     def stats(self) -> dict:
-        """GET /stats — one multi-aggregate pass + two counts."""
+        """GET /stats — three counts: nodes, distinct embedded node
+        ids and edges."""
         return {
             "total_nodes": self.nodes.count(),
             "nodes_with_embeddings": self.embeddings.select(

@@ -49,6 +49,15 @@ def tokenize(col: Column | str) -> Column:
     return F.filter(F.split(F.lower(c), WS_SPLIT), lambda t: t != "")
 
 
+def normalize_ws(col: Column | str) -> Column:
+    """Lowercase, each whitespace run (``WS_SPLIT``) → one space, then
+    trimmed of spaces: the content normalization of exact dedup.
+    Trimming names the space explicitly because DuckDB's one-argument
+    ``trim`` also drops NBSP, and Spark's does not."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.trim(F.regexp_replace(F.lower(c), WS_SPLIT, " "), F.lit(" "))
+
+
 def hash_bucket(tok: Column | str, dim: int = EMBED_DIM) -> Column:
     """Stable token→bucket hash: int(md5(tok)[:8], 16) % dim."""
     c = F.col(tok) if isinstance(tok, str) else tok

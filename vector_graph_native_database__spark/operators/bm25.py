@@ -30,19 +30,28 @@ it as a local relation, so a query over it runs no corpus-wide
 aggregate; the unstaged paths (:func:`corpus_stats`,
 :func:`staged_index`, plain triples) keep the lazy in-plan
 :func:`_globals_df`.
+
+A corpus that changes one document at a time (the ``api`` facade's
+nodes) is served by :class:`MaintainedIndex`: built once, it folds
+the writes recorded since the last read into its posting, doc-length
+and df frames as filter-and-union plans over only the touched ids
+and terms, so a search after a write pays two narrow collects and
+one vocabulary aggregate instead of a re-tokenize and re-aggregate
+of the corpus. Its answers equal a rebuild's.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from collections import Counter, defaultdict
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.textfn import tokenize
-from ..session import local_frame
+from ..session import in_list, local_frame
 
 K1 = 1.5
 B = 0.75
@@ -50,6 +59,8 @@ EPSILON = 0.25
 # staged-artifact params: bump when the staged layout or the
 # tokenizer changes (tok-v4: textfn.WS_SPLIT)
 _STAGE_PARAMS = "tok-v4"
+# the scalar row a stats tuple may carry as its fourth frame
+_GLOBALS_DDL = "__n_docs long, __avgdl double, __avg_idf double"
 
 
 def corpus_stats(
@@ -240,10 +251,125 @@ def bm25_index_stage(
     df_ = spark.read.parquet(os.path.join(final, "df"))
     with open(os.path.join(final, "globals.json")) as fh:
         rows = [tuple(r) for r in json.load(fh)]
-    globals_df = local_frame(
-        spark, rows, "__n_docs long, __avgdl double, __avg_idf double"
-    )
+    globals_df = local_frame(spark, rows, _GLOBALS_DDL)
     return tf, doclen, df_, globals_df
+
+
+FOLD_AT = 128
+"""Most pending writes a :class:`MaintainedIndex` holds: the write that
+records one more folds them, so its driver state stays request-sized."""
+
+class MaintainedIndex:
+    """(posting, doclen, df_) over a changing node set, kept current by
+    folding its pending writes once per read instead of rebuilding.
+
+    Writes only :meth:`record` ``id → new text | deleted`` on the
+    driver. :meth:`fold` replaces the touched ids' rows in one step:
+    narrow collects read their old posting rows and their terms' old
+    ``df``, the new texts are tokenized by :func:`tokenize` over a
+    local relation (the optimizer folds it, so this runs no job and the
+    tokens are the rebuild's), and each frame commits as
+    ``filter(NOT key IN (…)) ∪ local rows``. ``N`` and ``Σdl`` are
+    driver scalars; the vocabulary-wide idf average is one aggregate
+    per fold. :meth:`stats` serves the result through
+    ``bm25_topk(stats=…)`` with the scalar row as a local relation, the
+    retrieval path of :func:`bm25_index_stage`. ``commit`` cuts each new
+    frame's lineage (the facade's ``_commit``).
+    """
+
+    def __init__(self, nodes: DataFrame, commit) -> None:
+        self._commit = commit
+        self._spark = nodes.sparkSession
+        self.posting = commit(posting_frame(nodes))
+        _, doclen, df_ = stats_from_posting(self.posting)
+        self.doclen, self.df = commit(doclen), commit(df_)
+        n, sum_dl = self.doclen.agg(
+            F.count(F.lit(1)), F.coalesce(F.sum("dl"), F.lit(0))
+        ).collect()[0]
+        self.n_docs, self.sum_dl = n, sum_dl
+        self._pending: dict[str, tuple[bool, str | None]] = {}
+        self._refresh_globals()
+
+    def record(self, doc_id: str, text: str | None, live: bool = True) -> None:
+        """Note that ``doc_id`` now holds ``text`` (``live``) or is gone."""
+        self._pending[doc_id] = (live, text)
+        if len(self._pending) > FOLD_AT:
+            self.fold()
+
+    def fold(self) -> None:
+        """Apply the pending writes to the index frames and scalars."""
+        if not self._pending:
+            return
+        pending, self._pending = self._pending, {}
+        ids = list(pending)
+        old_dl: dict[str, int] = defaultdict(int)
+        delta: dict[str, int] = defaultdict(int)
+        for doc, tok, tf in self.posting.filter(in_list("id", ids)).collect():
+            old_dl[doc] += tf
+            if tok is not None:
+                delta[tok] -= 1
+        live = [(i, text) for i, (alive, text) in pending.items() if alive]
+        rows, lens = [], []
+        for doc, toks in local_frame(
+            self._spark, live, "id string, text string"
+        ).select("id", tokenize("text")).collect():
+            counts = Counter(toks or ())
+            # a zero-token doc keeps its null-token row, as posting_frame's
+            rows += [(doc, t, c) for t, c in counts.items()] or [(doc, None, 0)]
+            lens.append((doc, sum(counts.values())))
+            for t in counts:
+                delta[t] += 1
+        self.n_docs += len(lens) - len(old_dl)
+        self.sum_dl += sum(dl for _, dl in lens) - sum(old_dl.values())
+        keep_ids = ~F.coalesce(in_list("id", ids), F.lit(False))
+        self.posting = self._commit(
+            self.posting.filter(keep_ids).unionByName(
+                local_frame(self._spark, rows, "id string, tok string, tf long")
+            )
+        )
+        self.doclen = self._commit(
+            self.doclen.filter(keep_ids).unionByName(
+                local_frame(self._spark, lens, "id string, dl long")
+            )
+        )
+        moved = [t for t, d in delta.items() if d]
+        if moved:
+            dfs = [
+                (t, df + delta.pop(t))
+                for t, df in self.df.filter(in_list("tok", moved)).collect()
+            ]
+            dfs += [(t, d) for t, d in delta.items() if d]  # new terms
+            self.df = self._commit(
+                self.df.filter(
+                    ~F.coalesce(in_list("tok", moved), F.lit(False))
+                ).unionByName(
+                    local_frame(
+                        self._spark,
+                        [(t, df) for t, df in dfs if df],
+                        "tok string, df long",
+                    )
+                )
+            )
+        self._refresh_globals()
+
+    def _refresh_globals(self) -> None:
+        """The scalar row (N, avgdl, mean raw idf) as a local relation;
+        no row for an empty vocabulary, as with :func:`_globals_df`."""
+        raw_idf = F.log(F.lit(self.n_docs) - F.col("df") + 0.5) - F.log(
+            F.col("df") + 0.5
+        )
+        terms, avg_idf = self.df.agg(
+            F.count(F.lit(1)), F.avg(raw_idf)
+        ).collect()[0]
+        rows = (
+            [(self.n_docs, self.sum_dl / self.n_docs, avg_idf)] if terms else []
+        )
+        self._globals = local_frame(self._spark, rows, _GLOBALS_DDL)
+
+    def stats(self) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+        """→ (tf, doclen, df_, globals_df) for ``bm25_topk(stats=…)``."""
+        tf = self.posting.filter(F.col("tok").isNotNull())
+        return tf, self.doclen, self.df, self._globals
 
 
 def _globals_df(doclen: DataFrame, df_: DataFrame) -> DataFrame:

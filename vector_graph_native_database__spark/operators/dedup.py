@@ -1153,12 +1153,11 @@ def exact_dedup_groups_normalized(
     groupBy shape as :func:`exact_dedup_groups`; the normalization is
     three JVM string expressions fused into the scan projection.
     """
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    )
+    from ..functions.textfn import normalize_ws
+
     return (
         df.select(
-            F.md5(norm).alias("text_hash"),
+            F.md5(normalize_ws(text_col)).alias("text_hash"),
             F.col(id_col).alias("id"),
         )
         .groupBy("text_hash")

@@ -48,7 +48,7 @@ from collections import defaultdict
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_frame
+from ..session import in_list, local_frame
 
 FRONTIER_CAP = 20_000
 """Most driver work a BFS level may take; below the driver/shuffle
@@ -59,15 +59,8 @@ _STARTS_DDL = "qid string, id string"
 
 
 def _src_in(ids: set[str | None]) -> Column:
-    """``src IN (<ids>)`` parsed from one SQL string: ``isin`` makes one
-    JVM call per literal (about 0.5 ms each, 2 s for 5 000 ids). Null
-    ids never match, so they are left out."""
-    lits = [
-        "'" + i.replace("\\", "\\\\").replace("'", "\\'") + "'"
-        for i in ids
-        if i is not None
-    ]
-    return F.expr(f"src IN ({','.join(lits)})") if lits else F.lit(False)
+    """The BFS level filter ``src IN (<ids>)``; null ids never match."""
+    return in_list("src", ids)
 
 
 def _bfs_levels(

@@ -63,6 +63,12 @@ SQL_TOKENS = (
 )
 
 
+# DuckDB twin of textfn.normalize_ws (exact dedup's normalized text).
+SQL_NORMALIZED = (
+    f"trim(regexp_replace(lower({{col}}), '{WS_SPLIT}', ' ', 'g'), ' ')"
+)
+
+
 def sql_stable_round6(expr: str) -> str:
     return f"floor(({expr}) * 1000000.0 + 0.5) / 1000000.0"
 

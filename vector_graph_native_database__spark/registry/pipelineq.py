@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import ann, dedup, text_analysis
-from .common import ORACLE_PRELUDE, SQL_TOKENS, model
+from .common import ORACLE_PRELUDE, SQL_NORMALIZED, SQL_TOKENS, model
 
 ANN_QUERY_IDS = ["0", "100", "200", "300", "400"]
 
@@ -1470,32 +1470,26 @@ def q_dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary value-checks real numbers at every scale. The group
     operator itself (exact_dedup_groups_normalized) is pinned by
     pytest on crafted case/whitespace variants."""
-    from pyspark.sql import functions as F2
+    from ..functions.textfn import normalize_ws
 
     nodes, _, _ = model(spark, sf_dir)
-    norm = F2.trim(
-        F2.regexp_replace(F2.lower(F2.col("text")), r"\s+", " ")
-    )
     return nodes.select(
-        F2.md5("text").alias("rh"), F2.md5(norm).alias("nh")
+        F.md5("text").alias("rh"), F.md5(normalize_ws("text")).alias("nh")
     ).agg(
-        F2.count("*").alias("n_docs"),
-        F2.countDistinct("rh").alias("n_distinct_raw"),
-        F2.countDistinct("nh").alias("n_distinct_norm"),
-        (F2.count("*") - F2.countDistinct("nh")).alias("n_dup_docs_norm"),
+        F.count("*").alias("n_docs"),
+        F.countDistinct("rh").alias("n_distinct_raw"),
+        F.countDistinct("nh").alias("n_distinct_norm"),
+        (F.count("*") - F.countDistinct("nh")).alias("n_dup_docs_norm"),
     )
 
 
 QUERIES["dedup_exact_normalized"] = q_dedup_exact_normalized
-# Java and RE2 agree on \s+; Spark regexp_replace is global by
-# default, DuckDB needs the 'g' flag.
-ORACLES["dedup_exact_normalized"] = ORACLE_PRELUDE + """
+_NORM = SQL_NORMALIZED.format(col="text")
+ORACLES["dedup_exact_normalized"] = ORACLE_PRELUDE + f"""
 SELECT count(*) AS n_docs,
        count(DISTINCT md5(text)) AS n_distinct_raw,
-       count(DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ',
-                                              'g')))) AS n_distinct_norm,
-       count(*) - count(DISTINCT md5(trim(regexp_replace(lower(text),
-                        '\\s+', ' ', 'g')))) AS n_dup_docs_norm
+       count(DISTINCT md5({_NORM})) AS n_distinct_norm,
+       count(*) - count(DISTINCT md5({_NORM})) AS n_dup_docs_norm
 FROM nodes"""
 
 

@@ -8,7 +8,8 @@ callers override per deployment (32 for the local harness; thousands
 on a 100 TB cluster).
 
 It also holds :func:`local_frame`, the one way the engine turns
-request-sized Python values into a DataFrame.
+request-sized Python values into a DataFrame, and :func:`in_list`,
+the one way it turns them into an ``IN`` predicate.
 """
 
 from __future__ import annotations
@@ -16,7 +17,8 @@ from __future__ import annotations
 import os
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def get_spark(
@@ -79,3 +81,16 @@ def local_frame(
     return spark.createDataFrame(
         pa.Table.from_arrays(columns, schema=arrow), schema
     )
+
+
+def in_list(col: str, values: Iterable[str | None]) -> Column:
+    """``col IN (<values>)`` parsed from one SQL string: ``isin`` makes
+    one JVM call per literal (about 0.5 ms each, 2 s for 5 000 ids).
+    Null values never match, so they are left out; an empty list is
+    ``false``. Like any SQL ``IN``, a null ``col`` gives null."""
+    lits = [
+        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        for v in values
+        if v is not None
+    ]
+    return F.expr(f"{col} IN ({','.join(lits)})") if lits else F.lit(False)
