@@ -260,29 +260,6 @@ def test_chunk_dup_stats_cross_and_within_doc(spark):
     assert got["d4"] == (0, 0, 0.0)
 
 
-def test_bm25_topk_multi_matches_single_query(spark, sf_dir):
-    from vector_graph_native_database__spark.registry.common import model
-    from vector_graph_native_database__spark.operators import bm25
-
-    nodes, _, _ = model(spark, sf_dir)
-    single = [
-        (r["id"], r["score"])
-        for r in bm25.bm25_topk(
-            nodes, "dup key fast", top_k=10, round_scores=6
-        ).collect()
-    ]
-    multi = [
-        (r["id"], r["score"])
-        for r in bm25.bm25_topk_multi(
-            nodes, {"qa": "dup key fast"}, top_k=10, round_scores=6
-        )
-        .orderBy("qid")
-        .collect()
-    ]
-    assert single == multi
-    assert len(single) > 0
-
-
 def test_bpe_first_merges_counts_adjacent_char_pairs(spark):
     from vector_graph_native_database__spark.operators.text_analysis import (
         bpe_first_merges,

@@ -488,95 +488,6 @@ def test_kmv_intersection_saturated_is_close(spark):
     assert abs(r.est_intersection - ov) / ov < 0.35
 
 
-def test_hybrid_multi_equals_single_queries(spark):
-    from vector_graph_native_database__spark.registry.common import (
-        model,
-        query_vec,
-    )
-    from vector_graph_native_database__spark.operators import hybrid
-    from vector_graph_native_database__spark.registry.searchq import (
-        HYBRID_MULTI_QIDS,
-        q_hybrid_search_multi,
-    )
-
-    multi = {
-        (r.qid, r.id): (r.vector_score, r.graph_score, r.final_score)
-        for r in q_hybrid_search_multi(spark, SF).collect()
-    }
-    nodes, emb, edges = model(spark, SF)
-    single = {}
-    for qid in HYBRID_MULTI_QIDS:
-        rows = hybrid.hybrid_search(
-            nodes,
-            emb,
-            edges,
-            query_vec(spark, SF, qid),
-            vector_weight=0.7,
-            graph_weight=0.3,
-            top_k=10,
-            graph_start_id=qid,
-            graph_depth=2,
-            round_scores=6,
-        ).collect()
-        for r in rows:
-            single[(qid, r.id)] = (
-                r.vector_score,
-                r.graph_score,
-                r.final_score,
-            )
-    assert multi == single
-
-
-def test_vector_topk_multi_equals_single(spark):
-    from vector_graph_native_database__spark.registry.common import (
-        model,
-        query_vec,
-    )
-    from vector_graph_native_database__spark.operators import vector_search
-    from vector_graph_native_database__spark.registry.searchq import (
-        HYBRID_MULTI_QIDS,
-    )
-
-    nodes, emb, _ = model(spark, SF)
-    multi = {
-        (r.qid, r.id): r.score
-        for r in vector_search.vector_topk_multi(
-            nodes, emb, HYBRID_MULTI_QIDS, top_k=10, round_scores=6
-        ).collect()
-    }
-    single = {}
-    for qid in HYBRID_MULTI_QIDS:
-        for r in vector_search.vector_topk(
-            nodes, emb, query_vec(spark, SF, qid), top_k=10, round_scores=6
-        ).collect():
-            single[(qid, r.id)] = r.score
-    assert multi == single
-
-
-def test_graph_bfs_multi_equals_single(spark):
-    from vector_graph_native_database__spark.registry.common import model
-    from vector_graph_native_database__spark.operators.graph import (
-        graph_bfs,
-        graph_bfs_multi,
-    )
-    from vector_graph_native_database__spark.registry.searchq import (
-        HYBRID_MULTI_QIDS,
-    )
-
-    _, _, edges = model(spark, SF)
-    multi = {
-        (r.qid, r.id): (r.distance, round(r.path_weight, 6))
-        for r in graph_bfs_multi(
-            edges, HYBRID_MULTI_QIDS, depth=2
-        ).collect()
-    }
-    single = {}
-    for qid in HYBRID_MULTI_QIDS:
-        for r in graph_bfs(edges, qid, 2).collect():
-            single[(qid, r.id)] = (r.distance, round(r.path_weight, 6))
-    assert multi == single
-
-
 def test_ltv_and_gap_quartiles_contracts(spark):
     from vector_graph_native_database__spark.registry.olapq import (
         q_olap_ltv_quartiles,

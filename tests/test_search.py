@@ -9,6 +9,8 @@ public rank_bm25 formula with k1=1.5, b=0.75, epsilon=0.25).
 from __future__ import annotations
 
 import math
+import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -259,3 +261,184 @@ def test_phrase_search_order_sensitive_and_counts(spark):
     # d1 has the phrase twice; d2 has only the REVERSED phrase; d3 has
     # both tokens non-adjacent — order and adjacency must both matter
     assert got == {"d1": (2, 1)}
+
+
+# --- batch operators equal their single-query operators ---------------------
+
+from conftest import SF_SMALL as SF  # noqa: E402
+
+
+def test_bm25_topk_multi_matches_single_query(spark, sf_dir):
+    import pandas as pd
+
+    from vector_graph_native_database__spark.registry.common import model
+    from vector_graph_native_database__spark.operators import bm25
+    from vector_graph_native_database__spark.registry.searchq import (
+        BM25_MULTI_QUERIES,
+        _bm25_multi_sql,
+    )
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools"))
+    from oracle_check import canon, duck_con
+
+    # a quote inside a token and a query with no token at all: the
+    # DuckDB twin must quote the one and type the other's empty batch
+    queries = {**BM25_MULTI_QUERIES, "qa": "it's dup", "qb": "   "}
+    nodes, _, _ = model(spark, sf_dir)
+    batch = bm25.bm25_topk_multi(nodes, queries, top_k=10, round_scores=6)
+    multi = {}
+    for r in batch.collect():
+        multi.setdefault(r["qid"], []).append((r["id"], r["score"]))
+    for qid, text in queries.items():
+        single = [
+            (r["id"], r["score"])
+            for r in bm25.bm25_topk(
+                nodes, text, top_k=10, round_scores=6
+            ).collect()
+        ]
+        assert sorted(multi.get(qid, []), key=lambda r: (-r[1], r[0])) == (
+            single
+        ), qid
+        assert (len(single) > 0) == (qid != "qb"), qid
+    con = duck_con(sf_dir)
+    for qs in (queries, {"qb": queries["qb"]}):
+        got = bm25.bm25_topk_multi(nodes, qs, top_k=10, round_scores=6)
+        want = con.sql(_bm25_multi_sql(qs, 10)).df()
+        pd.testing.assert_frame_equal(
+            canon(got.toPandas()), canon(want), check_dtype=False
+        )
+
+
+def test_hybrid_multi_equals_single_queries(spark):
+    from vector_graph_native_database__spark.registry.common import (
+        model,
+        query_vec,
+    )
+    from vector_graph_native_database__spark.operators import hybrid
+    from vector_graph_native_database__spark.registry.searchq import (
+        HYBRID_MULTI_QIDS,
+        q_hybrid_search_multi,
+    )
+
+    multi = {
+        (r.qid, r.id): (r.vector_score, r.graph_score, r.final_score)
+        for r in q_hybrid_search_multi(spark, SF).collect()
+    }
+    nodes, emb, edges = model(spark, SF)
+    single = {}
+    for qid in HYBRID_MULTI_QIDS:
+        rows = hybrid.hybrid_search(
+            nodes,
+            emb,
+            edges,
+            query_vec(spark, SF, qid),
+            vector_weight=0.7,
+            graph_weight=0.3,
+            top_k=10,
+            graph_start_id=qid,
+            graph_depth=2,
+            round_scores=6,
+        ).collect()
+        for r in rows:
+            single[(qid, r.id)] = (
+                r.vector_score,
+                r.graph_score,
+                r.final_score,
+            )
+    assert multi == single
+
+
+def test_vector_topk_multi_equals_single(spark):
+    from vector_graph_native_database__spark.registry.common import (
+        model,
+        query_vec,
+    )
+    from vector_graph_native_database__spark.operators import vector_search
+    from vector_graph_native_database__spark.registry.searchq import (
+        HYBRID_MULTI_QIDS,
+    )
+
+    nodes, emb, _ = model(spark, SF)
+    multi = {
+        (r.qid, r.id): r.score
+        for r in vector_search.vector_topk_multi(
+            nodes, emb, HYBRID_MULTI_QIDS, top_k=10, round_scores=6
+        ).collect()
+    }
+    single = {}
+    for qid in HYBRID_MULTI_QIDS:
+        for r in vector_search.vector_topk(
+            nodes, emb, query_vec(spark, SF, qid), top_k=10, round_scores=6
+        ).collect():
+            single[(qid, r.id)] = r.score
+    assert multi == single
+
+
+def test_graph_bfs_multi_equals_single(spark):
+    from vector_graph_native_database__spark.registry.common import model
+    from vector_graph_native_database__spark.operators.graph import (
+        graph_bfs,
+        graph_bfs_multi,
+    )
+    from vector_graph_native_database__spark.registry.searchq import (
+        HYBRID_MULTI_QIDS,
+    )
+
+    _, _, edges = model(spark, SF)
+    multi = {
+        (r.qid, r.id): (r.distance, round(r.path_weight, 6))
+        for r in graph_bfs_multi(
+            edges, HYBRID_MULTI_QIDS, depth=2
+        ).collect()
+    }
+    single = {}
+    for qid in HYBRID_MULTI_QIDS:
+        for r in graph_bfs(edges, qid, 2).collect():
+            single[(qid, r.id)] = (r.distance, round(r.path_weight, 6))
+    assert multi == single
+
+
+# Spark jobs one single-query retrieval call runs (build + collect) at
+# sf0.001, each equal to its count before the rankers shared a body
+# with their batch operators.
+SINGLE_QUERY_JOBS = {
+    "vector_topk": 3,
+    "bm25_topk": 7,
+    "graph_search": 13,
+    "hybrid_search": 18,
+}
+
+
+@pytest.mark.parametrize("kind", sorted(SINGLE_QUERY_JOBS))
+def test_single_query_retrieval_job_counts(spark, sf_dir, spark_jobs, kind):
+    from vector_graph_native_database__spark.operators import bm25, graph
+    from vector_graph_native_database__spark.operators import vector_search
+    from vector_graph_native_database__spark.registry.common import (
+        model,
+        query_vec,
+    )
+    from vector_graph_native_database__spark.registry.searchq import (
+        BM25_QUERY,
+    )
+
+    nodes, emb, edges = model(spark, sf_dir)
+    stats = bm25.bm25_index_stage(spark, nodes, sf_dir)
+    qv = query_vec(spark, sf_dir)
+    run = {
+        "vector_topk": lambda: vector_search.vector_topk(
+            nodes, emb, qv, top_k=10, round_scores=6
+        ).collect(),
+        "bm25_topk": lambda: bm25.bm25_topk(
+            nodes, BM25_QUERY, top_k=15, round_scores=6, stats=stats
+        ).collect(),
+        "graph_search": lambda: [
+            f.collect() for f in graph.graph_search(nodes, edges, "0", 2)
+        ],
+        "hybrid_search": lambda: hybrid_search(
+            nodes, emb, edges, qv, 0.7, 0.3, 15, "0", 2, 6
+        ).collect(),
+    }[kind]
+    rows, jobs = spark_jobs(run)
+    assert rows
+    assert jobs <= SINGLE_QUERY_JOBS[kind]

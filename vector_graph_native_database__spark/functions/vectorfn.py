@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators._keyed import attach, key_cols
+
 
 def _d(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -80,18 +82,19 @@ def cosine(a: Column | str, b: Column | str) -> Column:
 def minmax_normalize(
     df: DataFrame, score_col: str, out_col: str = "norm_score"
 ) -> DataFrame:
-    """Min-max normalize a score column to [0,1] over the whole frame.
+    """Min-max normalize a score column to [0,1] over the whole frame,
+    or per query when ``df`` carries a ``qid`` key column.
 
     All-equal (max == min) maps everything to 1.0, matching the
-    reference's observable behavior. Implemented as one global
-    min/max aggregate cross-joined back (a broadcast of a single row
-    — no per-row window, so it scales to any row count).
+    reference's observable behavior. Implemented as one min/max
+    aggregate attached back (a broadcast of one row per query — no
+    per-row window, so it scales to any row count).
     """
-    bounds = df.agg(
+    bounds = df.groupBy(*key_cols(df)).agg(
         F.min(score_col).alias("__mn"), F.max(score_col).alias("__mx")
     )
     return (
-        df.crossJoin(F.broadcast(bounds))
+        attach(df, bounds)
         .withColumn(
             out_col,
             F.when(F.col("__mx") == F.col("__mn"), F.lit(1.0)).otherwise(

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.vectorfn import cosine, dot
+from ..functions.vectorfn import cosine, dot, stable_round6
 
 
 def brute_topk(
@@ -133,9 +133,7 @@ def range_search(
     q = emb.filter(F.col("node_id").isin(query_ids)).select(
         F.col("node_id").alias("qid"), F.col("vector").alias("qvec"), "dim"
     )
-    cos6 = F.floor(cosine("vector", "qvec") * F.lit(1e6) + F.lit(0.5)) / F.lit(
-        1e6
-    )
+    cos6 = stable_round6(cosine("vector", "qvec"))
     return (
         emb.join(F.broadcast(q), "dim")
         .filter(F.col("node_id") != F.col("qid"))
@@ -176,7 +174,7 @@ def brute_topk_euclidean(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    dist6 = F.floor(F.sqrt(d2) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    dist6 = stable_round6(F.sqrt(d2))
     w = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("node_id"))
     return (
         emb.join(F.broadcast(q), "dim")
@@ -821,9 +819,7 @@ def pq_topk(
         cand.select(
             "qid",
             "id",
-            (F.floor(adist * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-                "adist"
-            ),
+            stable_round6(adist).alias("adist"),
         )
         .withColumn("rnk", F.row_number().over(wk))
         .filter(F.col("rnk") <= k)
@@ -1024,9 +1020,7 @@ def ivfpq_topk(
         cand.select(
             "qid",
             "id",
-            (F.floor(adist * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-                "adist"
-            ),
+            stable_round6(adist).alias("adist"),
         )
         .withColumn("rnk", F.row_number().over(wk))
         .filter(F.col("rnk") <= k)
@@ -1128,9 +1122,7 @@ def ivfpq_staged_candidates(
     return cand.select(
         "qid",
         "id",
-        (F.floor(adist * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "adist"
-        ),
+        stable_round6(adist).alias("adist"),
         "prb",
     )
 
@@ -1286,7 +1278,7 @@ def knn_join_multiprobe(
     tiebreak — engine-portable like every ranked output here.
     """
     a, b = _multiprobe_sides(emb, num_planes, dim)
-    rounded = F.floor(cosine("va", "vb") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    rounded = stable_round6(cosine("va", "vb"))
     w = Window.partitionBy("id_a").orderBy(F.desc("cos"), F.asc("id_b"))
     return (
         a.join(b, "pbucket")
@@ -1320,9 +1312,7 @@ def brute_topk_int8(
     q = qemb.filter(F.col("node_id").isin(query_ids)).select(
         F.col("node_id").alias("qid"), F.col("qv").alias("qq"), "dim"
     )
-    rounded = F.floor(cosine("qv", "qq") * F.lit(1e6) + F.lit(0.5)) / F.lit(
-        1e6
-    )
+    rounded = stable_round6(cosine("qv", "qq"))
     scored = (
         qemb.join(F.broadcast(q), "dim")
         .filter(F.col("node_id") != F.col("qid"))
@@ -1365,7 +1355,7 @@ def knn_join_topk(
     b = bucketed.select(
         F.col("node_id").alias("id_b"), F.col("vector").alias("vb"), "bucket"
     )
-    rounded = F.floor(cosine("va", "vb") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    rounded = stable_round6(cosine("va", "vb"))
     w = Window.partitionBy("id_a").orderBy(F.desc("cos"), F.asc("id_b"))
     return (
         a.join(b, "bucket")
@@ -1406,9 +1396,7 @@ def mmr_rerank(
     q = emb.filter(F.col("node_id").isin(query_ids)).select(
         F.col("node_id").alias("qid"), F.col("vector").alias("qvec"), "dim"
     )
-    rel6 = F.floor(cosine("vector", "qvec") * F.lit(1e6) + F.lit(0.5)) / F.lit(
-        1e6
-    )
+    rel6 = stable_round6(cosine("vector", "qvec"))
     w = Window.partitionBy("qid").orderBy(F.desc("rel"), F.asc("node_id"))
     cand = (
         emb.join(F.broadcast(q), "dim")
@@ -1497,17 +1485,8 @@ def kmeans_assign(
             .select(
                 "id",
                 F.col("cidx").alias("cluster"),
-                (
-                    F.floor(
-                        (
-                            F.col("vv")
-                            + F.col("cc")
-                            - 2 * dot("vector", "cvec")
-                        )
-                        * F.lit(1e6)
-                        + F.lit(0.5)
-                    )
-                    / F.lit(1e6)
+                stable_round6(
+                    F.col("vv") + F.col("cc") - 2 * dot("vector", "cvec")
                 ).alias("dist"),
             )
         )
@@ -1526,13 +1505,9 @@ def kmeans_assign(
         scored.groupBy("id")
         .agg(
             F.min_by("cidx", F.struct("dist", "cidx")).alias("cluster"),
-            (
-                F.floor(
-                    F.min(F.struct("dist", "cidx"))["dist"] * F.lit(1e6)
-                    + F.lit(0.5)
-                )
-                / F.lit(1e6)
-            ).alias("dist"),
+            stable_round6(F.min(F.struct("dist", "cidx"))["dist"]).alias(
+                "dist"
+            ),
         )
     )
 
@@ -1724,9 +1699,7 @@ def ivfpq_residual_topk(
         cand.select(
             "qid",
             "id",
-            (F.floor(adist * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-                "adist"
-            ),
+            stable_round6(adist).alias("adist"),
         )
         .withColumn("rnk", F.row_number().over(wk))
         .filter(F.col("rnk") <= k)
@@ -1887,17 +1860,13 @@ def matryoshka_rerank_topk(
         )
     )
     w1 = Window.partitionBy("qid").orderBy(
-        F.desc(
-            F.floor(F.col("pcos") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-        ),
+        F.desc(stable_round6(F.col("pcos"))),
         F.asc("node_id"),
     )
     cand = pre.withColumn("prnk", F.row_number().over(w1)).filter(
         F.col("prnk") <= candidates
     )
-    cos6 = F.floor(
-        cosine("vector", "qvec") * F.lit(1e6) + F.lit(0.5)
-    ) / F.lit(1e6)
+    cos6 = stable_round6(cosine("vector", "qvec"))
     w2 = Window.partitionBy("qid").orderBy(
         F.desc("cos"), F.asc("node_id")
     )
@@ -1983,12 +1952,11 @@ def jl_distortion_eval(
         .filter(F.col("d2o") > 0)
         .select(F.abs(F.sqrt(F.col("d2p") / F.col("d2o")) - 1).alias("e"))
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return dist.agg(
         F.lit(k).alias("k_dims"),
         F.count("*").alias("n_pairs"),
-        r6(F.avg("e")).alias("mean_distortion"),
-        r6(F.max("e")).alias("max_distortion"),
+        stable_round6(F.avg("e")).alias("mean_distortion"),
+        stable_round6(F.max("e")).alias("max_distortion"),
     )
 
 def jl_rerank_topk(
@@ -2043,9 +2011,7 @@ def jl_rerank_topk(
         .withColumn("pcos", cosine("pvec", "qpvec"))
     )
     w1 = Window.partitionBy("qid").orderBy(
-        F.desc(
-            F.floor(F.col("pcos") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-        ),
+        F.desc(stable_round6(F.col("pcos"))),
         F.asc("id"),
     )
     cand = (
@@ -2056,9 +2022,7 @@ def jl_rerank_topk(
     qv = e.filter(F.col("id").isin(query_ids)).select(
         F.col("id").alias("qid"), F.col("vector").alias("qvec")
     )
-    cos6 = F.floor(
-        cosine("vector", "qvec") * F.lit(1e6) + F.lit(0.5)
-    ) / F.lit(1e6)
+    cos6 = stable_round6(cosine("vector", "qvec"))
     w2 = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("id"))
     return (
         cand.join(e, "id")

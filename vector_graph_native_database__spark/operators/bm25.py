@@ -14,13 +14,15 @@ Spark shape — the index IS two aggregate DataFrames:
 ``groupBy(term)`` for document frequencies, one single-row global
 aggregate (N, avgdl, avg raw idf) broadcast back. All
 map-side-combinable shuffles on compact keys. Scoring stays
-broadcast-only on top of those aggregates: idf is materialized ONLY
-for the query's terms (a |q|-row frame), so the per-query work after
-the corpus stats is two broadcast joins — no full-vocabulary shuffle.
-Unlike the reference's rebuild-the-whole-index-per-write, these
-aggregates are recomputed lazily per query batch — at 100 TB they can
-be persisted and incrementally maintained, but semantics stay
-identical.
+broadcast-only on top of those aggregates: one keyed body,
+:func:`_contrib`, scores a query-terms frame — (tok, qcnt) for one
+query, (qid, tok, qcnt) for a batch — and idf is materialized ONLY
+for those terms (a |q|-row frame), so the work after the corpus stats
+is two broadcast joins for one query or for Q; no full-vocabulary
+shuffle. Unlike the reference's rebuild-the-whole-index-per-write,
+these aggregates are recomputed lazily per query batch — at 100 TB
+they can be persisted and incrementally maintained, but semantics
+stay identical.
 
 Where each input comes from: the query's terms are a JVM local
 relation built on the driver (``session.local_frame``). The scalar
@@ -45,13 +47,14 @@ from __future__ import annotations
 import json
 import os
 from collections import Counter, defaultdict
+from collections.abc import Mapping
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.textfn import tokenize
 from ..session import in_list, local_frame
+from ._keyed import key_cols, topk
 
 K1 = 1.5
 B = 0.75
@@ -63,36 +66,20 @@ _STAGE_PARAMS = "tok-v4"
 _GLOBALS_DDL = "__n_docs long, __avgdl double, __avg_idf double"
 
 
-def corpus_stats(
-    nodes: DataFrame, persist: bool = False
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def corpus_stats(nodes: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """→ (tf(id, tok, tf), doclen(id, dl), df_(tok, df)).
 
     Raw corpus aggregates; idf derivation (which needs the global
-    N / avg-idf scalars) happens in :func:`_query_idf`.
+    N / avg-idf scalars) happens in :func:`_contrib`.
 
     All three frames descend from ONE ``groupBy(id, tok)`` posting
     frame. ``explode_outer`` keeps zero-token docs as a null-token
     row (tf contribution 0) so they still appear in ``doclen`` with
     dl=0 — rank_bm25 averages doc length over ALL docs, empty ones
-    included.
-
-    ``persist`` trades a blocking cache-materialization of the
-    posting frame for cheap reuse: one-shot queries (and the bench's
-    cold path) should leave it off — on a 32-thread local run the
-    3-4 lazy recomputes overlap and finish ~2× faster than the
-    serialized cache build — while repeated-query workloads should
-    turn it on (or call :func:`build_index` once): warm queries then
-    skip the scan+explode entirely. A 100 TB deployment persists
-    these aggregates as real tables and maintains them
-    incrementally; either way scoring semantics are identical.
+    included. Repeated-query workloads stage the posting frame
+    instead (:func:`staged_index`, :func:`bm25_index_stage`).
     """
-    posting = posting_frame(nodes)
-    if persist:
-        # CacheManager keys on the canonical logical plan, so every
-        # query over the same corpus shares one materialization.
-        posting = posting.persist(StorageLevel.MEMORY_AND_DISK)
-    return stats_from_posting(posting)
+    return stats_from_posting(posting_frame(nodes))
 
 
 def posting_frame(nodes: DataFrame) -> DataFrame:
@@ -116,16 +103,6 @@ def stats_from_posting(
     tf = posting.filter(F.col("tok").isNotNull())
     df_ = tf.groupBy("tok").agg(F.count("*").alias("df"))
     return tf, doclen, df_
-
-
-def build_index(nodes: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Materialize the corpus stats once for a repeated-query workload.
-
-    The in-memory analog of the persisted posting-list table a
-    large-scale deployment maintains; pass the result to
-    :func:`bm25_scores` / :func:`bm25_topk` as ``stats=``.
-    """
-    return corpus_stats(nodes, persist=True)
 
 
 def staged_index(nodes: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -198,13 +175,10 @@ def staged_posting_frame(spark, nodes: DataFrame, cache_key: str) -> DataFrame:
             docs, F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
         ).write.parquet(os.path.join(tmp, "doclen"))
         n = docs.get["n"]
-        raw_idf = F.log(F.lit(n) - F.col("df") + 0.5) - F.log(
-            F.col("df") + 0.5
-        )
         df_.observe(
             vocab,
             F.count(F.lit(1)).alias("terms"),
-            F.avg(raw_idf).alias("avg_idf"),
+            F.avg(_raw_idf(F.lit(n))).alias("avg_idf"),
         ).write.parquet(os.path.join(tmp, "df"))
         # an empty vocabulary has no scalar row, as with _globals_df
         rows = (
@@ -355,11 +329,8 @@ class MaintainedIndex:
     def _refresh_globals(self) -> None:
         """The scalar row (N, avgdl, mean raw idf) as a local relation;
         no row for an empty vocabulary, as with :func:`_globals_df`."""
-        raw_idf = F.log(F.lit(self.n_docs) - F.col("df") + 0.5) - F.log(
-            F.col("df") + 0.5
-        )
         terms, avg_idf = self.df.agg(
-            F.count(F.lit(1)), F.avg(raw_idf)
+            F.count(F.lit(1)), F.avg(_raw_idf(F.lit(self.n_docs)))
         ).collect()[0]
         rows = (
             [(self.n_docs, self.sum_dl / self.n_docs, avg_idf)] if terms else []
@@ -370,6 +341,11 @@ class MaintainedIndex:
         """→ (tf, doclen, df_, globals_df) for ``bm25_topk(stats=…)``."""
         tf = self.posting.filter(F.col("tok").isNotNull())
         return tf, self.doclen, self.df, self._globals
+
+
+def _raw_idf(n_docs: Column) -> Column:
+    """The Okapi idf before flooring, ``ln((N - df + 0.5)/(df + 0.5))``."""
+    return F.log(n_docs - F.col("df") + 0.5) - F.log(F.col("df") + 0.5)
 
 
 def _globals_df(doclen: DataFrame, df_: DataFrame) -> DataFrame:
@@ -386,9 +362,7 @@ def _globals_df(doclen: DataFrame, df_: DataFrame) -> DataFrame:
         F.count("*").alias("__n_docs"), F.avg("dl").alias("__avgdl")
     )
     raw = df_.crossJoin(F.broadcast(nd)).withColumn(
-        "raw_idf",
-        F.log(F.col("__n_docs") - F.col("df") + 0.5)
-        - F.log(F.col("df") + 0.5),
+        "raw_idf", _raw_idf(F.col("__n_docs"))
     )
     return raw.groupBy("__n_docs", "__avgdl").agg(
         F.avg("raw_idf").alias("__avg_idf")
@@ -406,67 +380,68 @@ def _index_parts(
     return tf, doclen, df_, staged[0] if staged else _globals_df(doclen, df_)
 
 
-def query_terms_df(nodes: DataFrame, query_text: str) -> DataFrame:
-    """Tokenized query with multiplicity → (tok, qcnt), as a plan node.
+def _query_terms(
+    nodes: DataFrame, queries: Mapping[str, str]
+) -> tuple[DataFrame, list[str]]:
+    """Tokenized queries with multiplicity → ((qid, tok, qcnt) frame,
+    the batch's distinct terms).
 
-    Counted driver-side (a query is a handful of tokens) so the plan
-    gets a JVM local relation (``session.local_frame``), not a shuffle
-    stage or a Python-worker scan.
+    Counted driver-side (a query is a handful of tokens; a batch is
+    request-sized, not data-sized) so the plan gets one JVM local
+    relation (``session.local_frame``), not a shuffle stage or a
+    Python-worker scan.
     """
-    from collections import Counter
+    rows = [
+        (qid, tok, cnt)
+        for qid, text in queries.items()
+        for tok, cnt in Counter(text.lower().split()).items()
+    ]
+    terms = local_frame(
+        nodes.sparkSession, rows, "qid string, tok string, qcnt long"
+    )
+    return terms, list(dict.fromkeys(tok for _, tok, _ in rows))
 
-    spark = nodes.sparkSession
-    counts = Counter(query_text.lower().split())
-    return local_frame(spark, counts.items(), "tok string, qcnt long")
 
-
-def _query_idf(
-    q: DataFrame, df_: DataFrame, globals_df: DataFrame
+def _contrib(
+    nodes: DataFrame,
+    terms: DataFrame,
+    toks: list[str],
+    stats: tuple[DataFrame, ...] | None,
 ) -> DataFrame:
-    """(tok, qcnt, idf, __avgdl) for the query's terms only.
+    """Summed BM25 contributions of a query-terms frame → (*keys, id,
+    score): (tok, qcnt) scores one query, (qid, tok, qcnt) a batch in
+    the same corpus pass. Docs with no matching term are absent
+    (callers decide between outer-join-zero and positive-filter
+    semantics).
 
-    |q| rows — always broadcastable, so the scoring join never
-    shuffles the vocabulary.
+    Idf is derived for the queries' terms only — |Σq| rows, always
+    broadcastable, so the scoring join never shuffles the vocabulary.
     """
-    return (
-        df_.join(F.broadcast(q), "tok")
+    keys = key_cols(terms)
+    tf, doclen, df_, globals_df = _index_parts(nodes, stats)
+    qidf = (
+        df_.join(F.broadcast(terms), "tok")
         .crossJoin(F.broadcast(globals_df))
-        .withColumn(
-            "raw_idf",
-            F.log(F.col("__n_docs") - F.col("df") + 0.5)
-            - F.log(F.col("df") + 0.5),
-        )
+        .withColumn("raw_idf", _raw_idf(F.col("__n_docs")))
         .withColumn(
             "idf",
             F.when(
                 F.col("raw_idf") < 0, F.lit(EPSILON) * F.col("__avg_idf")
             ).otherwise(F.col("raw_idf")),
         )
-        .select("tok", "qcnt", "idf", "__avgdl")
+        .select(*keys, "tok", "qcnt", "idf", "__avgdl")
     )
-
-
-def _contrib(
-    nodes: DataFrame,
-    query_text: str,
-    stats: tuple[DataFrame, ...] | None = None,
-) -> DataFrame:
-    """Per-doc summed BM25 contributions → (id, score); docs with no
-    matching term are absent (callers decide between outer-join-zero
-    and positive-filter semantics)."""
-    tf, doclen, df_, globals_df = _index_parts(nodes, stats)
-    qidf = _query_idf(query_terms_df(nodes, query_text), df_, globals_df)
-    # The query's terms are known driver-side, so prune the posting
+    # The query terms are known driver-side, so prune the posting
     # frame with a literal In(tok, …) BEFORE the scoring join — rows
-    # outside the query's vocabulary can't contribute (the qidf join
+    # outside the queries' vocabulary can't contribute (the qidf join
     # would drop them), and the literal predicate reaches the parquet
     # scan of a staged posting table (PushedFilters), which at 100 TB
-    # is the difference between reading the query's posting lists and
+    # is the difference between reading the queries' posting lists and
     # reading the corpus. df_/doclen stay unpruned: idf flooring
     # averages over the WHOLE vocabulary and dl is per matched doc.
-    tf = tf.filter(F.col("tok").isin(list(set(query_text.lower().split()))))
     return (
-        tf.join(F.broadcast(qidf), "tok")
+        tf.filter(F.col("tok").isin(toks))
+        .join(F.broadcast(qidf), "tok")
         .join(doclen, "id")
         .withColumn(
             "contrib",
@@ -479,9 +454,25 @@ def _contrib(
                 * (1 - B + F.lit(B) * F.col("dl") / F.col("__avgdl"))
             ),
         )
-        .groupBy("id")
+        .groupBy(*keys, "id")
         .agg(F.sum("contrib").alias("score"))
     )
+
+
+def _one_query(
+    nodes: DataFrame, query_text: str, stats: tuple[DataFrame, ...] | None
+) -> DataFrame:
+    """:func:`_contrib` of one query: its terms frame without the key."""
+    terms, toks = _query_terms(nodes, {"": query_text})
+    return _contrib(nodes, terms.drop("qid"), toks, stats)
+
+
+def _positive(scored: DataFrame, round_scores: int | None) -> DataFrame:
+    """Rounded (when asked) before the positive filter (``app.py:486``),
+    so the filter and the top-k order see the reported scores."""
+    if round_scores is not None:
+        scored = scored.withColumn("score", F.round("score", round_scores))
+    return scored.filter(F.col("score") > 0)
 
 
 def bm25_scores(
@@ -493,11 +484,11 @@ def bm25_scores(
 
     Documents matching no query term score 0.0 (kept — the top-k
     variant applies the positive filter). Pass ``stats`` from
-    :func:`build_index` for repeated-query workloads.
+    :func:`bm25_index_stage` for repeated-query workloads.
     """
     return (
         nodes.select("id")
-        .join(_contrib(nodes, query_text, stats), "id", "left_outer")
+        .join(_one_query(nodes, query_text, stats), "id", "left_outer")
         .select("id", F.coalesce("score", F.lit(0.0)).alias("score"))
     )
 
@@ -509,22 +500,23 @@ def bm25_topk(
     round_scores: int | None = None,
     stats: tuple[DataFrame, ...] | None = None,
 ) -> DataFrame:
-    """Top-k by BM25, zero/negative scores dropped (``app.py:486``).
+    """Top-k by BM25 → (id, text, score), zero/negative scores dropped
+    (``app.py:486``), ties by id ASC.
 
     Skips :func:`bm25_scores`'s outer-join-to-zero — the positive
     filter would drop those rows anyway, so scoring stays on the
     (small) set of docs sharing a term with the query. Pass
-    ``stats`` from :func:`build_index` for repeated-query workloads.
+    ``stats`` from :func:`bm25_index_stage` for repeated-query
+    workloads.
     """
-    scored = _contrib(nodes, query_text, stats)
-    if round_scores is not None:
-        scored = scored.withColumn("score", F.round("score", round_scores))
-    return (
-        scored.filter(F.col("score") > 0)
-        .join(nodes.select("id", "text"), "id")
-        .select("id", "text", "score")
-        .orderBy(F.desc("score"), F.asc("id"))
-        .limit(top_k)
+    scored = _positive(_one_query(nodes, query_text, stats), round_scores)
+    return topk(
+        scored.join(nodes.select("id", "text"), "id").select(
+            "id", "text", "score"
+        ),
+        top_k,
+        F.desc("score"),
+        F.asc("id"),
     )
 
 
@@ -574,26 +566,6 @@ def phrase_search(
     )
 
 
-def multi_query_terms_df(
-    nodes: DataFrame, queries: dict[str, str]
-) -> DataFrame:
-    """Tokenized query batch with multiplicity → (qid, tok, qcnt).
-
-    Counted driver-side (each query is a handful of tokens; the
-    batch is user-request-sized, not data-sized) so the plan gets
-    one small JVM local relation for the whole batch.
-    """
-    from collections import Counter
-
-    rows = []
-    for qid, text in queries.items():
-        for tok, cnt in Counter(text.lower().split()).items():
-            rows.append((qid, tok, cnt))
-    return local_frame(
-        nodes.sparkSession, rows, "qid string, tok string, qcnt long"
-    )
-
-
 def bm25_topk_multi(
     nodes: DataFrame,
     queries: dict[str, str],
@@ -601,69 +573,20 @@ def bm25_topk_multi(
     round_scores: int | None = None,
     stats: tuple[DataFrame, ...] | None = None,
 ) -> DataFrame:
-    """Top-k BM25 for a BATCH of queries in ONE corpus pass →
-    (qid, id, score): the deployment shape for query logs / eval
-    sets, where scoring Q queries must not cost Q corpus scans.
+    """Top-k BM25 for a BATCH of queries (qid → text) in ONE corpus
+    pass → (qid, id, score): the deployment shape for query logs /
+    eval sets, where scoring Q queries must not cost Q corpus scans.
 
-    The per-query idf frame generalizes to (qid, tok, qcnt, idf) —
-    still |Σq| rows, broadcast — so every query's scoring rides the
-    SAME tf join; per-query top-k is a row_number window that Spark
-    bounds map-side (WindowGroupLimit). Corpus stats are computed
-    once for the whole batch (pass ``stats`` from
-    :func:`staged_index` to amortize across batches). Zero/negative
-    scores dropped per query, ties break on id ASC — same contract
-    as :func:`bm25_topk`.
+    :func:`bm25_topk`'s body with the query id as a key: every query
+    rides the same tf join, and the per-query top-k is a row_number
+    window that Spark bounds map-side (WindowGroupLimit). Corpus stats
+    are computed once for the whole batch (pass ``stats`` from
+    :func:`bm25_index_stage` to amortize across batches).
     """
-    from pyspark.sql.window import Window
-
-    tf, doclen, df_, globals_df = _index_parts(nodes, stats)
-    q = multi_query_terms_df(nodes, queries)
-    qidf = (
-        df_.join(F.broadcast(q), "tok")
-        .crossJoin(F.broadcast(globals_df))
-        .withColumn(
-            "raw_idf",
-            F.log(F.col("__n_docs") - F.col("df") + 0.5)
-            - F.log(F.col("df") + 0.5),
-        )
-        .withColumn(
-            "idf",
-            F.when(
-                F.col("raw_idf") < 0, F.lit(EPSILON) * F.col("__avg_idf")
-            ).otherwise(F.col("raw_idf")),
-        )
-        .select("qid", "tok", "qcnt", "idf", "__avgdl")
-    )
-    # literal batch-vocabulary prune, same rationale as _contrib's:
-    # the scoring join drops non-query toks anyway; a driver-side
-    # In(tok, …) lets the staged posting scan skip them
-    batch_toks = {
-        tok for text in queries.values() for tok in text.lower().split()
-    }
-    scored = (
-        tf.filter(F.col("tok").isin(list(batch_toks)))
-        .join(F.broadcast(qidf), "tok")
-        .join(doclen, "id")
-        .withColumn(
-            "contrib",
-            F.col("qcnt")
-            * F.col("idf")
-            * (F.col("tf") * (K1 + 1))
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (1 - B + F.lit(B) * F.col("dl") / F.col("__avgdl"))
-            ),
-        )
-        .groupBy("qid", "id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    if round_scores is not None:
-        scored = scored.withColumn("score", F.round("score", round_scores))
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
-    return (
-        scored.filter(F.col("score") > 0)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= top_k)
-        .drop("__rn")
+    terms, toks = _query_terms(nodes, queries)
+    return topk(
+        _positive(_contrib(nodes, terms, toks, stats), round_scores),
+        top_k,
+        F.desc("score"),
+        F.asc("id"),
     )

@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import in_list, local_frame
+from ._keyed import attach, key_cols
 
 FRONTIER_CAP = 20_000
 """Most driver work a BFS level may take; below the driver/shuffle
@@ -172,13 +173,20 @@ def graph_bfs(
 
 
 def graph_score(
-    bfs: DataFrame, start_id: str, max_depth: int
+    bfs: DataFrame, start_id: str | None, max_depth: int
 ) -> DataFrame:
-    """Attach the closeness score → (id, distance, path_weight, g_score).
+    """Attach the closeness score → (*keys, id, distance, path_weight,
+    g_score), per traversal when ``bfs`` carries a ``qid`` key
+    (:func:`graph_bfs_multi`).
 
-    One global max aggregate broadcast back — no window, no collect.
+    The start is the row at ``distance == 0``, which holds for the one
+    ``start_id`` of :func:`graph_bfs` and for every qid's own start.
+    One max aggregate per traversal attached back as a broadcast — no
+    window, no collect.
     """
-    max_w = bfs.agg(F.max("path_weight").alias("__max_w"))
+    max_w = bfs.groupBy(*key_cols(bfs)).agg(
+        F.max("path_weight").alias("__max_w")
+    )
     base = (F.lit(max_depth) - F.col("distance") + 1) / F.lit(
         float(max_depth + 1)
     )
@@ -186,10 +194,10 @@ def graph_score(
         F.col("__max_w") > 0, F.col("path_weight") / F.col("__max_w")
     ).otherwise(F.lit(0.0))
     return (
-        bfs.crossJoin(F.broadcast(max_w))
+        attach(bfs, max_w)
         .withColumn(
             "g_score",
-            F.when(F.col("id") == start_id, F.lit(1.0)).otherwise(
+            F.when(F.col("distance") == 0, F.lit(1.0)).otherwise(
                 base * (F.lit(0.5) + F.lit(0.5) * w_norm)
             ),
         )
@@ -244,7 +252,7 @@ def graph_bfs_multi(
 ) -> DataFrame:
     """Level-synchronous BFS from MULTIPLE sources at once →
     (qid, id, distance, path_weight), one (qid, ·) BFS frame per
-    start — the batched-serving twin of graph_bfs.
+    start, each equal to :func:`graph_bfs` from that start.
 
     The frontier carries the source id as just another key column,
     so Q concurrent traversals cost the SAME number of jobs as one;

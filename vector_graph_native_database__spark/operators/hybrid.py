@@ -19,11 +19,15 @@ Per the reference's own note (``app.py:670-671``) BM25 is NOT fused
 — hybrid is vector+graph only, so ``(v_w, g_w) = (1, 0)`` reproduces
 vector-only ordering exactly (min-max is monotone).
 
-Spark shape: the vector subplan and the graph subplan are
-independent DataFrames merged with one full-outer join on ``id`` +
-``coalesce(·, 0)``; normalization is a 1-row aggregate broadcast
-back. Spark schedules the two subplans concurrently; the final
-``orderBy().limit(k)`` is again a distributed TakeOrderedAndProject.
+Spark shape: one keyed body, :func:`_hybrid`, scores a query frame —
+one ``qvec`` row, or a batch of (qid, qvec) rows with one BFS per qid
+(:func:`graph.graph_bfs_multi`). Its components (:func:`_components`)
+are the vector subplan (one embeddings scan, min-max per query from
+one aggregate attached back) and the graph subplan (keyed
+``graph_score``), left-joined onto the nodes; fusion and the final>0
+drop are column arithmetic, and the top-k is ``orderBy().limit(k)``
+(a distributed TakeOrderedAndProject) for one query or a rank window
+per qid for a batch.
 """
 
 from __future__ import annotations
@@ -31,9 +35,79 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectorfn import minmax_normalize
-from .graph import graph_bfs, graph_score
-from .vector_search import score_embeddings
+from ..functions.vectorfn import minmax_normalize, stable_round6
+from . import graph, vector_search
+from ._keyed import key_cols, topk
+
+
+def _components(
+    nodes: DataFrame,
+    embeddings: DataFrame,
+    query: DataFrame,
+    bfs: DataFrame | None,
+    graph_depth: int,
+) -> DataFrame:
+    """Normalized vector and graph scores of every node per query →
+    (*keys, id, text, vector_score, graph_score).
+
+    ``query`` is one ``qvec`` row or (qid, qvec) rows; a batch's
+    ``nodes`` carry the qid too (one copy of the node set per query),
+    and so does its ``bfs``. Without a BFS every graph score is 0.0.
+    """
+    keys = key_cols(query)
+    vec = minmax_normalize(
+        vector_search.score_embeddings(embeddings, query).select(
+            *keys, "node_id", "score"
+        ),
+        "score",
+        "vec_norm",
+    ).select(*keys, F.col("node_id").alias("id"), "vec_norm")
+    base = nodes.select(*keys, "id", "text").join(
+        vec, [*keys, "id"], "left_outer"
+    )
+    if bfs is not None:
+        g = graph.graph_score(bfs, None, graph_depth).select(
+            *keys, "id", "g_score"
+        )
+        base = base.join(g, [*keys, "id"], "left_outer")
+    else:
+        base = base.withColumn("g_score", F.lit(0.0))
+    return base.select(
+        *keys,
+        "id",
+        "text",
+        F.coalesce("vec_norm", F.lit(0.0)).alias("vector_score"),
+        F.coalesce("g_score", F.lit(0.0)).alias("graph_score"),
+    )
+
+
+def _hybrid(
+    nodes: DataFrame,
+    embeddings: DataFrame,
+    query: DataFrame,
+    bfs: DataFrame | None,
+    vector_weight: float,
+    graph_weight: float,
+    top_k: int,
+    graph_depth: int,
+    round_scores: int | None,
+) -> DataFrame:
+    """Fuse the components, drop final<=0, take the top-k per query →
+    (*keys, id, text, vector_score, graph_score, final_score)."""
+    out = _components(nodes, embeddings, query, bfs, graph_depth).withColumn(
+        "final_score",
+        F.lit(vector_weight) * F.col("vector_score")
+        + F.lit(graph_weight) * F.col("graph_score"),
+    )
+    if round_scores is not None:
+        for c in ("vector_score", "graph_score", "final_score"):
+            out = out.withColumn(c, F.round(c, round_scores))
+    return topk(
+        out.filter(F.col("final_score") > 0),
+        top_k,
+        F.desc("final_score"),
+        F.asc("id"),
+    )
 
 
 def hybrid_search(
@@ -49,44 +123,19 @@ def hybrid_search(
     round_scores: int | None = None,
 ) -> DataFrame:
     """→ (id, text, vector_score, graph_score, final_score)."""
-    vec = minmax_normalize(
-        score_embeddings(embeddings, query).select("node_id", "score"),
-        "score",
-        "vec_norm",
-    ).select(F.col("node_id").alias("id"), "vec_norm")
-
+    bfs = None
     if graph_start_id is not None:
-        g = graph_score(
-            graph_bfs(edges, graph_start_id, graph_depth, edge_type=None),
-            graph_start_id,
-            graph_depth,
-        ).select("id", "g_score")
-    else:
-        g = None
-
-    base = nodes.select("id", "text").join(vec, "id", "left_outer")
-    if g is not None:
-        base = base.join(g, "id", "left_outer")
-    else:
-        base = base.withColumn("g_score", F.lit(0.0))
-
-    out = base.select(
-        "id",
-        "text",
-        F.coalesce("vec_norm", F.lit(0.0)).alias("vector_score"),
-        F.coalesce("g_score", F.lit(0.0)).alias("graph_score"),
-    ).withColumn(
-        "final_score",
-        F.lit(vector_weight) * F.col("vector_score")
-        + F.lit(graph_weight) * F.col("graph_score"),
-    )
-    if round_scores is not None:
-        for c in ("vector_score", "graph_score", "final_score"):
-            out = out.withColumn(c, F.round(c, round_scores))
-    return (
-        out.filter(F.col("final_score") > 0)
-        .orderBy(F.desc("final_score"), F.asc("id"))
-        .limit(top_k)
+        bfs = graph.graph_bfs(edges, graph_start_id, graph_depth)
+    return _hybrid(
+        nodes,
+        embeddings,
+        query,
+        bfs,
+        vector_weight,
+        graph_weight,
+        top_k,
+        graph_depth,
+        round_scores,
     )
 
 
@@ -116,9 +165,7 @@ def rrf_hybrid(
     """
     from pyspark.sql.window import Window
 
-    from ..functions.vectorfn import minmax_normalize  # noqa: F401
     from .bm25 import bm25_scores
-    from .vector_search import score_embeddings
 
     def ranked(df: DataFrame, score_col: str, name: str) -> DataFrame:
         top = (
@@ -130,7 +177,7 @@ def rrf_hybrid(
         return top.select("id", F.row_number().over(w).alias(f"r_{name}"))
 
     vec = ranked(
-        score_embeddings(embeddings, query).select(
+        vector_search.score_embeddings(embeddings, query).select(
             F.col("node_id").alias("id"), "score"
         ),
         "score",
@@ -144,8 +191,8 @@ def rrf_hybrid(
     rankers = vec.join(bm, "id", "full_outer")
     if graph_start_id is not None:
         g = ranked(
-            graph_score(
-                graph_bfs(edges, graph_start_id, graph_depth),
+            graph.graph_score(
+                graph.graph_bfs(edges, graph_start_id, graph_depth),
                 graph_start_id,
                 graph_depth,
             ).select("id", "g_score"),
@@ -167,9 +214,7 @@ def rrf_hybrid(
         .select(
             "id",
             "text",
-            (F.floor(rrf * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-                "rrf_score"
-            ),
+            stable_round6(rrf).alias("rrf_score"),
         )
         .filter(F.col("rrf_score") > 0)
         .orderBy(F.desc("rrf_score"), F.asc("id"))
@@ -189,97 +234,22 @@ def hybrid_search_multi(
     round_scores: int | None = None,
 ) -> DataFrame:
     """Batched hybrid serving → (qid, id, text, vector_score,
-    graph_score, final_score): Q hybrid_search calls answered in ONE
-    plan, with per-query semantics identical to the single-query
-    operator (same min-max normalization per query, same final>0
-    drop, same (score desc, id asc) order) — pytest-pinned equal to
-    Q separate calls.
-
-    The amortization is structural, not just JVM reuse: the vector
-    side scores ALL queries in one pass over the embeddings scan
-    (|Q|-row broadcast of query vectors, per-qid min-max from one
-    grouped aggregate), and the graph side runs ONE multi-source BFS
-    (graph_bfs_multi — Q traversals for the job count of one).
-    Per-query top-k is a rank window over the fused frame. The
-    BM25 twin of this shape is bm25_topk_multi; this completes the
-    batched-serving story for the §2.5 flagship."""
-    from pyspark.sql.window import Window
-
-    from ..functions.vectorfn import dot
-    from .graph import graph_bfs_multi
-
+    graph_score, final_score): each id in ``query_ids`` seeds both its
+    query vector (its stored embedding) and its graph traversal, and
+    :func:`hybrid_search`'s body answers all of them in ONE plan — one
+    pass over the embeddings scan and ONE multi-source BFS
+    (graph_bfs_multi — Q traversals for the job count of one)."""
     qs = embeddings.filter(F.col("node_id").isin(query_ids)).select(
         F.col("node_id").alias("qid"), F.col("vector").alias("qvec")
     )
-    scored = (
-        embeddings.crossJoin(F.broadcast(qs))
-        .filter(F.size("vector") == F.size("qvec"))
-        .select(
-            "qid",
-            F.col("node_id").alias("id"),
-            dot("vector", "qvec").alias("score"),
-        )
-    )
-    bounds = scored.groupBy("qid").agg(
-        F.min("score").alias("mn"), F.max("score").alias("mx")
-    )
-    vec = scored.join(F.broadcast(bounds), "qid").select(
-        "qid",
-        "id",
-        F.when(F.col("mx") == F.col("mn"), F.lit(1.0))
-        .otherwise(
-            (F.col("score") - F.col("mn")) / (F.col("mx") - F.col("mn"))
-        )
-        .alias("vec_norm"),
-    )
-
-    bfs = graph_bfs_multi(edges, query_ids, graph_depth, edge_type=None)
-    max_w = bfs.groupBy("qid").agg(F.max("path_weight").alias("__max_w"))
-    base = (F.lit(graph_depth) - F.col("distance") + 1) / F.lit(
-        float(graph_depth + 1)
-    )
-    w_norm = F.when(
-        F.col("__max_w") > 0, F.col("path_weight") / F.col("__max_w")
-    ).otherwise(F.lit(0.0))
-    g = (
-        bfs.join(F.broadcast(max_w), "qid")
-        .withColumn(
-            "g_score",
-            F.when(F.col("distance") == 0, F.lit(1.0)).otherwise(
-                base * (F.lit(0.5) + F.lit(0.5) * w_norm)
-            ),
-        )
-        .select("qid", "id", "g_score")
-    )
-
-    qgrid = qs.select("qid")
-    fused = (
-        nodes.select("id", "text")
-        .crossJoin(F.broadcast(qgrid))
-        .join(vec, ["qid", "id"], "left_outer")
-        .join(g, ["qid", "id"], "left_outer")
-        .select(
-            "qid",
-            "id",
-            "text",
-            F.coalesce("vec_norm", F.lit(0.0)).alias("vector_score"),
-            F.coalesce("g_score", F.lit(0.0)).alias("graph_score"),
-        )
-        .withColumn(
-            "final_score",
-            F.lit(vector_weight) * F.col("vector_score")
-            + F.lit(graph_weight) * F.col("graph_score"),
-        )
-    )
-    if round_scores is not None:
-        for c in ("vector_score", "graph_score", "final_score"):
-            fused = fused.withColumn(c, F.round(c, round_scores))
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("final_score"), F.asc("id")
-    )
-    return (
-        fused.filter(F.col("final_score") > 0)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
-        .drop("rn")
+    return _hybrid(
+        nodes.crossJoin(F.broadcast(qs.select("qid"))),
+        embeddings,
+        qs,
+        graph.graph_bfs_multi(edges, query_ids, graph_depth, edge_type=None),
+        vector_weight,
+        graph_weight,
+        top_k,
+        graph_depth,
+        round_scores,
     )

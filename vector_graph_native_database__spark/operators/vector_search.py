@@ -10,11 +10,14 @@ TC-VEC-03) → sort score desc → truncate top_k. Nodes without
 embeddings never appear; ``top_k > corpus`` returns all embedded
 nodes (TC-VEC-02).
 
-Spark shape: the single-row query vector is broadcast; scoring is a
-``zip_with``/``aggregate`` column expression inside the embeddings
-scan; ``orderBy(desc).limit(k)`` compiles to TakeOrderedAndProject —
-a distributed top-k with no global sort, which is exactly the plan
-you want at 100 TB. Ties are broken by ``id ASC`` (SURVEY §4.8.5) so
+One keyed body, :func:`vector_topk`, scores a query frame: a single
+``qvec`` row, or a batch of (qid, qvec) rows. The frame is broadcast
+and scoring is a ``zip_with``/``aggregate`` column expression inside
+the one embeddings scan, so a batch of Q queries still reads the
+embeddings once. One query's top-k is ``orderBy(desc).limit(k)``,
+which compiles to TakeOrderedAndProject — a distributed top-k with no
+global sort; a batch's is a ``row_number`` window per qid
+(``_keyed.topk``). Ties are broken by ``id ASC`` (SURVEY §4.8.5) so
 results are a total order instead of the reference's dict-order
 nondeterminism.
 """
@@ -27,14 +30,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectorfn import dot
+from ._keyed import key_cols, topk
 
 
 def score_embeddings(embeddings: DataFrame, query: DataFrame) -> DataFrame:
     """Attach ``score`` = dot(vector, query vector) to every embedding.
 
-    ``query`` is a 1-row DataFrame with a ``qvec`` array column; it is
-    broadcast so scoring is a map-only stage over the embeddings scan.
-    Dim-mismatched rows are skipped (reference ``app.py:407-408``).
+    ``query`` holds a ``qvec`` array column: one row, or one row per
+    query with its ``qid`` key, which then rides every scored row. It
+    is broadcast so scoring is a map-only stage over the embeddings
+    scan. Dim-mismatched rows are skipped (reference ``app.py:407-408``).
     """
     return (
         embeddings.crossJoin(F.broadcast(query))
@@ -60,7 +65,8 @@ def vector_topk(
     meta_filter: Mapping[str, str] | None = None,
     round_scores: int | None = None,
 ) -> DataFrame:
-    """Full-scan k-NN: returns (id, text, score), score desc / id asc.
+    """Full-scan k-NN: returns (id, text, score), score desc / id asc;
+    (qid, id, text, score), top-k per qid, for a keyed query frame.
 
     The nodes join is on the compact id key; at small scale Catalyst
     broadcasts, at large scale AQE picks the shuffle strategy. The
@@ -73,12 +79,13 @@ def vector_topk(
     scored = score_embeddings(embeddings, query)
     if round_scores is not None:
         scored = scored.withColumn("score", F.round("score", round_scores))
-    return (
+    return topk(
         scored.join(nodes, scored["node_id"] == nodes["id"])
         .filter(metadata_predicate(meta_filter))
-        .select("id", "text", "score")
-        .orderBy(F.desc("score"), F.asc("id"))
-        .limit(top_k)
+        .select(*key_cols(query), "id", "text", "score"),
+        top_k,
+        F.desc("score"),
+        F.asc("id"),
     )
 
 
@@ -89,35 +96,11 @@ def vector_topk_multi(
     top_k: int = 10,
     round_scores: int | None = None,
 ) -> DataFrame:
-    """Batched full-scan k-NN → (qid, id, text, score): Q queries
-    answered from ONE pass over the embeddings scan (a |Q|-row
-    broadcast of query vectors, per-query rank window over the scored
-    frame) — the batched-serving twin of vector_topk, per-query
-    semantics identical (score desc, id asc on rounded scores;
-    dim-mismatched rows skipped, reference app.py:407-408). At 100 TB
-    the scan cost is paid once for the whole batch instead of once
-    per query — the same amortization bm25_topk_multi pins for BM25.
+    """Batched full-scan k-NN → (qid, id, text, score): each stored
+    embedding named in ``query_ids`` is a query, and :func:`vector_topk`
+    answers all of them from ONE pass over the embeddings scan.
     """
-    from pyspark.sql.window import Window
-
     qs = embeddings.filter(F.col("node_id").isin(query_ids)).select(
         F.col("node_id").alias("qid"), F.col("vector").alias("qvec")
     )
-    scored = (
-        embeddings.crossJoin(F.broadcast(qs))
-        .filter(F.size("vector") == F.size("qvec"))
-        .select(
-            "qid",
-            F.col("node_id").alias("nid"),
-            dot("vector", "qvec").alias("score"),
-        )
-    )
-    if round_scores is not None:
-        scored = scored.withColumn("score", F.round("score", round_scores))
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("nid"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
-        .join(nodes, F.col("nid") == nodes["id"])
-        .select("qid", "id", "text", "score")
-    )
+    return vector_topk(nodes, embeddings, qs, top_k, round_scores=round_scores)

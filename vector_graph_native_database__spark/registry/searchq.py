@@ -91,21 +91,35 @@ def q_bm25_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bm25_multi_sql(queries: dict[str, str], k: int) -> str:
-    """Oracle twin: the shared stats CTEs, a VALUES-encoded query
-    batch (token multiplicity via GROUP BY), per-query window top-k."""
+def _bm25_qt(queries: dict[str, str]) -> str:
+    """The query batch as the ``qt(qid, tok, qcnt)`` CTE: token
+    multiplicity counted like the engine's, quotes doubled, and a
+    typed empty relation when no query has a token."""
     from collections import Counter
 
+    def q(v: str) -> str:
+        return "'" + v.replace("'", "''") + "'"
+
     vals = ", ".join(
-        f"('{qid}', '{tok}', {cnt})"
+        f"({q(qid)}, {q(tok)}, {cnt})"
         for qid, text in sorted(queries.items())
         for tok, cnt in sorted(Counter(text.lower().split()).items())
     )
+    if not vals:
+        return """,
+qt AS (SELECT CAST(NULL AS VARCHAR) AS qid, CAST(NULL AS VARCHAR) AS tok,
+              CAST(NULL AS BIGINT) AS qcnt WHERE 1 = 0)"""
+    return f""",
+qt AS (SELECT * FROM (VALUES {vals}) v(qid, tok, qcnt))"""
+
+
+def _bm25_batch_ctes(queries: dict[str, str], src: str = "nodes") -> str:
+    """The stats CTEs over ``src``, the query batch as ``qt`` and its
+    per-(qid, id) scores rounded to 6 dp as ``contrib``."""
     return (
-        ORACLE_PRELUDE
-        + _BM25_STATS_CTES
-        + f""",
-qt AS (SELECT * FROM (VALUES {vals}) v(qid, tok, qcnt)),
+        _bm25_stats_ctes(src)
+        + _bm25_qt(queries)
+        + """,
 contrib AS (
   SELECT qt.qid, tf.id,
          round(sum(qt.qcnt * idf.idf * (tf.tf * (1.5 + 1))
@@ -116,7 +130,16 @@ contrib AS (
   JOIN idf USING (tok)
   JOIN dl USING (id), avgdl
   GROUP BY qt.qid, tf.id
-)
+)"""
+    )
+
+
+def _bm25_multi_sql(queries: dict[str, str], k: int) -> str:
+    """Oracle twin of ``bm25_topk_multi``: per-query window top-k."""
+    return (
+        ORACLE_PRELUDE
+        + _bm25_batch_ctes(queries)
+        + f"""
 SELECT qid, id, score FROM (
   SELECT qid, id, score,
          row_number() OVER (PARTITION BY qid
@@ -436,7 +459,8 @@ def q_hybrid_weight_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     every approximate/fused family now ships its tuning curve).
 
     Scale shape: ONE embeddings scoring pass and ONE depth-2 BFS for
-    the whole sweep — the (id, vec_norm, g_score) frame is joined,
+    the whole sweep — the (id, vec_norm, g_score) frame is
+    hybrid_search's own components (hybrid._components),
     pre-filtered to the rows any weight can rank (either component
     > 0; final<=0 rows are dropped by hybrid semantics regardless of
     weight) and localCheckpointed ONCE. Every sweep point reweights
@@ -452,31 +476,23 @@ def q_hybrid_weight_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
     from functools import reduce
 
-    from ..functions.vectorfn import minmax_normalize
     from ..operators import graph as graph_ops
 
     nodes, emb, edges = model(spark, sf_dir)
-    qv = query_vec(spark, sf_dir)
-
-    # build cost of the WHOLE entry: one embeddings scoring pass ...
-    vec = minmax_normalize(
-        vector_search.score_embeddings(emb, qv).select("node_id", "score"),
-        "score",
-        "vec_norm",
-    ).select(F.col("node_id").alias("id"), "vec_norm")
-    # ... and one depth-2 BFS (same subplans hybrid_search audits)
-    g = graph_ops.graph_score(
-        graph_ops.graph_bfs(edges, "0", 2, edge_type=None), "0", 2
-    ).select("id", "g_score")
-
+    # build cost of the WHOLE entry: hybrid_search's components, one
+    # embeddings scoring pass and one depth-2 BFS
     scored = (
-        nodes.select("id")
-        .join(vec, "id", "left_outer")
-        .join(g, "id", "left_outer")
+        hybrid._components(
+            nodes,
+            emb,
+            query_vec(spark, sf_dir),
+            graph_ops.graph_bfs(edges, "0", 2),
+            2,
+        )
         .select(
             "id",
-            F.coalesce("vec_norm", F.lit(0.0)).alias("vec_norm"),
-            F.coalesce("g_score", F.lit(0.0)).alias("g_score"),
+            F.col("vector_score").alias("vec_norm"),
+            F.col("graph_score").alias("g_score"),
         )
         .filter((F.col("vec_norm") > 0) | (F.col("g_score") > 0))
         .localCheckpoint(eager=True)
@@ -712,6 +728,32 @@ ORACLES["vector_topk_multi"] = _vector_multi_sql()
 BM25_NEG_POOL = 50  # candidate pool the negatives are mined from
 
 
+def _mine_negatives(pool: DataFrame, docs: DataFrame) -> DataFrame:
+    """Top-5 negatives per query from a BM25 pool: the pool's top-1 is
+    the positive, negatives are the next-ranked docs from another
+    source (``docs`` carries ``source``)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
+    ranked = pool.withColumn("rn", F.row_number().over(w)).join(
+        docs.select("id", "source"), "id"
+    )
+    pos = ranked.filter(F.col("rn") == 1).select(
+        "qid", F.col("source").alias("psrc")
+    )
+    negs = (
+        ranked.filter(F.col("rn") > 1)
+        .join(F.broadcast(pos), "qid")
+        .filter(F.col("source") != F.col("psrc"))
+    )
+    return (
+        negs.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= 5)
+        .select("qid", "id", "score", "rnk")
+    )
+
+
 def q_bm25_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexical hard negatives (the DPR training recipe) →
     (qid, id, score, rnk): per query, the top-1 BM25 hit is taken as
@@ -729,9 +771,6 @@ def q_bm25_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     pool bounded per query by a WindowGroupLimit row_number, source
     metadata attached to the ≤50·|Q|-row pool (not the corpus), and
     the positive's source re-joined as a |Q|-row broadcast."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
     nodes, _, _ = model(spark, sf_dir)
     pool = bm25.bm25_topk_multi(
         nodes,
@@ -740,49 +779,24 @@ def q_bm25_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_scores=6,
         stats=bm25.bm25_index_stage(spark, nodes, sf_dir),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
-    ranked = pool.withColumn("rn", F.row_number().over(w)).join(
-        nodes.select("id", "source"), "id"
-    )
-    pos = ranked.filter(F.col("rn") == 1).select(
-        "qid", F.col("source").alias("psrc")
-    )
-    negs = (
-        ranked.filter(F.col("rn") > 1)
-        .join(F.broadcast(pos), "qid")
-        .filter(F.col("source") != F.col("psrc"))
-    )
-    return (
-        negs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select("qid", "id", "score", "rnk")
-    )
+    return _mine_negatives(pool, nodes)
 
 
-def _bm25_hard_negatives_oracle() -> str:
-    from collections import Counter
+_REPS_CTE = """,
+reps AS MATERIALIZED (
+  SELECT n.* FROM nodes n
+  JOIN (SELECT min(id) AS id FROM nodes GROUP BY text) k ON k.id = n.id
+)"""
 
-    vals = ", ".join(
-        f"('{qid}', '{tok}', {cnt})"
-        for qid, text in sorted(BM25_MULTI_QUERIES.items())
-        for tok, cnt in sorted(Counter(text.lower().split()).items())
-    )
+
+def _bm25_hard_negatives_oracle(src: str = "nodes") -> str:
+    """Oracle twin of the miners over ``src``: the corpus (``nodes``)
+    or its exact-dedup keepers (``reps``)."""
     return (
         ORACLE_PRELUDE
-        + _BM25_STATS_CTES
+        + (_REPS_CTE if src == "reps" else "")
+        + _bm25_batch_ctes(BM25_MULTI_QUERIES, src)
         + f""",
-qt AS (SELECT * FROM (VALUES {vals}) v(qid, tok, qcnt)),
-contrib AS (
-  SELECT qt.qid, tf.id,
-         round(sum(qt.qcnt * idf.idf * (tf.tf * (1.5 + 1))
-             / (tf.tf + 1.5 * (1 - 0.75 + 0.75 * dl.dl / avgdl.avgdl))), 6)
-           AS score
-  FROM tf
-  JOIN qt USING (tok)
-  JOIN idf USING (tok)
-  JOIN dl USING (id), avgdl
-  GROUP BY qt.qid, tf.id
-),
 pool AS (
   SELECT qid, id, score, rn FROM (
     SELECT qid, id, score,
@@ -793,14 +807,14 @@ pool AS (
 ),
 ps AS (
   SELECT p.qid, n.source AS psrc
-  FROM pool p JOIN nodes n ON n.id = p.id WHERE p.rn = 1
+  FROM pool p JOIN {src} n ON n.id = p.id WHERE p.rn = 1
 )
 SELECT qid, id, score, rnk FROM (
   SELECT p.qid, p.id, p.score,
          row_number() OVER (PARTITION BY p.qid
                             ORDER BY p.score DESC, p.id ASC) AS rnk
   FROM pool p
-  JOIN nodes n ON n.id = p.id
+  JOIN {src} n ON n.id = p.id
   JOIN ps ON ps.qid = p.qid
   WHERE p.rn > 1 AND n.source <> ps.psrc
 ) WHERE rnk <= 5"""
@@ -832,7 +846,6 @@ def q_bm25_hard_negatives_deduped(
     keeper semi-join; everything downstream runs on the deduped
     corpus, which only shrinks."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     nodes, _, _ = model(spark, sf_dir)
     keepers = nodes.groupBy("text").agg(F.min("id").alias("id"))
@@ -851,79 +864,8 @@ def q_bm25_hard_negatives_deduped(
         round_scores=6,
         stats=bm25.stats_from_posting(posting),
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("id"))
-    ranked = pool.withColumn("rn", F.row_number().over(w)).join(
-        reps.select("id", "source"), "id"
-    )
-    pos = ranked.filter(F.col("rn") == 1).select(
-        "qid", F.col("source").alias("psrc")
-    )
-    negs = (
-        ranked.filter(F.col("rn") > 1)
-        .join(F.broadcast(pos), "qid")
-        .filter(F.col("source") != F.col("psrc"))
-    )
-    return (
-        negs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select("qid", "id", "score", "rnk")
-    )
-
-
-def _bm25_hard_negatives_deduped_oracle() -> str:
-    from collections import Counter
-
-    vals = ", ".join(
-        f"('{qid}', '{tok}', {cnt})"
-        for qid, text in sorted(BM25_MULTI_QUERIES.items())
-        for tok, cnt in sorted(Counter(text.lower().split()).items())
-    )
-    return (
-        ORACLE_PRELUDE
-        + """,
-reps AS MATERIALIZED (
-  SELECT n.* FROM nodes n
-  JOIN (SELECT min(id) AS id FROM nodes GROUP BY text) k ON k.id = n.id
-)"""
-        + _bm25_stats_ctes(src="reps")
-        + f""",
-qt AS (SELECT * FROM (VALUES {vals}) v(qid, tok, qcnt)),
-contrib AS (
-  SELECT qt.qid, tf.id,
-         round(sum(qt.qcnt * idf.idf * (tf.tf * (1.5 + 1))
-             / (tf.tf + 1.5 * (1 - 0.75 + 0.75 * dl.dl / avgdl.avgdl))), 6)
-           AS score
-  FROM tf
-  JOIN qt USING (tok)
-  JOIN idf USING (tok)
-  JOIN dl USING (id), avgdl
-  GROUP BY qt.qid, tf.id
-),
-pool AS (
-  SELECT qid, id, score, rn FROM (
-    SELECT qid, id, score,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY score DESC, id ASC) AS rn
-    FROM contrib WHERE score > 0
-  ) WHERE rn <= {BM25_NEG_POOL}
-),
-ps AS (
-  SELECT p.qid, n.source AS psrc
-  FROM pool p JOIN reps n ON n.id = p.id WHERE p.rn = 1
-)
-SELECT qid, id, score, rnk FROM (
-  SELECT p.qid, p.id, p.score,
-         row_number() OVER (PARTITION BY p.qid
-                            ORDER BY p.score DESC, p.id ASC) AS rnk
-  FROM pool p
-  JOIN reps n ON n.id = p.id
-  JOIN ps ON ps.qid = p.qid
-  WHERE p.rn > 1 AND n.source <> ps.psrc
-) WHERE rnk <= 5"""
-    )
+    return _mine_negatives(pool, reps)
 
 
 QUERIES["bm25_hard_negatives_deduped"] = q_bm25_hard_negatives_deduped
-ORACLES["bm25_hard_negatives_deduped"] = (
-    _bm25_hard_negatives_deduped_oracle()
-)
+ORACLES["bm25_hard_negatives_deduped"] = _bm25_hard_negatives_oracle("reps")
